@@ -242,6 +242,40 @@ object Bench {
     else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
   }
 
+  /** Which degradable parts the size-bounded stdout line carries: the
+    * catalog per-query map, the sf1 per-query map, the sf1 gate rows,
+    * and the warmup/duckdb/stamp scalars beyond the ratio essentials.
+    */
+  private[graft] final case class LineShape(catQueries: Boolean,
+      sf1Queries: Boolean, gates: Boolean, fullScalars: Boolean)
+
+  /** Stdout line shapes in priority order. The catalog per-query map is
+    * the contract item and survives longest; the sf1 per-query map, the
+    * gate rows and the scalars drop first. The last shape is the
+    * smallest: it drops every degradable part.
+    */
+  private[graft] val lineShapes: Seq[LineShape] = Seq(
+    LineShape(catQueries = true, sf1Queries = true, gates = true, fullScalars = true),
+    LineShape(catQueries = true, sf1Queries = false, gates = true, fullScalars = true),
+    LineShape(catQueries = true, sf1Queries = false, gates = false, fullScalars = true),
+    LineShape(catQueries = true, sf1Queries = false, gates = false, fullScalars = false),
+    LineShape(catQueries = false, sf1Queries = false, gates = false, fullScalars = false))
+
+  /** Characters the stdout line may use: only a ~2000-char tail of the
+    * run's output is recorded (see the object scaladoc), minus sbt's
+    * trailing success line.
+    */
+  private[graft] val StdoutBudget = 1800
+
+  /** The first shape, in priority order, whose line fits `budget`; when
+    * none fits, the shortest line, so an overflow loses as little of
+    * the line as possible.
+    */
+  private[graft] def fitLine(render: LineShape => String, budget: Int): String = {
+    val lines = lineShapes.map(render)
+    lines.find(_.length <= budget).getOrElse(lines.minBy(_.length))
+  }
+
   private def jstr(s: String): String =
     "\"" + s.flatMap {
       case '\\' => "\\\\"
@@ -836,35 +870,20 @@ object Bench {
       "sf" -> jstr(sfDir),
       "sf1" -> sf1Full))
 
-    // size-bounded stdout line: short keys, scalar duckdb summaries
-    // only; must survive a ~2000-char tail capture minus sbt's trailing
-    // success line.
-    //
-    // r22 (verdict #1, the measurement contract): the driver's
-    // round-over-round comparator reads per-query medians from the
-    // TOP-LEVEL `queries` object of this line — and the old
-    // all-or-nothing guard dropped that object whenever the full line
-    // overflowed, which with 117 catalog members was ALWAYS
-    // (PERF_r20/r21: n_common = 0, bench_ok = false — the driver was
-    // per-query-blind for two rounds). The line now degrades in
-    // PRIORITY order instead: the catalog per-query map (at 2 decimals)
-    // is the contract item and survives longest; the sf1 per-query map,
-    // then the gate rows, then the warmup/duckdb/stamp scalars drop
-    // first. Everything dropped here remains in BENCH_LOCAL.json
-    // (full names, 4 decimals, per-query duckdb medians and stamps).
-    // No timing-path change — this is emission only.
-    val stdoutBudget = 1800
-    def compactLine(catQueries: Boolean, sf1Queries: Boolean,
-                    gates: Boolean, fullScalars: Boolean): String = jobj(Seq(
+    // size-bounded stdout line: short keys, 2-3 decimals, scalar
+    // duckdb summaries; it degrades through `lineShapes` (see fitLine).
+    // Everything dropped here remains in BENCH_LOCAL.json (full names,
+    // 4 decimals, per-query duckdb medians and stamps).
+    def compactLine(shape: LineShape): String = jobj(Seq(
       "metric" -> jstr("total"),
       "value" -> jnum3(total),
       "unit" -> jstr("sec")) ++
-      (if (catQueries) Seq("queries" -> jobj(
+      (if (shape.catQueries) Seq("queries" -> jobj(
         medians.map { case (k, v) => shortKey(k) -> jnum2(v) })) else Nil) ++
       (if (errors.isEmpty) Nil else Seq("errors" -> jobj(
         errors.map { case (k, v) => shortKey(k) -> jstr(v.take(60)) }))) ++
       Seq("reps" -> reps.toString) ++
-      (if (fullScalars) Seq(
+      (if (shape.fullScalars) Seq(
         "consumption" -> jstr("toRdd-materialize"),
         "warmup_sec" -> jnum3(warmup),
         "host_load_start" -> jnum3(loadStart),
@@ -874,31 +893,16 @@ object Bench {
         "duckdb_oneshot_total_sec" -> duckOneshot.map(jnum3).getOrElse("null"),
         "duckdb_total_sec" -> duckMain.map(d => jnum3(d._1)).getOrElse("null"))
       else Seq(
-        // the ratio essentials survive every cut short of the last
+        // the ratio essentials survive every cut
         "foreign_cores_sf01" -> jnum3(foreignSf01),
         "spark_oracle_total_sec" -> jnum3(oracleTotal),
         "duckdb_oneshot_total_sec" ->
           duckOneshot.map(jnum3).getOrElse("null"))) ++
       Seq(
         "sf" -> jstr(sfDir),
-        "sf1" -> sf1Compact(sf1Queries, gates),
+        "sf1" -> sf1Compact(shape.sf1Queries, shape.gates),
         "detail" -> jstr("BENCH_LOCAL.json")))
-    val metricLine = {
-      val candidates = Seq(
-        compactLine(catQueries = true, sf1Queries = true,
-          gates = true, fullScalars = true),
-        compactLine(catQueries = true, sf1Queries = false,
-          gates = true, fullScalars = true),
-        compactLine(catQueries = true, sf1Queries = false,
-          gates = false, fullScalars = true),
-        compactLine(catQueries = true, sf1Queries = false,
-          gates = false, fullScalars = false),
-        // last resort only (a catalog so large even the bare per-query
-        // map overflows): the pre-r22 shape, per-query-blind
-        compactLine(catQueries = false, sf1Queries = true,
-          gates = true, fullScalars = true))
-      candidates.find(_.length <= stdoutBudget).getOrElse(candidates.last)
-    }
+    val metricLine = fitLine(compactLine, StdoutBudget)
 
     // regenerate the plan audit with every bench so it cannot go stale;
     // audit at the smallest SF available (plans don't depend on volume)

@@ -668,21 +668,10 @@ object Dedup {
     * stats job this shape removes) — operators audit the dropped mass on
     * their own cadence with [[bucketCapAudit]] over the same band rows.
     */
-  /** `dedupePairs = false` (r21) skips the final `.distinct()` — for a
-    * SINGLE-band caller (SemDeDup's cell key) an unordered pair can
-    * only arise once, so the distinct was a full exchange of the pair
-    * set for nothing (13.4M rows on the q83 sf1 fixture). Multi-band
-    * callers MUST keep it: a pair colliding in several bands is emitted
-    * once per band. (With unique input ids the no-distinct pair set is
-    * identical; a duplicated input id emits its cross pairs once per
-    * copy — callers opting out must be insensitive to pair multiplicity,
-    * as SemDeDup's dropped-id distinct is.)
-    */
   private[graft] def boundedBucketPairs(bandRows: DataFrame, idCol: String,
-                                 maxBucket: Int,
-                                 dedupePairs: Boolean = true): DataFrame = {
+                                 maxBucket: Int): DataFrame = {
     graft.functions.Texts.register(bandRows.sparkSession)
-    val pairs = bandRows
+    bandRows
       .groupBy(col("band"), col("bkey"))
       .agg(graft.functions.BoundedIds.boundedIds(maxBucket, col(idCol))
         .as("ids"))
@@ -697,7 +686,8 @@ object Dedup {
       // (id, id) self-pair — the old self-join's strict id1 < id2
       // excluded those, so keep that contract
       .filter(col("id1") =!= col("id2"))
-    if (dedupePairs) pairs.distinct() else pairs
+      // a pair colliding in several bands is emitted once per band
+      .distinct()
   }
 
   /** Runs a bounded-bucket candidate stage for an id column of ANY

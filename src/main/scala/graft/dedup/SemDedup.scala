@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 import graft.similarity.Ivf
 
@@ -19,18 +20,16 @@ import graft.similarity.Ivf
   * Scale shape, per the paper's own O(N²/k) design:
   *  - the KMeans fit runs on a bounded seeded sample (never the corpus)
   *    and assignment is one narrow map — [[Ivf.build]];
-  *  - candidate pairs come from the same capped bounded-aggregation
-  *    stage as every other dedup tier ([[Dedup.boundedBucketPairs]]:
-  *    per-cell id lists with a hard `maxCluster` state bound, one
-  *    exchange, never an uncapped self-join);
-  *  - expected pair count is Σ|cell|² ≈ N²/k — hold k ∝ N (the paper
+  *  - the within-cell search is ONE aggregation per cell
+  *    ([[graft.functions.SemDedupDroppedIds]]): each vector joins its
+  *    cell assignment once, (id, vector) rows gather per cell under the
+  *    hard `maxCluster` state bound, and the aggregate's eval returns
+  *    the cell's dropped ids. The only data-sized exchange is the cell
+  *    key over N vectors; candidate pairs never exist as rows;
+  *  - in-cell work is Σ|cell|² ≈ N²/k cosines — hold k ∝ N (the paper
   *    uses k = N/⟨cluster⟩) to keep per-cell work constant as the
   *    corpus grows, and `maxCluster` bounds the degenerate-cell worst
-  *    case;
-  *  - the cosine verify is the codegen'd
-  *    [[graft.functions.Vectors.cosineSim]] over a late vector join —
-  *    only candidate ids ride the candidate exchange, vectors join in
-  *    at the end.
+  *    case.
   *
   * Drop rule: a vector is removed iff SOME lower-id vector in its cell
   * has cosine >= `minCosine` with it (the paper keeps one exemplar per
@@ -55,14 +54,13 @@ object SemDedup {
     * the same column-pruned count [[Ivf.build]] already performs for its
     * fit sample.
     *
-    * Over-cap guard: [[Dedup.boundedBucketPairs]] drops a cell past
-    * `maxCluster` SILENTLY (its gathering aggregate evaluates null) —
-    * for the hot incremental gates that is the right trade, but here a
-    * dropped cell means duplicates inside it silently SURVIVE. This
-    * offline tier budgets one extra count-aggregate job
-    * ([[Dedup.bucketCapAudit]] over the cell assignment) and, with
-    * `failOnOverCap` (default), raises with the cell count/mass instead
-    * — re-run with larger k (or auto-k) rather than weakening the cap.
+    * Over-cap guard: the within-cell aggregate skips a cell past
+    * `maxCluster` SILENTLY (it evaluates null, like every bounded-bucket
+    * dedup stage) — a skipped cell means duplicates inside it silently
+    * SURVIVE. This offline tier counts cell sizes in the same aggregate
+    * job that sizes the vector join and, with `failOnOverCap` (default),
+    * raises with the over-cap cell count/mass instead — re-run with
+    * larger k (or auto-k) rather than weakening the cap.
     */
   def semanticDedup(vecs: DataFrame, idCol: String, vecCol: String,
                     nClusters: Int, minCosine: Double,
@@ -93,45 +91,51 @@ object SemDedup {
       .select(col(idCol), col("cell").cast("long").as("cell"))
   }
 
-  /** The within-cell dedup search over a precomputed `cells` assignment
-    * (`(idCol, cell)` rows, one per vector — [[assignCells]] output).
-    * All scale and determinism notes of [[semanticDedup]] apply; the
-    * over-cap guard here names the assignment, since k was chosen when
-    * the cells were.
+  /** The within-cell dedup search over a precomputed `cells` assignment.
+    *
+    * `cells` contract: `(idCol, cell)` with ONE row per row of `vecs`
+    * ([[assignCells]] output). Cap occupancy is counted AFTER joining
+    * `cells` to `vecs` on the id, so a cells row whose id is missing
+    * from `vecs` takes no cap space, and an id present k times on both
+    * sides occupies k² slots (every vector of that id meets every cell
+    * row of it). The `failOnOverCap` audit counts raw `cells` rows, which
+    * equals the joined count when ids are unique.
+    *
+    * Ids may be any orderable atomic type; "lowest id survives" follows
+    * the type's Spark ordering (string ids compare as strings). Null ids
+    * never join a cell and always survive. Vectors must be
+    * `array<float>`; null vectors are gathered but never compare.
+    * All scale and determinism notes of [[semanticDedup]] apply.
     */
   def semanticDedupAssigned(vecs: DataFrame, cells: DataFrame,
                             idCol: String, vecCol: String,
                             minCosine: Double, maxCluster: Int = 10000,
                             failOnOverCap: Boolean = true): DataFrame = {
-    // reuse the (band, bkey) bounded-bucket contract: one band, cell key
-    val cellRows = cells.select(col(idCol),
-      lit(0).as("band"), col("cell").cast("long").as("bkey"))
-    if (failOnOverCap) {
-      val (nb, mass) = Dedup.bucketCapAudit(cellRows, maxCluster)
-      if (nb > 0L) throw new IllegalStateException(
-        s"semanticDedup: $nb KMeans cell(s) covering $mass vectors exceed " +
-          s"maxCluster=$maxCluster; their pairs would be dropped and " +
-          "duplicates inside them would silently survive. Refit with a " +
-          "larger cluster count (or auto-k, nClusters <= 0).")
-    }
-    // Vec-side join strategy by MEASURED size (r21, the
-    // DailyStoreMerge.sizedKeySide discipline): broadcast the vectors
-    // when they fit, shuffle_hash above the threshold (the 100 TB
-    // regime — no sort either way).
-    //
-    // r22 (ADVICE): the gate is on estimated BYTES, not rows — a row
-    // cap is blind to embedding dimension (500k 768-dim vectors is
-    // gigabytes held by the driver and every executor). Estimate =
-    // rows × (dim × element-width + 48 B array/row overhead), dim
-    // probed from one row; default cap 256 MB raw ≈ ≲1 GB of executor
-    // headroom after the ~2-3x hashed-relation framing. The row-count
-    // conf remains as an explicit override. The row COUNT comes from
-    // the `cells` assignment — one narrow row per vector by
-    // construction, and checkpointed by every caller that memoizes the
-    // fit — instead of re-executing the caller's full vector plan one
-    // extra time per invocation (r21 ADVICE).
+    val vecType = vecs.schema(vecCol).dataType
+    require(vecType match { case ArrayType(FloatType, _) => true; case _ => false },
+      s"semanticDedup needs $vecCol as array<float>; got ${vecType.simpleString}")
+    // one aggregate over the assignment: the row count for the join gate
+    // below and the over-cap audit
+    val sizes = cells.groupBy(col("cell")).agg(count(lit(1)).as("__n"))
+    val over = col("__n") > maxCluster
+    val stats = sizes.agg(coalesce(sum(col("__n")), lit(0L)),
+      count(when(over, 1)), coalesce(sum(when(over, col("__n"))), lit(0L))).head()
+    val (n, nb, mass) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
+    if (failOnOverCap && nb > 0L) throw new IllegalStateException(
+      s"semanticDedup: $nb KMeans cell(s) covering $mass vectors exceed " +
+        s"maxCluster=$maxCluster; their pairs would be dropped and " +
+        "duplicates inside them would silently survive. Refit with a " +
+        "larger cluster count (or auto-k, nClusters <= 0).")
+    // Vector-side join strategy by MEASURED size: broadcast the vectors
+    // when they fit, shuffle_hash above (no sort either way). The gate
+    // is on estimated BYTES — a row cap is blind to the embedding
+    // dimension: rows × (dim × 4 B + 48 B array/row overhead) against a
+    // 256 MB default (≲1 GB of executor headroom after hashed-relation
+    // framing). The row count is the size aggregate's; the dim comes
+    // from the first NON-NULL vector, which runs the caller's vector plan
+    // up to that row. `spark.graft.semdedup.maxBroadcastVecs` is an
+    // explicit row-count override.
     val conf = vecs.sparkSession.conf
-    val n = cells.count()
     val bcastVecs =
       conf.getOption("spark.graft.semdedup.maxBroadcastVecs") match {
         case Some(rowCap) => n <= rowCap.toLong
@@ -139,83 +143,28 @@ object SemDedup {
           val byteCap = conf
             .getOption("spark.graft.semdedup.maxBroadcastVecBytes")
             .map(_.toLong).getOrElse(256L * 1024 * 1024)
-          val elemW = vecs.schema(vecCol).dataType match {
-            case org.apache.spark.sql.types.ArrayType(et, _) => et.defaultSize
-            case _ => 8
-          }
-          val dim = vecs.select(size(col(vecCol)).as("__dim")).head(1) match {
-            case Array(r) if !r.isNullAt(0) => r.getInt(0)
-            case _ => 0
-          }
-          n * (dim.toLong * elemW + 48L) <= byteCap
+          val dim = vecs.where(col(vecCol).isNotNull)
+            .select(size(col(vecCol))).head(1) match {
+              case Array(r) if !r.isNullAt(0) => r.getInt(0)
+              case _ => 0
+            }
+          n * (dim.toLong * FloatType.defaultSize + 48L) <= byteCap
       }
     graft.functions.Texts.register(vecs.sparkSession)
-    graft.functions.Vectors.register(vecs.sparkSession)
-    val idType = vecs.schema(idCol).dataType
-    val integralId = idType match {
-      case org.apache.spark.sql.types.LongType
-           | org.apache.spark.sql.types.IntegerType
-           | org.apache.spark.sql.types.ShortType
-           | org.apache.spark.sql.types.ByteType => true
-      case _ => false
+    val vside = {
+      val s = vecs.select(col(idCol).as("__sid"), col(vecCol).as("__v"))
+      if (bcastVecs) broadcast(s) else s.hint("shuffle_hash")
     }
-    val floatVec = vecs.schema(vecCol).dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType, _) => true
-      case _ => false
-    }
-    val dropped: DataFrame =
-      if (integralId && floatVec) {
-        // r22 gathered-vector form (verdict #7; see
-        // functions/SemDedupDroppedIds for the equivalence contract):
-        // attach each row's vector to its cell assignment with ONE
-        // sized join, gather (id, vec) per cell under the same
-        // maxCluster saturation, and compute the dropped ids directly
-        // in the aggregate's eval — the N²/k pair rows, their two
-        // verify joins and the per-pair cosine stream never exist.
-        // Integral ids widen losslessly (value order preserved — the
-        // id ORDER is semantic: lowest id survives); non-integral ids
-        // keep the pair pipeline below, because a dense surrogate
-        // would reorder which id survives.
-        val vside = {
-          val s = vecs.select(col(idCol).cast("long").as("__sid"),
-            col(vecCol).as("__v"))
-          if (bcastVecs) broadcast(s) else s.hint("shuffle_hash")
-        }
-        cells
-          .select(col(idCol).cast("long").as("__sid"),
-            col("cell").cast("long").as("__cell"))
-          .join(vside, "__sid")
-          .groupBy(col("__cell"))
-          .agg(graft.functions.SemDedupDroppedIds.droppedIds(
-            maxCluster, minCosine, col("__sid"), col("__v")).as("__dropped"))
-          // a saturated (over-cap) cell evaluates null — the identical
-          // silent-drop contract of the bounded pair stage
-          .filter(col("__dropped").isNotNull)
-          .select(explode(col("__dropped")).as("__sid"))
-          .select(col("__sid").cast(idType).as(idCol))
-          .distinct()
-      } else {
-        // legacy pair pipeline. dedupePairs = false (r21): the cell key
-        // is a SINGLE band, so an unordered pair arises at most once —
-        // the dropped-id distinct keeps the survivor set insensitive to
-        // pair multiplicity either way.
-        val cands = Dedup.adaptIdType(cellRows, idCol) { rows =>
-          Dedup.boundedBucketPairs(rows, idCol, maxCluster,
-            dedupePairs = false)
-        }
-        def vecSide(idAs: String, vecAs: String): DataFrame = {
-          val s = vecs.select(col(idCol).as(idAs), col(vecCol).as(vecAs))
-          if (bcastVecs) broadcast(s) else s.hint("shuffle_hash")
-        }
-        cands
-          .join(vecSide("id1", "__v1"), "id1")
-          .join(vecSide("id2", "__v2"), "id2")
-          .filter(graft.functions.Vectors.cosineSim(col("__v1"), col("__v2"))
-            >= minCosine)
-          .select(col("id2").as(idCol))
-          .distinct()
-      }
+    val dropped = cells
+      .select(col(idCol).as("__sid"), col("cell").cast("long").as("__cell"))
+      .join(vside, "__sid")
+      .groupBy(col("__cell"))
+      .agg(graft.functions.SemDedupDroppedIds.droppedIds(
+        maxCluster, minCosine, col("__sid"), col("__v")).as("__dropped"))
+      // a saturated (over-cap) cell evaluates null: its ids survive
+      .filter(col("__dropped").isNotNull)
+      .select(explode(col("__dropped")).as(idCol))
+      .distinct()
     vecs.join(dropped, Seq(idCol), "left_anti")
   }
 }

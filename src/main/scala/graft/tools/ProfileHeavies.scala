@@ -132,25 +132,9 @@ object ProfileHeavies {
     val all = emb.unionByName(copies).localCheckpoint()
     val cells = graft.dedup.SemDedup.assignCells(all, "vec_id", "embedding",
       nClusters = 0).localCheckpoint()
-    val cellRows = cells.select(col("vec_id"),
-      lit(0).as("band"), col("cell").cast("long").as("bkey"))
-    timed("q83 cap audit")(cellRows.groupBy(col("band"), col("bkey"))
-      .agg(count(lit(1)).as("__bsz")).filter(col("__bsz") > 10000)
-      .agg(count(lit(1)).as("nb"), coalesce(sum(col("__bsz")), lit(0L))
-        .as("mass")))
-    timed("q83 bucket pairs")(
-      Dedup.boundedBucketPairs(cellRows, "vec_id", 10000))
-    val pairs = Dedup.boundedBucketPairs(cellRows, "vec_id", 10000)
-      .localCheckpoint()
-    println(s"[heavies] q83 pair count = ${pairs.count()}, " +
-      s"vec count = ${all.count()}")
-    graft.functions.Vectors.register(spark)
-    timed("q83 verify joins+cosine (from cp)")(pairs
-      .join(all.select(col("vec_id").as("id1"), col("embedding").as("__v1")), "id1")
-      .join(all.select(col("vec_id").as("id2"), col("embedding").as("__v2")), "id2")
-      .filter(graft.functions.Vectors.cosineSim(col("__v1"), col("__v2"))
-        >= 0.95)
-      .select(col("id2").as("vec_id")).distinct())
+    timed("q83 within-cell search (from cp)")(
+      graft.dedup.SemDedup.semanticDedupAssigned(all, cells, "vec_id",
+        "embedding", minCosine = 0.95))
 
     spark.stop()
   }

@@ -1,14 +1,16 @@
 package graft.dedup
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Pins the r22 gathered-vector within-cell search (SemDedupDroppedIds)
-  * exactly equivalent to the pair pipeline it replaces — on a seeded
-  * random corpus against (a) a driver-side brute-force reference of the
-  * declared drop rule and (b) the legacy pair pipeline itself, which
-  * still runs for non-integral ids.
+/** Pins SemDeDup's gathered within-cell search (SemDedupDroppedIds)
+  * against a driver-side brute-force reference of the declared drop
+  * rule: on a seeded random corpus, and on the id and vector shapes the
+  * search must handle — unpadded string, decimal, tied and null ids,
+  * null and ragged vectors, a pair exactly at the threshold, and an
+  * over-cap cell under `failOnOverCap = false`.
   */
 class SemDedupGatheredSpec extends SparkSpec {
   import spark.implicits._
@@ -57,55 +59,181 @@ class SemDedupGatheredSpec extends SparkSpec {
     else dot / (math.sqrt(nx) * math.sqrt(ny))
   }
 
-  /** The declared drop rule, brute-forced on the driver. */
-  private def reference(minCosine: Double): Seq[Long] = {
-    val byCell = vectors.groupBy { case (id, _) => cellOf(id) }
-    val dropped = byCell.values.flatMap { cell =>
-      val sorted = cell.sortBy(_._1)
-      sorted.zipWithIndex.collect { case ((idJ, vJ), j)
-        if sorted.take(j).exists { case (idI, vI) =>
-          idI != idJ && cosine(vI, vJ) >= minCosine } => idJ }
-    }.toSet
-    vectors.map(_._1).filterNot(dropped).sorted
-  }
-
   private def df = vectors.toDF("vec_id", "embedding")
   private def cellsDf = vectors.map { case (id, _) => (id, cellOf(id)) }
     .toDF("vec_id", "cell")
 
-  test("gathered form matches the brute-force drop rule at several thresholds") {
-    for (t <- Seq(0.9, 0.99, 0.999999)) {
-      val got = SemDedup.semanticDedupAssigned(df, cellsDf,
-        "vec_id", "embedding", minCosine = t)
-        .select("vec_id").as[Long].collect().sorted.toSeq
-      assert(got == reference(t), s"minCosine=$t")
-    }
+  // --- generic reference: any id type, the documented cells contract ---
+
+  /** Survivors of the drop rule over `vecRows` (id, vector) and
+    * `cellRows` (id, cell), brute-forced on the driver: each cell holds
+    * every vector of every id assigned to it (the cells ⋈ vectors join,
+    * so a cell's occupancy is counted after the join); a cell past
+    * `maxCluster` drops nothing; within a cell an entry is dropped iff
+    * an entry with a STRICTLY lower id (under `ord`) and a non-null
+    * vector has cosine >= minCosine with it. Null ids never join a cell.
+    */
+  private def referenceOf(vecRows: Seq[(Any, Array[Float])],
+                          cellRows: Seq[(Any, Long)], minCosine: Double,
+                          maxCluster: Int, ord: Ordering[Any]): Seq[String] = {
+    val vecsById = vecRows.filter(_._1 != null).groupBy(_._1)
+    val dropped = cellRows.filter(_._1 != null).groupBy(_._2).values
+      .flatMap { members =>
+        val entries = members.flatMap { case (id, _) =>
+          vecsById.getOrElse(id, Nil) }
+        if (entries.size > maxCluster) Nil
+        else entries.collect { case (idJ, vJ) if vJ != null &&
+          entries.exists { case (idI, vI) => vI != null &&
+            ord.lt(idI, idJ) && cosine(vI, vJ) >= minCosine } => idJ }
+      }.toSet
+    vecRows.map(_._1).filterNot(dropped).map(String.valueOf).sorted
   }
 
-  test("gathered form (bigint ids) and legacy pair pipeline (string ids) agree") {
-    // zero-padded string ids preserve the id ORDER, so the two paths
-    // must keep the same survivors modulo the id representation
-    val sdf = df.select(format_string("id%07d", col("vec_id")).as("vec_id"),
-      col("embedding"))
-    val scells = cellsDf.select(
-      format_string("id%07d", col("vec_id")).as("vec_id"), col("cell"))
-    val legacy = SemDedup.semanticDedupAssigned(sdf, scells,
-      "vec_id", "embedding", minCosine = 0.99)
-      .select("vec_id").as[String].collect()
-      .map(_.stripPrefix("id").toLong).sorted.toSeq
-    val gathered = SemDedup.semanticDedupAssigned(df, cellsDf,
-      "vec_id", "embedding", minCosine = 0.99)
-      .select("vec_id").as[Long].collect().sorted.toSeq
-    assert(gathered == legacy)
+  /** Runs SemDeDup on the frames and compares with [[referenceOf]];
+    * returns the reference's dropped count so callers can assert the
+    * case is not vacuous.
+    */
+  private def checkAgainstReference(vecs: DataFrame,
+                                    cells: DataFrame,
+                                    minCosine: Double, ord: Ordering[Any],
+                                    maxCluster: Int = 10000,
+                                    failOnOverCap: Boolean = true): Int = {
+    val vecRows = vecs.select("vec_id", "embedding").collect().toSeq.map(r =>
+      (r.get(0), if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray))
+    val cellRows = cells.select(col("vec_id"), col("cell").cast("long"))
+      .collect().toSeq.map(r => (r.get(0), r.getLong(1)))
+    val want = referenceOf(vecRows, cellRows, minCosine, maxCluster, ord)
+    val got = SemDedup.semanticDedupAssigned(vecs, cells, "vec_id",
+        "embedding", minCosine, maxCluster, failOnOverCap)
+      .select("vec_id").collect().toSeq.map(r => String.valueOf(r.get(0))).sorted
+    assert(got == want)
+    vecRows.size - want.size
+  }
+
+  private val stringOrd: Ordering[Any] =
+    Ordering.by[Any, String](_.asInstanceOf[String])
+
+  private val longOrd: Ordering[Any] =
+    Ordering.by[Any, Long](_.asInstanceOf[Long])
+
+  test("gathered form matches the brute-force drop rule at several thresholds") {
+    for (t <- Seq(0.9, 0.99, 0.999999))
+      assert(checkAgainstReference(df, cellsDf, t, longOrd) > 0, s"minCosine=$t")
+  }
+
+  /** The seeded corpus under unpadded string ids "v<n>", whose string
+    * order differs from the numeric order (e.g. "v1000" < "v2" < "v200").
+    */
+  private def stringIds(df: DataFrame) =
+    df.withColumn("vec_id", concat(lit("v"), col("vec_id").cast("string")))
+
+  test("unpadded string ids: lowest id in STRING order survives") {
+    val nDropped = checkAgainstReference(stringIds(df), stringIds(cellsDf),
+      0.99, stringOrd)
+    assert(nDropped > 0)
+    // a copy whose id sorts first as a string is the survivor: 1000 is
+    // an exact copy of 0, and "v0" < "v1000" keeps "v0"; 1010 copies 10,
+    // and "v10" < "v1010"; 2000 is a near-dup of 0 and "v2000" > "v0"
+    val out = SemDedup.semanticDedupAssigned(stringIds(df),
+        stringIds(cellsDf), "vec_id", "embedding", minCosine = 0.99)
+      .select("vec_id").as[String].collect().toSet
+    assert(out("v0") && !out("v1000") && !out("v2000"))
+    // string vs numeric order really differ on a dropped pair: 2140 is a
+    // near-dup of 140, and "v2140" > "v140" — but 1140 copies 140 too,
+    // so of the three only "v1140" (< "v140") survives
+    assert(out("v1140") && !out("v140") && !out("v2140"))
+  }
+
+  test("decimal ids follow numeric order") {
+    val ddf = df.withColumn("vec_id",
+      (col("vec_id").cast("decimal(12,2)") / 100).cast("decimal(12,2)"))
+    val dcells = cellsDf.withColumn("vec_id",
+      (col("vec_id").cast("decimal(12,2)") / 100).cast("decimal(12,2)"))
+    assert(ddf.schema("vec_id").dataType.typeName.startsWith("decimal"))
+    val decOrd: Ordering[Any] = Ordering.by[Any, BigDecimal](
+      x => BigDecimal(x.asInstanceOf[java.math.BigDecimal]))
+    assert(checkAgainstReference(ddf, dcells, 0.99, decOrd) > 0)
+  }
+
+  test("tied (duplicated) string ids never drop each other") {
+    // "t-a" twice with two different vectors, plus a near-dup of the
+    // second copy under a higher id and an exact copy of the first
+    // under a lower one
+    val a1 = vectors(0)._2
+    val a2 = vectors(1)._2
+    val rows = Seq(("t-a", a1), ("t-a", a2), ("t-b", a2.map(_ + 1e-5f)),
+      ("t-0", a1.clone()), ("t-c", vectors(2)._2))
+    val tdf = rows.toDF("vec_id", "embedding")
+    val tcells = rows.map { case (id, _) => (id, 0L) }.toDF("vec_id", "cell")
+    assert(checkAgainstReference(tdf, tcells, 0.999, stringOrd) > 0)
+    val out = SemDedup.semanticDedupAssigned(tdf, tcells, "vec_id",
+        "embedding", minCosine = 0.999)
+      .select("vec_id").as[String].collect().sorted.toSeq
+    // both "t-a" rows go: "t-0" < "t-a" copies the first copy's vector,
+    // and an id dropped once drops every row that carries it
+    assert(out == Seq("t-0", "t-c"))
+  }
+
+  test("null ids and null vectors: never compared, always survive") {
+    val base = vectors.take(12).map { case (id, v) => (s"n$id", v) }
+    val rows: Seq[(String, Array[Float])] = base ++ Seq(
+      (null, base.head._2.clone()),           // null id, exact copy
+      ("n00", null),                           // null vector, low id
+      ("n99", base.head._2.clone()),           // copy of "n0" -> dropped
+      ("nz", null))                            // null vector, high id
+    val ndf = rows.toDF("vec_id", "embedding")
+    val ncells = rows.map { case (id, _) => (id, 0L) }.toDF("vec_id", "cell")
+    assert(checkAgainstReference(ndf, ncells, 0.99, stringOrd) > 0)
+    val out = SemDedup.semanticDedupAssigned(ndf, ncells, "vec_id",
+        "embedding", minCosine = 0.99)
+      .select("vec_id").as[String].collect().toSeq
+    assert(out.count(_ == null) == 1 && out.contains("n00") &&
+      out.contains("nz") && !out.contains("n99"))
+  }
+
+  test("ragged vectors compare over the shorter length") {
+    // prefixes of one vector: over the shared length they are identical
+    val v = vectors(3)._2
+    val rows = Seq(("r1", v.take(8)), ("r2", v), ("r3", v.take(12)),
+      ("r4", vectors(4)._2.take(8)), ("r5", v.take(4).map(-_)))
+    val rdf = rows.toDF("vec_id", "embedding")
+    val rcells = rows.map { case (id, _) => (id, 0L) }.toDF("vec_id", "cell")
+    assert(checkAgainstReference(rdf, rcells, 0.999999, stringOrd) == 2)
+  }
+
+  test("a pair whose cosine equals minCosine exactly is dropped") {
+    val (x, y) = (vectors(5)._2, vectors(13)._2)
+    val t = cosine(x, y)
+    val rows = Seq(("e1", x), ("e2", y), ("e3", vectors(6)._2))
+    val edf = rows.toDF("vec_id", "embedding")
+    val ecells = rows.map { case (id, _) => (id, 0L) }.toDF("vec_id", "cell")
+    def survivors(th: Double) = SemDedup.semanticDedupAssigned(edf, ecells,
+        "vec_id", "embedding", minCosine = th)
+      .select("vec_id").as[String].collect().sorted.toSeq
+    assert(checkAgainstReference(edf, ecells, t, stringOrd) >= 1)
+    assert(!survivors(t).contains("e2"))
+    assert(survivors(math.nextUp(t)).contains("e2"))
+  }
+
+  test("over-cap cell with failOnOverCap = false: only that cell keeps its dups") {
+    // cell 0 holds every exact copy (66 rows), cells 1-4 hold 45-46
+    val sizes = vectors.groupBy { case (id, _) => cellOf(id) }.map {
+      case (c, m) => c -> m.size }
+    assert(sizes(0L) > 60 && sizes.filter(_._1 != 0L).values.forall(_ <= 60),
+      s"cell sizes $sizes")
+    assert(checkAgainstReference(stringIds(df), stringIds(cellsDf), 0.99,
+      stringOrd, maxCluster = 60, failOnOverCap = false) > 0)
+    val out = SemDedup.semanticDedupAssigned(stringIds(df), stringIds(cellsDf),
+        "vec_id", "embedding", minCosine = 0.99, maxCluster = 60,
+        failOnOverCap = false)
+      .select("vec_id").as[String].collect().toSet
+    assert(out("v1000")) // the copy in the skipped cell survives
   }
 
   test("gathered form agrees in the forced shuffle_hash regime too") {
     try {
       spark.conf.set("spark.graft.semdedup.maxBroadcastVecs", "1")
-      val got = SemDedup.semanticDedupAssigned(df, cellsDf,
-        "vec_id", "embedding", minCosine = 0.99)
-        .select("vec_id").as[Long].collect().sorted.toSeq
-      assert(got == reference(0.99))
+      checkAgainstReference(df, cellsDf, 0.99, longOrd)
     } finally spark.conf.unset("spark.graft.semdedup.maxBroadcastVecs")
   }
 
@@ -135,25 +263,14 @@ class SemDedupGatheredSpec extends SparkSpec {
   }
 
   test("int ids widen losslessly through the gathered path") {
-    val idf = vectors.filter(_._1 < 300L)
-      .map { case (id, v) => (id.toInt, v) }.toDF("vec_id", "embedding")
-    val icells = vectors.filter(_._1 < 300L)
-      .map { case (id, _) => (id.toInt, cellOf(id)) }.toDF("vec_id", "cell")
-    val out = SemDedup.semanticDedupAssigned(idf, icells,
-      "vec_id", "embedding", minCosine = 0.999999)
-    assert(out.schema("vec_id").dataType ==
+    val sub = vectors.filter(_._1 < 300L)
+    val idf = sub.map { case (id, v) => (id.toInt, v) }.toDF("vec_id", "embedding")
+    val icells = sub.map { case (id, _) => (id.toInt, cellOf(id)) }
+      .toDF("vec_id", "cell")
+    assert(SemDedup.semanticDedupAssigned(idf, icells, "vec_id", "embedding",
+      minCosine = 0.999999).schema("vec_id").dataType ==
       org.apache.spark.sql.types.IntegerType)
-    val expected = {
-      val sub = vectors.filter(_._1 < 300L)
-      val byCell = sub.groupBy { case (id, _) => cellOf(id) }
-      val dropped = byCell.values.flatMap { cell =>
-        val sorted = cell.sortBy(_._1)
-        sorted.zipWithIndex.collect { case ((idJ, vJ), j)
-          if sorted.take(j).exists { case (idI, vI) =>
-            idI != idJ && cosine(vI, vJ) >= 0.999999 } => idJ }
-      }.toSet
-      sub.map(_._1).filterNot(dropped).sorted.map(_.toInt)
-    }
-    assert(out.select("vec_id").as[Int].collect().sorted.toSeq == expected)
+    checkAgainstReference(idf, icells, 0.999999,
+      Ordering.by[Any, Int](_.asInstanceOf[Int]))
   }
 }

@@ -122,6 +122,25 @@ class SemDedupSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.semdedup.maxBroadcastVecBytes")
   }
 
+  test("dim probe skips a leading null vector: a tiny byte cap still plans shuffle_hash") {
+    val rows = (0L, Option.empty[Array[Float]]) +: (1L to 4L).map(i =>
+      // disjoint supports: pairwise cosine 0, nothing is dropped
+      (i, Option(Array.tabulate(64)(j => if (j % 4 == i - 1) 1f else 0f))))
+    val vdf = rows.toDF("vec_id", "embedding")
+    val cells = rows.map { case (id, _) => (id, 0L) }.toDF("vec_id", "cell")
+    // 5 rows x (64 dims x 4 B + 48 B) = 1520 B > 1000 B; a probe that
+    // read the null first row would estimate 5 x 48 B and broadcast
+    try {
+      spark.conf.set("spark.graft.semdedup.maxBroadcastVecBytes", "1000")
+      val out = SemDedup.semanticDedupAssigned(vdf, cells, "vec_id",
+        "embedding", minCosine = 0.95)
+      assert(out.queryExecution.executedPlan.toString
+        .contains("ShuffledHashJoin"))
+      assert(out.select("vec_id").as[Long].collect().sorted.toSeq ==
+        Seq(0L, 1L, 2L, 3L, 4L))
+    } finally spark.conf.unset("spark.graft.semdedup.maxBroadcastVecBytes")
+  }
+
   test("survivors keep all original columns") {
     val withLabel = fixture.withColumn("label", col("vec_id") * 10)
     val out = SemDedup.semanticDedup(withLabel, "vec_id", "embedding",

@@ -49,7 +49,9 @@ tool error. r22 (verdict #4) lowered the bar from >2x alone to
 >1.25x AND >0.3 s absolute, in either direction — two rounds of q80/
 q105-class drift (+16-28%, ~0.3-0.4 s) accumulated under the 2x radar.
 The ratio test runs on the RAW floats, not the 3-decimal display
-strings (r21 ADVICE: rounding could misclassify at the boundary).
+strings (r21 ADVICE: rounding could misclassify at the boundary), and
+over every aligned key, so the exit code is the same for any display
+`threshold`.
 """
 import sys, os, json
 
@@ -141,23 +143,6 @@ def main(old_path, new_path, threshold=0.15, hide_new=False):
                 rows.append((abs(delta), key, o, n,
                              f"{delta:+.0%}",
                              note_for(key) or "UNATTRIBUTED"))
-    common = [k for k in old if k in new]
-    to, tn = sum(old[k] for k in common), sum(new[k] for k in common)
-    drift = f" ({(tn - to) / to:+.1%})" if to > 0 else ""
-    print(f"<!-- generated by tools/benchdiff.py {os.path.basename(old_path)}"
-          f" -> {os.path.basename(new_path)}; threshold {threshold:.0%};"
-          f" common set {len(common)} queries, total"
-          f" {to:.1f}s -> {tn:.1f}s{drift} -->")
-    if not rows:
-        print(f"No movers beyond {threshold:.0%} "
-              f"({len(common)} aligned queries).")
-        return 0
-    def fmt(v):
-        return "-" if v is None else f"{v:.3f}"
-    print("| query | old s | new s | Δ | attribution |")
-    print("|---|---|---|---|---|")
-    for _, key, o, n, d, note in sorted(rows, key=lambda r: -r[0]):
-        print(f"| {key} | {fmt(o)} | {fmt(n)} | {d} | {note} |")
     def is_big(o, n):
         # symmetric ratio rule on the raw floats: a rise past +25% OR a
         # drop past -20% (= >1.25x faster) demands attribution, but only
@@ -166,9 +151,29 @@ def main(old_path, new_path, threshold=0.15, hide_new=False):
         # threshold's ordinary judgement
         return (n > o * BIG_RATIO or n < o / BIG_RATIO) \
             and abs(n - o) > BIG_ABS
+    # classified over EVERY aligned key, so the exit code does not
+    # depend on the display threshold
+    common = [k for k in old if k in new]
     big_unattributed = [
-        (key, o, n, d) for mag, key, o, n, d, note in rows
-        if note == "UNATTRIBUTED" and mag != float("inf") and is_big(o, n)]
+        (k, old[k], new[k], f"{(new[k] - old[k]) / old[k]:+.0%}")
+        for k in sorted(common)
+        if old[k] > 0 and is_big(old[k], new[k]) and not note_for(k)]
+    to, tn = sum(old[k] for k in common), sum(new[k] for k in common)
+    drift = f" ({(tn - to) / to:+.1%})" if to > 0 else ""
+    print(f"<!-- generated by tools/benchdiff.py {os.path.basename(old_path)}"
+          f" -> {os.path.basename(new_path)}; threshold {threshold:.0%};"
+          f" common set {len(common)} queries, total"
+          f" {to:.1f}s -> {tn:.1f}s{drift} -->")
+    def fmt(v):
+        return "-" if v is None else f"{v:.3f}"
+    if not rows:
+        print(f"No movers beyond {threshold:.0%} "
+              f"({len(common)} aligned queries).")
+    else:
+        print("| query | old s | new s | Δ | attribution |")
+        print("|---|---|---|---|---|")
+        for _, key, o, n, d, note in sorted(rows, key=lambda r: -r[0]):
+            print(f"| {key} | {fmt(o)} | {fmt(n)} | {d} | {note} |")
     if big_unattributed:
         print()
         print(f"UNATTRIBUTED BIG MOVERS ({len(big_unattributed)}) — every "
