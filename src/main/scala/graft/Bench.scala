@@ -276,7 +276,7 @@ object Bench {
     lines.find(_.length <= budget).getOrElse(lines.minBy(_.length))
   }
 
-  private def jstr(s: String): String =
+  private[graft] def jstr(s: String): String =
     "\"" + s.flatMap {
       case '\\' => "\\\\"
       case '"' => "\\\""
@@ -284,7 +284,7 @@ object Bench {
       case c => c.toString
     } + "\""
 
-  private def jobj(kvs: Seq[(String, String)]): String =
+  private[graft] def jobj(kvs: Seq[(String, String)]): String =
     kvs.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
 
   private def jnum(d: Double): String =
@@ -519,7 +519,7 @@ object Bench {
       // r16: the SPAN family — window-hash store probes (the smallest
       // per-unit store state, 8 bytes/distinct window); the gate is the
       // fused-scan + two one-row-per-key mark joins of
-      // SpanDedup.statsIncremental. Methodology caveat (SpanBloomAb):
+      // SpanDedup.statsIncremental. Methodology caveat (r16 Bloom A/B):
       // ScaleUp's replica corpus adds no NEW distinct windows, so the
       // distinct-keyed stores (exact/segment/span) are replica-invariant
       // by construction — their small-vs-large datum pins the probe's

@@ -106,8 +106,8 @@ object DedupQueries {
     cellCache.getOrElseUpdate((s, key),
       graft.util.Checkpoints.scoped(s"memo:$key")(build))
 
-  private def saltedCopySeeded(s: org.apache.spark.sql.SparkSession,
-                               dir: String): org.apache.spark.sql.DataFrame =
+  private[graft] def saltedCopySeeded(s: org.apache.spark.sql.SparkSession,
+                                      dir: String): org.apache.spark.sql.DataFrame =
     corpusCache.getOrElseUpdate((s, dir), {
       val nTok = greatest(lit(12), (length(col("text")) / 16).cast("int"))
       val salted = Tables(s, dir, "documents").select(col("doc_id"),
@@ -124,20 +124,6 @@ object DedupQueries {
     * any bench SF (sf1 tops out around 5e4).
     */
   private val CopyShift = 10000000L
-
-  /** [[saltedCopySeeded]] for [[graft.tools.OracleMargins]], the audit
-    * that re-measures the organic-margin claims in the scaladoc above.
-    */
-  def saltedCopySeededForAudit(s: org.apache.spark.sql.SparkSession,
-                               dir: String): org.apache.spark.sql.DataFrame =
-    saltedCopySeeded(s, dir)
-
-  /** The q45/q95 curation corpus for evidence tools (tools.StageEquiv
-    * exports its minhash signatures as the stage-equivalent
-    * intermediate — same rationale as [[saltedCopySeededForAudit]]). */
-  def curationCorpusForAudit(s: org.apache.spark.sql.SparkSession,
-                             dir: String): org.apache.spark.sql.DataFrame =
-    curationCorpus(s, dir)
 
   /** The q45 curation corpus: [[saltedCopySeeded]] (salted originals +
     * 50 verbatim copies = tier-2 exact-dedup fodder) plus 20 seeded

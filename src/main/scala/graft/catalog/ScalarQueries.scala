@@ -286,13 +286,13 @@ object ScalarQueries {
     // per-task sort) is the scale path. PercentilesSpec pins all three
     // implementations bit-equal and the plans' shapes.
     //
-    // Surface choice measured to exhaustion solo at sf1 (r15,
-    // tools/PercentileAb — interleaved medians-of-5, one JVM, five
-    // shapes): count-map 1.23 s (with the r15 unboxed BoundReference
-    // update), fused two-column aggregate 1.41, two-scan codegen-count
-    // + weighted fold 1.55, explode codegen-count + weighted fold 1.79,
-    // rank-selection 2.00 — against a 0.49 s codegen scan twin (same
-    // group key, same two decoded columns, sum()s). The premium over
+    // Surface choice measured to exhaustion solo at sf1 (r15, BENCH_SOLO
+    // previous_records.r15_solo_additions — interleaved medians-of-5, one
+    // JVM, five shapes): count-map 1.23 s (with the r15 unboxed
+    // BoundReference update), fused two-column aggregate 1.41, two-scan
+    // codegen-count + weighted fold 1.55, explode codegen-count + weighted
+    // fold 1.79, rank-selection 2.00 — against a 0.49 s codegen scan twin
+    // (same group key, same two decoded columns, sum()s). The premium over
     // the twin is ObjectHashAggregate's interpreted per-row machinery,
     // and every codegen-phase alternative loses because the
     // distinct-price count rows are near row-scale per task (map-side
@@ -372,8 +372,9 @@ object ScalarQueries {
     // fold touches only those. l_discount holds 11 distinct values, so
     // at sf1 the exchange ships ≤ 66 rows for a 60M-row scan — against
     // DuckDB's QUANTILE_CONT buffering the full column. (The r15
-    // exhaustion measurements in tools/PercentileAb show the same
-    // two-phase shape LOSING on near-unique columns — distinct ≈ rows
+    // exhaustion measurements, BENCH_SOLO
+    // previous_records.r15_solo_additions, show the same two-phase
+    // shape LOSING on near-unique columns — distinct ≈ rows
     // per task means the combine can't shrink the exchange — which is
     // why q50's raw-value percentiles stay on the count-map aggregate
     // and this query demonstrates the histogram regime instead.) The

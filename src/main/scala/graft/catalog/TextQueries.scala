@@ -695,11 +695,12 @@ object TextQueries {
     // Linear lift (PMI minus the monotone log) keeps the double
     // arithmetic bit-identical cross-engine; counts are exact longs
     // (DuckDB SUMs cast to BIGINT before the double division — the
-    // HUGEINT trap). No memoKey: the same-JVM A/B (FloorTwins r16)
-    // measured the checkpointed count tables at 2.82 s vs 1.46 s
-    // recomputed at sf1 — ReuseExchange already dedups the identical
-    // count subtrees, so the memo only adds block-store round-trips of
-    // the corpus-bigram-scaled table (Collocations scaladoc).
+    // HUGEINT trap). No memoKey: the r16 same-JVM A/B (BENCH_SOLO
+    // r16b_additions) measured the checkpointed count tables at 2.82 s
+    // vs 1.46 s recomputed at sf1 — ReuseExchange already dedups the
+    // identical count subtrees, so the memo only adds block-store
+    // round-trips of the corpus-bigram-scaled table (Collocations
+    // scaladoc).
     "q100_pmi_bigrams" -> Q(
       (s, dir) => graft.text.Collocations.topBigramsByLift(
         Tables(s, dir, "documents"), minCount = 5L, k = 20,
@@ -891,7 +892,7 @@ object TextQueries {
     // counts add before the conditional division, cross-head micros
     // add after) observable rather than merely absent. The frozen rows
     // come from DsirSpec's independent plain-Scala reconstruction over
-    // the enumerated collision classes (provenance: tools.FreezeQ112);
+    // the enumerated collision classes (frozen in r18);
     // the oracle re-derives avg_weight by the same one double
     // division, so a regression anywhere in the bucketing, the merge
     // arithmetic, or the ordering flips the hash.

@@ -244,7 +244,7 @@ object SpanDedup {
     * through the verify join. The batch-dup rule is independent of the
     * store and unaffected by the filter.
     *
-    * MEASURED COST-NEUTRAL at local scale ([[graft.tools.SpanBloomAb]],
+    * MEASURED COST-NEUTRAL at local scale (r16 same-JVM A/B,
     * 5-rep medians, foreign-cores 0.00): bloomed 0.41-0.66s vs plain
     * 0.53-0.73s across THREE filter sizes (16KB near-100%-fpp, store-
     * sized, oversized 2MB) and two stores — neither the filter literal

@@ -88,15 +88,15 @@ final class ValueCountMap(initialCap: Int = 64) {
   *
   * CHOOSING between this and the two-phase histogram shape (a codegen
   * `groupBy(value).count()` folded through the WEIGHTED form — q97's
-  * shape): there is no auto-rewrite, by measurement (r16,
-  * `tools.PercentileAuto`, sf1 60M rows, same JVM, medians-of-5,
-  * per-column single-shape cells): two-phase 1.06 s vs count-map
-  * 1.34 s at 11 distinct values (l_discount), but count-map 1.03 vs
-  * two-phase 1.22 at 47 distinct (l_quantity) and 1.59 vs 2.19 at
-  * ~600k distinct (l_extendedprice). The crossover sits between 11
-  * and 47 distinct, the best-case win is ~20% — about twice the
-  * same-JVM variance bar — and the mis-routing penalty GROWS with
-  * distinct count, so a threshold rule would be overfit noise.
+  * shape): there is no auto-rewrite, by measurement (r16, sf1 60M
+  * rows, same JVM, medians-of-5, per-column single-shape cells):
+  * two-phase 1.06 s vs count-map 1.34 s at 11 distinct values
+  * (l_discount), but count-map 1.03 vs two-phase 1.22 at 47 distinct
+  * (l_quantity) and 1.59 vs 2.19 at ~600k distinct (l_extendedprice).
+  * The crossover sits between 11 and 47 distinct, the best-case win is
+  * ~20% — about twice the same-JVM variance bar — and the mis-routing
+  * penalty GROWS with distinct count, so a threshold rule would be
+  * overfit noise.
   * DEFAULT TO THIS AGGREGATE (never catastrophically wrong, bounded
   * state everywhere); reach for the two-phase shape by hand only for
   * very-low-distinct columns (≲ ~20 values — flags, discounts,
@@ -249,9 +249,9 @@ object ExactPercentilesAgg {
   * interpreted path once the probe itself is primitive. r15 measured NO
   * on the single-file sf1 layout (fused 1.41 s vs two separate
   * aggregates 1.23); the r22 re-measurement on the multi-file layout
-  * (tools/PercentileAb, two windows, medians-of-5) REVERSED it — fused
-  * 0.85/0.77 s vs 1.03/0.86 — because with parallel scans the per-row
-  * dispatch is the dominant term, so the catalog q50 now runs this
+  * (BENCH_SOLO `r22_percentile_ab`, two windows, medians-of-5) REVERSED it
+  * — fused 0.85/0.77 s vs 1.03/0.86 — because with parallel scans the
+  * per-row dispatch is the dominant term, so the catalog q50 now runs this
   * aggregate (both results kept on record: the choice is
   * layout-sensitive, re-measure before porting it). Null handling,
   * linear interpolation, and the distinct-cap abort are per-column

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * dimension where one fact key dominates.
   *
   * Both are pure plan rewrites with identical results to their naive
-  * forms (pinned by SkewSpec). MEASURED (r15, `tools.SkewAb`: 20M rows,
+  * forms (pinned by SkewSpec). MEASURED (r15 same-JVM A/B: 20M rows,
   * 90% on one key, 1M-row dim, broadcast disabled, medians-of-3):
   *
   *  - groupBy-COUNT: naive 0.45 s vs salted 0.72 s — for decomposable

@@ -85,7 +85,7 @@ class DailyStoreCatalog extends TableCatalog {
         DataType.fromJson(new String(bytes, "UTF-8")).asInstanceOf[StructType]
       } else
         // inference is a FULL leaf listing — cached under the store's
-        // commit-state key (r16; ListingProbe measured it doubling the
+        // commit-state key (r16 measured it doubling the
         // catalog front's per-query discovery cost)
         DelegateCache.schemaFor(spark, dir.toString)(
           spark.read.parquet(dir.toString).schema)

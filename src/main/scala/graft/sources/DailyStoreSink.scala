@@ -200,7 +200,7 @@ class DailyStoreTable(path: String, pcol: String, schema0: StructType,
   * The r15 read front rebuilt the parquet `FileTable` delegate — and
   * with it the full leaf-file listing — on EVERY table resolution,
   * because a cached FileIndex can silently serve stale reads after a
-  * write. `ListingProbe` swept that cost across store sizes (local FS,
+  * write. An r16 sweep measured that cost across store sizes (local FS,
   * the CHEAP case, medians-of-5): pruned single-day reads pay 1.3 s of
   * discovery at 400 day-partitions, 3.5 s at 1,600, 10.9 s at 6,400 —
   * and the catalog front doubles it (schema inference is a second full

@@ -56,11 +56,10 @@ import org.apache.spark.sql.types.{DateType, StructType}
   * ever, and version history is bounded by `keep`. What it adds is the
   * operational half the re-ingest loop actually needs — "yesterday's
   * ingest was garbage, show me / restore the day before" — at the cost
-  * of one extra rename per condemned file. MEASURED
-  * (`tools.RetentionProbe`, 20 dynamic 3-day-replace commits, local FS,
-  * same JVM): plain loop 4.43 s vs retention loop 5.01 s ≈ 29 ms per
-  * commit of archive renames + version bookkeeping — noise for a loop
-  * that runs once per day.
+  * of one extra rename per condemned file. MEASURED (r16, 20 dynamic
+  * 3-day-replace commits, local FS, same JVM): plain loop 4.43 s vs
+  * retention loop 5.01 s ≈ 29 ms per commit of archive renames +
+  * version bookkeeping — noise for a loop that runs once per day.
   *
   * Restore is a read + ordinary write: `readVersion(spark, path, 1)
   * .write.format("dailystore").mode("overwrite")...` day-replaces the

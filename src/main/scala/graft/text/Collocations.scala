@@ -44,14 +44,14 @@ object Collocations {
     *
     * `memoKey` scopes a [[graft.util.Checkpoints]] checkpoint of the
     * two AGGREGATED count frames. MEASURED NEGATIVE for one-shot use
-    * (FloorTwins r16, sf1, same JVM): 2.82 s checkpointed vs 1.46 s
-    * recomputed — the multiply-consumed count subtrees are CANONICALLY
-    * IDENTICAL, so ReuseExchange already computes each once per
-    * execution, and the checkpoint only adds a block-store write+read
-    * of the corpus-bigram-scaled table. Default to `None`; a key pays
-    * only when the tables outlive one execution (several DIFFERENT
-    * downstream queries over the same corpus's counts), which is why
-    * the parameter survives the measurement.
+    * (r16, sf1, same JVM; BENCH_SOLO `r16b_additions`): 2.82 s checkpointed
+    * vs 1.46 s recomputed — the multiply-consumed count subtrees are
+    * CANONICALLY IDENTICAL, so ReuseExchange already computes each once per
+    * execution, and the checkpoint only adds a block-store write+read of
+    * the corpus-bigram-scaled table. Default to `None`; a key pays only
+    * when the tables outlive one execution (several DIFFERENT downstream
+    * queries over the same corpus's counts), which is why the parameter
+    * survives the measurement.
     */
   def topBigramsByLift(docs: DataFrame, minCount: Long, k: Int,
                        memoKey: Option[String] = None): DataFrame = {

@@ -227,7 +227,7 @@ object Dsir {
     * output in plain Scala, independent of every operator under test;
     * the q112 oracle freezes that reconstruction as an answer key
     * (xxhash64 with seed 42 is a fixed public function, so the frozen
-    * rows are stable; provenance: [[graft.tools.FreezeQ112]]). Shared
+    * rows are stable; frozen in r18). Shared
     * here so the spec and the catalog entry can never drift onto
     * different fixtures.
     */

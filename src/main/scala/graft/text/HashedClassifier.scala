@@ -61,15 +61,4 @@ object HashedClassifier {
       .withColumn("label",
         when(col("score") > threshold, lit("keep")).otherwise(lit("drop")))
   }
-
-  /** The declared Column-fold form of the score mean (no bias/round):
-    * the executable specification [[scoreDocs]]'s expression must match
-    * bit-for-bit. Kept for the parity spec; not a hot path.
-    */
-  def scoreMeanFold(text: Column, salt: String): Column = {
-    val toks = TextAnalysis.wsTokens(text)
-    when(size(toks) === 0, lit(0.0)).otherwise(
-      aggregate(toks, lit(0.0), (acc, t) => acc + tokenWeight(t, salt)) /
-        size(toks))
-  }
 }

@@ -34,7 +34,7 @@ object OracleMargins {
     */
   def measure(spark: SparkSession, dir: String): (Long, Int, Long, Int) = {
     val shift = 10000000L
-    val corpus = graft.catalog.DedupQueries.saltedCopySeededForAudit(spark, dir)
+    val corpus = graft.catalog.DedupQueries.saltedCopySeeded(spark, dir)
     val sig = Dedup.minhashSignatures(corpus, "doc_id", "text", 32, 5)
       .localCheckpoint()
     val mh = Dedup.minhashJaccard(

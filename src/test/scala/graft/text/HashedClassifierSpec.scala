@@ -1,11 +1,24 @@
 package graft.text
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
 class HashedClassifierSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The declared Column-fold form of the score mean (no bias/round):
+    * the executable specification [[HashedClassifier.scoreDocs]]'s
+    * expression must match bit-for-bit.
+    */
+  private def scoreMeanFold(text: Column, salt: String): Column = {
+    val toks = TextAnalysis.wsTokens(text)
+    when(size(toks) === 0, lit(0.0)).otherwise(
+      aggregate(toks, lit(0.0),
+        (acc, t) => acc + HashedClassifier.tokenWeight(t, salt)) /
+        size(toks))
+  }
 
   private def score(texts: (Long, String)*): Map[Long, (Double, String)] =
     HashedClassifier.scoreDocs(texts.toDF("doc_id", "text"),
@@ -52,7 +65,7 @@ class HashedClassifierSpec extends SparkSpec {
     val docs = graft.Tables(spark, sf, "documents").limit(300)
     val diff = docs.select(
         graft.functions.HashedScores.hashedScore(col("text"), "p1").as("fast"),
-        HashedClassifier.scoreMeanFold(col("text"), "p1").as("slow"))
+        scoreMeanFold(col("text"), "p1").as("slow"))
       .filter(col("fast") =!= col("slow")).count()
     assert(diff == 0)
     // and on adversarial token shapes (multi-byte, tabs/CRs, blanks)
@@ -60,7 +73,7 @@ class HashedClassifierSpec extends SparkSpec {
       " nbspIsNotWs", "x  y").toDF("text")
     val bad = edge.select(
         graft.functions.HashedScores.hashedScore(col("text"), "s2").as("fast"),
-        HashedClassifier.scoreMeanFold(col("text"), "s2").as("slow"))
+        scoreMeanFold(col("text"), "s2").as("slow"))
       .filter(col("fast") =!= col("slow")).count()
     assert(bad == 0)
   }

@@ -1,0 +1,81 @@
+package graft.tools
+
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+import graft.SparkSpec
+
+class TimeSetSpec extends SparkSpec {
+  private val names = Seq("q03_growth_rates", "q12_pricing_summary")
+
+  /** Jobs started while `body` runs, counted by a plain listener over
+    * every job: a one-job sentinel on each side marks the window, because
+    * listener events arrive asynchronously but in order.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("-"))
+    }
+    def sentinel(tag: String): Int = {
+      sc.setJobGroup(tag, tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      Iterator.continually(seen.poll(60, TimeUnit.SECONDS))
+        .takeWhile { g => assert(g != null, "sentinel not delivered"); g != tag }
+        .size
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel("timeset-spec-before")
+      body
+      sentinel("timeset-spec-after")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("job counts equal a direct listener count of one more run") {
+    val r = TimeSet.run(spark, names, sf, 2)
+    assert(r.errors.isEmpty, r.errors)
+    assert(r.medians.map(_._1) == names)
+    names.foreach { n =>
+      val direct = jobsDuring(
+        Timing.materialize(graft.SparkEntry.queries(n)(spark, sf)))
+      assert(direct > 0)
+      assert(r.jobs(n) == direct, n)
+    }
+  }
+
+  test("the output line is JSON with queries, jobs and foreign_cores") {
+    val json = new ObjectMapper().readTree(TimeSet.run(spark, names, sf, 1).line)
+    names.foreach { n =>
+      assert(json.get("queries").get(n).asDouble() > 0.0)
+      assert(json.get("jobs").get(n).asInt() > 0)
+    }
+    assert(json.get("foreign_cores").isNumber)
+    assert(json.get("errors").size() == 0)
+  }
+
+  test("an unknown name fails before any query runs") {
+    var thrown: Option[IllegalArgumentException] = None
+    val jobs = jobsDuring {
+      thrown = Some(intercept[IllegalArgumentException](
+        TimeSet.run(spark, names :+ "q999_no_such_query", sf, 1)))
+    }
+    assert(thrown.get.getMessage.contains("q999_no_such_query"))
+    assert(jobs == 0)
+  }
+
+  test("a query that throws in a timed rep is an error, not a number") {
+    val r = TimeSet.run(spark, names.take(1), "/nonexistent/sf", 1)
+    assert(r.medians.isEmpty)
+    assert(r.errors.keySet == names.take(1).toSet)
+    val json = new ObjectMapper().readTree(r.line)
+    assert(json.get("queries").size() == 0)
+    assert(json.get("errors").get(names.head).asText().nonEmpty)
+  }
+}
