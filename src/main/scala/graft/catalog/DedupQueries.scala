@@ -841,8 +841,9 @@ object DedupQueries {
     // segment hashes), odd docs gate against it. FULL-WORK oracle: the
     // SQL recomputes both the store membership set and the in-batch
     // first-occurrence rule from the raw text. Store side is bucketed on
-    // the hash, so the probe join reads it co-located — per-batch cost
-    // scales with the batch, not the corpus.
+    // the hash, so the probe join never reshuffles it (this fixture's
+    // store is small enough to broadcast) — per-batch shuffle scales
+    // with the batch, not the corpus.
     "q84_segment_incremental" -> Q(
       (s, dir) => {
         val docs = Tables(s, dir, "documents")

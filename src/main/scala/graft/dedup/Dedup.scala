@@ -83,43 +83,78 @@ object Dedup {
   /** Incremental exact dedup against a persisted corpus hash store — the
     * daily-batch shape of corpus curation. Survivors are batch rows whose
     * text hash appears neither in the store nor earlier (minimum id) in
-    * the batch; their hashes are appended so the next batch sees them.
+    * the batch; only their `(id, text_hash)` pairs are appended, so the
+    * next batch sees them.
+    *
+    * Returns the surviving batch ROWS: every batch column, in input
+    * order, then `text_hash` — so a pipeline's next tier reads the
+    * checkpointed survivors instead of re-joining the batch. Rows with
+    * the same text collapse to the minimum-id row (one of them when ids
+    * tie too). A batch column named `text_hash` is rejected.
     *
     * The store holds ONE 16-byte hash + canonical id per corpus document
     * and lives as a table bucketed on the hash
-    * (graft.pipelines.Sinks.reloadBucketed), so the anti-join reads the
-    * corpus side co-located and shuffles ONLY the incoming batch: per-day
-    * cost scales with the batch, never with the accumulated corpus, which
-    * is what makes exact dedup sustainable at 100 TB.
+    * (graft.pipelines.Sinks.reloadBucketed). The planner picks the store
+    * join: it broadcasts the store while the store is under
+    * `spark.sql.autoBroadcastJoinThreshold`, and past that it plans a
+    * sort-merge join that reads the store through its bucketing, with
+    * no exchange on the store side. Either way only the batch shuffles,
+    * but every call scans the whole store once.
     */
   def exactIncremental(batch: DataFrame, idCol: String, textCol: String,
                        storeTable: String, storePath: String,
                        nBuckets: Int = 8): DataFrame = {
+    require(!batch.columns.contains("text_hash"),
+      "exactIncremental: the batch must not carry a text_hash column " +
+        "(the gate adds it)")
     // materialized once: both returned to the caller and appended below
-    val out = exactGate(batch, idCol, textCol, storeTable).localCheckpoint()
-    appendHashStore(out, storeTable, storePath, nBuckets)
+    val out = notInStore(firstPerText(batch, idCol, textCol, batch.columns),
+      storeTable).localCheckpoint()
+    appendHashStore(out.select(col(idCol), col("text_hash")), storeTable,
+      storePath, nBuckets)
     out
   }
 
-  /** The read-only half of [[exactIncremental]]: canonical (min-id,
-    * text_hash) batch rows whose text is corpus-new. No writes — callers
-    * that need survivors durable before the store advances (e.g. the
-    * streaming gate, which must order its sink write first for replay
-    * idempotence) sequence [[appendHashStore]] themselves.
+  /** The read-only, key-only form of [[exactIncremental]]: the canonical
+    * (min-id, text_hash) pairs of the batch whose text is corpus-new,
+    * the same rows exactIncremental returns, without the other batch
+    * columns (so only ids and 16-byte hashes cross the exchange). No
+    * writes — callers that need survivors durable before the store
+    * advances (e.g. the streaming gate, which must order its sink write
+    * first for replay idempotence) sequence [[appendHashStore]]
+    * themselves.
     */
   def exactGate(batch: DataFrame, idCol: String, textCol: String,
-                storeTable: String): DataFrame = {
-    val s = batch.sparkSession
-    // unhex(md5) stores the digest as 16 raw bytes, not the 32-char hex
-    // string — halving store state is what makes the scaladoc's
-    // 16-bytes/doc claim literally true
-    val inBatch = batch
-      .select(col(idCol), unhex(md5(col(textCol))).as("text_hash"))
-      .groupBy("text_hash").agg(min(col(idCol)).as(idCol))
-      .select(col(idCol), col("text_hash"))
-    if (!s.catalog.tableExists(storeTable)) inBatch
-    else inBatch.join(s.table(storeTable).hint("merge"),
-      Seq("text_hash"), "left_anti")
+                storeTable: String): DataFrame =
+    notInStore(firstPerText(batch, idCol, textCol, Seq(idCol)), storeTable)
+
+  /** The in-batch half every exact gate shares: one row per distinct
+    * text, its minimum-id row restricted to `carry`, then `text_hash`.
+    * The key is unhex(md5): the digest as 16 raw bytes, not the 32-char
+    * hex string, which halves the store. `min_by` on the text hash is
+    * the one-pass form of `curate`'s tier 2; a single carried column
+    * keeps a primitive buffer (hash aggregate), several need a struct
+    * buffer (sort aggregate).
+    */
+  private def firstPerText(batch: DataFrame, idCol: String, textCol: String,
+                           carry: Seq[String]): DataFrame = {
+    val (value, fields) = carry match {
+      case Seq(c) => (col(c), Seq(col("__first").as(c)))
+      case cs => (struct(cs.map(col): _*),
+        cs.map(c => col("__first").getField(c).as(c)))
+    }
+    batch.groupBy(unhex(md5(col(textCol))).as("text_hash"))
+      .agg(min_by(value, col(idCol)).as("__first"))
+      .select(fields :+ col("text_hash"): _*)
+  }
+
+  /** Rows whose `text_hash` is not in the hash store (all rows when the
+    * store does not exist yet).
+    */
+  private def notInStore(rows: DataFrame, storeTable: String): DataFrame = {
+    val s = rows.sparkSession
+    if (!s.catalog.tableExists(storeTable)) rows
+    else rows.join(s.table(storeTable), Seq("text_hash"), "left_anti")
   }
 
   /** One-time Bloom summary of the corpus hash store — the "index
@@ -414,15 +449,12 @@ object Dedup {
       // re-scans the batch and re-runs the dedup aggregate (verified: 4
       // HashAggregates, no ReusedExchange in the unmaterialized plan),
       // and batch-side work is exactly what the gate is meant to minimize
-      val inBatch = batch
-        .select(col(idCol), unhex(md5(col(textCol))).as("text_hash"))
-        .groupBy("text_hash").agg(min(col(idCol)).as(idCol))
-        .select(col(idCol), col("text_hash"))
+      val inBatch = firstPerText(batch, idCol, textCol, Seq(idCol))
         .withColumn("__maybe", maybeOf(xxhash64(col("text_hash"))))
         .localCheckpoint()
       val proven = inBatch.filter(!col("__maybe")).drop("__maybe")
-      val verified = inBatch.filter(col("__maybe")).drop("__maybe")
-        .join(s.table(storeTable).hint("merge"), Seq("text_hash"), "left_anti")
+      val verified = notInStore(
+        inBatch.filter(col("__maybe")).drop("__maybe"), storeTable)
       proven.unionByName(verified).select(col(idCol), col("text_hash"))
     }
   }
@@ -452,11 +484,13 @@ object Dedup {
     * the batch-local tiers' job ([[exact]]/[[lshCandidates]]/
     * [[canonicalClusters]]) — this op only gates against the corpus.
     *
-    * Store layout: a band table bucketed on (band, bkey) — candidate
-    * generation reads the corpus side co-located and shuffles only the
-    * batch's band rows — and a signature table bucketed on the id for
-    * the verify join. Per-day cost scales with the batch and its
-    * candidate fan-out, never with the accumulated corpus.
+    * Other `batchSig` columns ride along: the surviving rows come back
+    * whole, while the stores receive only `(id, sig)` and the band rows.
+    *
+    * Store layout: a band table bucketed on (band, bkey) and a signature
+    * table bucketed on the id; [[minhashGate]] states how the planner
+    * joins them. Shuffle scales with the batch and its candidate
+    * fan-out; each call scans both store tables once.
     */
   def minhashIncremental(batchSig: DataFrame, idCol: String,
                          storeTable: String, storePath: String,
@@ -470,8 +504,16 @@ object Dedup {
   }
 
   /** The read-only half of [[minhashIncremental]]: batch signature rows
-    * with no stored near-neighbor. No writes — streaming callers sink the
-    * survivors durably first, then [[appendSigStore]].
+    * (every column of `batchSig`) with no stored near-neighbor. No
+    * writes — streaming callers sink the survivors durably first, then
+    * [[appendSigStore]].
+    *
+    * Planner contract: both store joins are plain equi-joins on the
+    * tables' bucket keys, so Spark broadcasts whichever side is under
+    * `spark.sql.autoBroadcastJoinThreshold` (the batch's band rows, or a
+    * small store), and once both sides are past it plans a sort-merge
+    * join that reads the store through its bucketing, with no exchange
+    * on the store side (StoreGatePlanSpec pins both plans).
     *
     * `bandBloom` is the [[exactGateBloom]] pre-filter transplanted to
     * the band join ([[bandStoreBloom]] builds it; same staleness
@@ -502,14 +544,14 @@ object Dedup {
       // (id1, id2)-keyed exchange is the better trade on a per-batch path
       val pairs = batchBands
         .select(col(idCol).as("id1"), col("band"), col("bkey"))
-        .join(s.table(bandsT).hint("merge")
+        .join(s.table(bandsT)
           .select(col(idCol).as("id2"), col("band"), col("bkey")),
           Seq("band", "bkey"))
         .select("id1", "id2")
       val dupIds = pairs
         .join(batchSig.select(col(idCol).as("id1"), col("sig").as("sig1")),
           "id1")
-        .join(s.table(sigsT).hint("merge")
+        .join(s.table(sigsT)
           .select(col(idCol).as("id2"), col("sig").as("sig2")), "id2")
         .filter(graft.functions.SigOverlap.sigOverlap(col("sig1"), col("sig2"))
           >= minEstJaccard)
@@ -519,7 +561,8 @@ object Dedup {
   }
 
   /** The write half of [[minhashIncremental]]: seed or extend the band +
-    * signature stores with this batch's surviving signature rows.
+    * signature stores with this batch's surviving signature rows (only
+    * `idCol` and `sig` are stored; other columns are ignored).
     *
     * `dedupAgainstStore = true` makes the append idempotent under
     * crash-replay: each frame is anti-joined against its table's current
@@ -534,8 +577,8 @@ object Dedup {
     seedOrAppend(bandRowsOf(sigs, idCol, bands), s"${storeTable}_bands",
       s"$storePath/bands", Seq("band", "bkey"), Seq(idCol, "band", "bkey"),
       nBuckets, dedupAgainstStore)
-    seedOrAppend(sigs, s"${storeTable}_sigs", s"$storePath/sigs",
-      Seq(idCol), Seq(idCol), nBuckets, dedupAgainstStore)
+    seedOrAppend(sigs.select(col(idCol), col("sig")), s"${storeTable}_sigs",
+      s"$storePath/sigs", Seq(idCol), Seq(idCol), nBuckets, dedupAgainstStore)
   }
 
   /** Seed-or-append one bucketed store table, shared by the append
@@ -558,7 +601,7 @@ object Dedup {
       val rows =
         if (!dedupAgainstStore) df
         else df.join(
-          s.table(table).hint("merge").select(dedupKeys.map(col): _*),
+          s.table(table).select(dedupKeys.map(col): _*),
           dedupKeys, "left_anti")
       graft.pipelines.Sinks.appendBucketedBy(rows, table, path, bucketKeys,
         nBuckets)
@@ -608,6 +651,16 @@ object Dedup {
     // O(k²) trap the scaladoc history warns about). Values are
     // bit-identical across all three formulations; MinHashSigSpec pins
     // the explode+agg equivalence.
+    withMinhashSig(df.select(col(idCol), col(textCol)), textCol, numHashes,
+      shingleN).select(col(idCol), col("sig"))
+  }
+
+  /** [[minhashSignatures]] keeping every row column: `df` with `sig`
+    * appended (an existing `sig` column is replaced), null-text rows
+    * dropped.
+    */
+  private[graft] def withMinhashSig(df: DataFrame, textCol: String,
+                                    numHashes: Int, shingleN: Int): DataFrame = {
     val p = 2147483647L
     graft.functions.Texts.register(df.sparkSession)
     // null-text docs are dropped, preserving the explode+agg row set
@@ -615,9 +668,8 @@ object Dedup {
     // null sig would give every null-text doc the SAME band key
     // (xxhash64 skips the null slice) — spurious candidate pairs now,
     // and an uncapped ever-growing store bucket in minhashGate later.
-    df.select(col(idCol),
-      graft.functions.MinHashSig
-        .minhashSig(col(textCol), numHashes, shingleN, p).as("sig"))
+    df.withColumn("sig", graft.functions.MinHashSig
+        .minhashSig(col(textCol), numHashes, shingleN, p))
       .filter(col("sig").isNotNull)
   }
 
@@ -1256,14 +1308,14 @@ object Dedup {
       // (id1, id2)-keyed exchange is the better trade on a per-batch path
       val pairs = batchBands
         .select(col(idCol).as("id1"), col("band"), col("bkey"))
-        .join(s.table(bandsT).hint("merge")
+        .join(s.table(bandsT)
           .select(col(idCol).as("id2"), col("band"), col("bkey")),
           Seq("band", "bkey"))
         .select("id1", "id2")
       val dupIds = pairs
         .join(bucketed.select(col(idCol).as("id1"), col(vecCol).as("__v1")),
           "id1")
-        .join(s.table(vecsT).hint("merge")
+        .join(s.table(vecsT)
           .select(col(idCol).as("id2"), col(vecCol).as("__v2")), "id2")
         .filter(graft.functions.Vectors.cosineSim(col("__v1"), col("__v2"))
           >= minCosine)
@@ -1352,13 +1404,13 @@ object Dedup {
       // count and the id set is distinct'd after the hamming filter
       val dupIds = batchBands
         .select(col(idCol).as("id1"), col("band"), col("bkey"))
-        .join(s.table(bandsT).hint("merge")
+        .join(s.table(bandsT)
           .select(col(idCol).as("id2"), col("band"), col("bkey")),
           Seq("band", "bkey"))
         .select("id1", "id2")
         .join(batchFp.select(col(idCol).as("id1"), col("simhash").as("__f1")),
           "id1")
-        .join(s.table(fpsT).hint("merge")
+        .join(s.table(fpsT)
           .select(col(idCol).as("id2"), col("simhash").as("__f2")), "id2")
         .filter(bit_count(col("__f1").bitwiseXOR(col("__f2"))) <= maxDist)
         .select(col("id1").as(idCol)).distinct()

@@ -194,7 +194,7 @@ object SpanDedup {
       if (!s.catalog.tableExists(storeTable))
         inBatch.filter(coalesce(col("bd"), lit(false)))
       else inBatch
-        .join(s.table(storeTable).hint("merge")
+        .join(s.table(storeTable)
           .select(col("win_hash").as("k"), lit(true).as("sd")),
           Seq("k"), "left_outer")
         .filter(coalesce(col("bd"), lit(false)) ||
@@ -276,7 +276,7 @@ object SpanDedup {
       val inStore = grams
         .filter(graft.functions.Blooms.bloomMightContain(
           lit(bloom), xxhash64(col("k"))))
-        .join(s.table(storeTable).hint("merge")
+        .join(s.table(storeTable)
           .select(col("win_hash").as("k")), Seq("k"), "left_semi")
         .select(col("doc_id"), col("pos"))
       mergeIslands(inBatch.unionByName(inStore)
@@ -296,7 +296,7 @@ object SpanDedup {
     val hashes = windowKeys(batch, w, useHashKey = true)
       .select(col("k").as("win_hash")).distinct()
     if (!s.catalog.tableExists(storeTable)) hashes
-    else hashes.join(s.table(storeTable).hint("merge"),
+    else hashes.join(s.table(storeTable),
       Seq("win_hash"), "left_anti")
   }
 

@@ -215,8 +215,9 @@ object Segments {
   /** Row-level incremental gate: a segment is kept iff it is the first
     * occurrence WITHIN the batch (by (doc_id, seg_no)) and its hash is
     * not in the persisted store. The store side is bucketed on the
-    * hash ([[graft.dedup.Dedup.appendHashStore]] layout), so the probe
-    * join reads it co-located — only the batch's segment rows shuffle.
+    * hash ([[graft.dedup.Dedup.appendHashStore]] layout): the planner
+    * broadcasts a small store and reads a large one through its
+    * bucketing — either way only the batch's segment rows shuffle.
     *
     * The first-in-batch rule keeps the h-keyed `row_number` window that
     * [[dedupSegments]] dropped (r12): here the hot-group bound is a
@@ -237,7 +238,7 @@ object Segments {
       if (!s.catalog.tableExists(storeTable))
         rows.withColumn("inStore", lit(false))
       else rows.join(
-        s.table(storeTable).hint("merge")
+        s.table(storeTable)
           .select(col("text_hash").as("h"), lit(true).as("inStore")),
         Seq("h"), "left_outer")
     marked.withColumn("isKept",
@@ -278,7 +279,7 @@ object Segments {
     val novel =
       if (!s.catalog.tableExists(storeTable)) winners
       else winners.join(
-        s.table(storeTable).hint("merge")
+        s.table(storeTable)
           .select(col("text_hash").as("h")),
         Seq("h"), "left_anti")
     novel.select(col("h"), col("__first.doc_id").as("doc_id"),
@@ -326,7 +327,7 @@ object Segments {
       val proven = rows.filter(!col("__maybe")).drop("__maybe")
         .withColumn("inStore", lit(false))
       val verified = rows.filter(col("__maybe")).drop("__maybe")
-        .join(s.table(storeTable).hint("merge")
+        .join(s.table(storeTable)
           .select(col("text_hash").as("h"), lit(true).as("inStore")),
           Seq("h"), "left_outer")
       proven.unionByName(verified, allowMissingColumns = false)

@@ -161,36 +161,45 @@ object CorpusPipeline {
     *
     *   1. same expression-level filters (narrow map, no shuffle);
     *   2. exact novelty gate vs the corpus hash store
-    *      (Dedup.exactIncremental — also drops in-batch exact dups);
+    *      (Dedup.exactIncremental — also drops in-batch exact dups, and
+    *      carries the surviving rows in its one checkpoint);
     *   3. near-dup novelty gate vs the corpus signature store
-    *      (Dedup.minhashIncremental);
+    *      (Dedup.minhashIncremental over those rows, signed once);
     *   4. token accounting on what survived.
     *
-    * Each gate's store is bucketed so its corpus side never reshuffles:
-    * per-day cost scales with the batch, never the corpus. In-batch
-    * NEAR-dups are deliberately left to the next full [[curate]] sweep —
-    * resolving them needs the CC tier, and a daily batch is small enough
-    * that the weekly/monthly full sweep catches them.
+    * Output: the near-dup gate's survivors, with every batch column in
+    * input order followed by `tokens`. Batch rows with the same text
+    * (including repeats of one doc_id) yield ONE row, the minimum
+    * doc_id's. Rows of one doc_id with different texts are gated
+    * together: the near-dup gate drops every row of an id it matches.
+    * The stores receive only
+    * `(doc_id, text_hash)` and `(doc_id, sig)` plus band rows. The batch
+    * must not carry `text_hash` or `sig` columns (the gates add them).
+    *
+    * Shuffle is O(batch): the stores are bucketed, and Spark either
+    * broadcasts the smaller side or reads a large store through its
+    * bucketing (see Dedup.minhashGate). Each gate still scans its whole
+    * store once per batch. In-batch NEAR-dups are deliberately left to
+    * the next full [[curate]] sweep — resolving them needs the CC tier,
+    * and a daily batch is small enough that the weekly/monthly full sweep
+    * catches them.
     */
   def curateIncremental(batch: DataFrame, storeTable: String,
                         storePath: String, cfg: Config = Config()): DataFrame = {
+    require(!batch.columns.contains("sig"),
+      "curateIncremental: the batch must not carry a sig column " +
+        "(the near-dup gate adds it)")
     graft.functions.Texts.register(batch.sparkSession) // stopword_counts
     val filtered = batch
       .filter(graft.functions.CurateTier1
         .tier1Keep(col("text"), cfg.langs, cfg.minQuality))
-      .localCheckpoint() // consumed by both gates' joins below
-    val exactNew = filtered.join(
-      Dedup.exactIncremental(filtered, "doc_id", "text",
-        s"${storeTable}_exact", s"$storePath/exact").select("doc_id")
-        .hint("shuffle_hash"),
-      Seq("doc_id"), "left_semi")
-    val novel = Dedup.minhashIncremental(
-      Dedup.minhashSignatures(exactNew, "doc_id", "text",
-        cfg.minhashBits, cfg.shingleN),
-      "doc_id", s"${storeTable}_mh", s"$storePath/mh",
-      cfg.lshBands, cfg.minEstJaccard)
-    exactNew.join(novel.select("doc_id").hint("shuffle_hash"),
-        Seq("doc_id"), "left_semi")
+    val exactNew = Dedup.exactIncremental(filtered, "doc_id", "text",
+      s"${storeTable}_exact", s"$storePath/exact")
+    val signed = Dedup.withMinhashSig(exactNew.drop("text_hash"), "text",
+      cfg.minhashBits, cfg.shingleN)
+    Dedup.minhashIncremental(signed, "doc_id", s"${storeTable}_mh",
+        s"$storePath/mh", cfg.lshBands, cfg.minEstJaccard)
+      .drop("sig")
       .withColumn("tokens", TextAnalysis.tokenCountRe(col("text")))
   }
 }

@@ -63,8 +63,10 @@ object Sinks {
     * bucketBy uses the same Murmur3 hash partitioning), so each write
     * task holds exactly one bucket and each bucket gets ONE file —
     * without it every task writes a file per bucket it sees (tasks x
-    * buckets small files), and multi-file buckets also forfeit the
-    * sorted-scan optimization.
+    * buckets small files), each of which every later scan must open.
+    * The write-time sort is not a scan ordering: on Spark 4.1 a bucketed
+    * scan reports no output ordering even with one file per bucket, so
+    * a sort-merge join still sorts the bucketed side.
     */
   def reloadBucketed(df: DataFrame, table: String, path: String,
                      key: String, nBuckets: Int): Unit =
@@ -93,9 +95,9 @@ object Sinks {
       .option("path", path)
       .saveAsTable(table)
 
-  /** Rewrite an append-grown bucketed table back to one file per bucket
-    * (restoring the sorted-scan optimization appends forfeit). Run on the
-    * cadence file counts dictate — daily appends, weekly compaction is
+  /** Rewrite an append-grown bucketed table back to one file per bucket,
+    * so every scan opens one file per bucket instead of one per bucket
+    * per append. Run on the cadence file counts dictate — daily appends, weekly compaction is
     * the usual shape for the incremental dedup stores. The input is
     * checkpointed first so the overwrite cannot delete its own input
     * mid-read; like upsertByKey, a crash DURING the rewrite needs the

@@ -18,6 +18,12 @@ import org.apache.spark.sql.functions.{broadcast, col, count, countDistinct, lit
   * reader-visible missing-path window (the rename-swap gap
   * [[graft.pipelines.Sinks.upsertByKey]]'s whole-table shape has).
   *
+  * Single writer per store: the contract also covers the column-set
+  * guard, which runs BEFORE the commit takes the writer lease and may
+  * rewrite a ghost `_schema.json` column (see the self-heal below). Run
+  * one writer per store at a time; the lease detects a second writer
+  * only when it reaches the commit.
+  *
   * Shape — the transactional-format MERGE shape, re-expressed on the
   * dailystore's day partitioning:
   *
@@ -258,6 +264,12 @@ object DailyStoreMerge {
     // naming both files — so the guard self-heals instead of requiring
     // a manual sidecar edit. A diverging column that DOES exist in a
     // file or in meta still fails exactly as before.
+    // SINGLE-WRITER REQUIREMENT: this heal runs before commit() takes
+    // the writer lease, and it turns the read-only guard into a sidecar
+    // rewrite. It is safe only when no other writer works on the store:
+    // a concurrent evolving merge inside its stamp-before-commit window
+    // has a reserved column that is in no file and not in meta yet, so
+    // this heal would retire it and invalidate that merge's guard.
     val storeCols =
       if (guardOk(inferredCols) || sidecarCols.isEmpty) inferredCols
       else {

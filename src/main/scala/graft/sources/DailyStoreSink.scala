@@ -368,6 +368,13 @@ class DailyStoreConcurrentWriteException(msg: String)
   * self-heals it the same way. The TTL bounds the COMMIT window
   * (driver-side directory surgery — seconds), not the write job; the
   * default is generous for that.
+  *
+  * The lease covers the commit, not everything a writer does before
+  * it: [[DailyStoreMerge]]'s column-set guard and its ghost-column
+  * self-heal (a `_schema.json` rewrite) run before `commit()`. They
+  * rely on the contract itself — one writer per store at a time — and
+  * a second writer breaking it is detected only when it reaches the
+  * lease.
   */
 private[sources] object WriterLease {
   val DefaultTtlMs: Long = 10 * 60 * 1000L

@@ -4,6 +4,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
@@ -19,23 +20,29 @@ import org.apache.spark.sql.SparkSession
   * One untimed warm-up pass, then `reps` rep-major timed passes (like
   * graft.Bench, so a load spike hits one rep of every query). Prints
   * one JSON line `{"queries":{name:medianSec},"jobs":{name:n},
-  * "errors":{name:msg},"foreign_cores":x}`: `jobs` counts the Spark jobs
-  * of the median rep (the per-job dispatch floor), keyed by a per-query
-  * local property; a query that throws in a timed rep appears only in
-  * `errors`; names outside [[graft.SparkEntry.queries]] fail before the
-  * session starts. `SPARK_GRAFT_SET` (comma list) defaults to the whole
-  * catalog; `SPARK_GRAFT_CPUS` (default 32) sizes `local[n]`.
+  * "codegen":{name:n},"errors":{name:msg},"foreign_cores":x}`: `jobs`
+  * counts the Spark jobs of the median rep (the per-job dispatch floor),
+  * keyed by a per-query local property; `codegen` counts the Janino
+  * compiles of the median rep (the JVM-wide count of
+  * `CodegenMetrics.METRIC_COMPILATION_TIME`, so nonzero after the
+  * warm-up means the query's plans do not fit Spark's codegen cache);
+  * a query that throws in a timed rep appears only in `errors`; names
+  * outside [[graft.SparkEntry.queries]] fail before the session starts.
+  * `SPARK_GRAFT_SET` (comma list) defaults to the whole catalog;
+  * `SPARK_GRAFT_CPUS` (default 32) sizes `local[n]`.
   */
 object TimeSet {
 
   /** Local property naming the query a job belongs to. */
   private val QueryProp = "graft.timeset.query"
 
-  /** Medians (seconds, set order), the median rep's job counts,
-    * timed-rep failures, and [[Timing.withForeignCores]] of the block.
+  /** Medians (seconds, set order), the median rep's job and compile
+    * counts, timed-rep failures, and [[Timing.withForeignCores]] of the
+    * block.
     */
   final case class Result(medians: Seq[(String, Double)],
                           jobs: Map[String, Int],
+                          codegen: Map[String, Long],
                           errors: Map[String, String],
                           foreignCores: Double) {
     def line: String = {
@@ -43,6 +50,8 @@ object TimeSet {
       jobj(Seq(
         "queries" -> jobj(medians.map { case (n, s) => n -> f"$s%.3f" }),
         "jobs" -> jobj(medians.map { case (n, _) => n -> jobs(n).toString }),
+        "codegen" -> jobj(medians.map { case (n, _) =>
+          n -> codegen(n).toString }),
         "errors" -> jobj(errors.toSeq.map { case (n, e) => n -> jstr(e) }),
         "foreign_cores" -> f"$foreignCores%.2f"))
     }
@@ -89,38 +98,52 @@ object TimeSet {
     }
   }
 
+  /** Janino compiles so far in this JVM (every codegen cache miss). */
+  private def compiles(): Long =
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** One untimed warm-up pass, then `reps` rep-major timed passes. */
   def run(spark: SparkSession, names: Seq[String], dir: String,
           reps: Int): Result = {
     requireKnown(names)
+    time(spark, names.map(n => n -> (() =>
+      Timing.materialize(graft.SparkEntry.queries(n)(spark, dir)))), reps)
+  }
+
+  /** [[run]]'s loop over named query bodies. */
+  private[tools] def time(spark: SparkSession,
+                          queries: Seq[(String, () => Unit)],
+                          reps: Int): Result = {
     require(reps > 0, s"reps must be positive: $reps")
-    def query(n: String): Unit =
-      Timing.materialize(graft.SparkEntry.queries(n)(spark, dir))
-    names.foreach { n =>
-      try query(n) catch { case e: Throwable =>
+    queries.foreach { case (n, query) =>
+      try query() catch { case e: Throwable =>
         System.err.println(s"[timeset] warmup $n failed: ${e.toString.take(200)}") }
     }
     val counter = new JobCounter(spark)
     spark.sparkContext.addSparkListener(counter)
     try {
-      val times = mutable.Map.empty[String, mutable.Buffer[(Double, Int)]]
+      // (seconds, rep, compiles) per timed rep
+      val times = mutable.Map.empty[String, mutable.Buffer[(Double, Int, Long)]]
       val errors = mutable.LinkedHashMap.empty[String, String]
       val (_, foreign) = Timing.withForeignCores {
-        for (rep <- 1 to reps; n <- names if !errors.contains(n)) {
+        for (rep <- 1 to reps; (n, query) <- queries if !errors.contains(n)) {
+          val c0 = compiles()
           val t0 = System.nanoTime()
           try {
-            counter.under(s"$n#$rep")(query(n))
+            counter.under(s"$n#$rep")(query())
             val sec = (System.nanoTime() - t0) / 1e9
-            times.getOrElseUpdate(n, mutable.Buffer.empty) += (sec -> rep)
+            times.getOrElseUpdate(n, mutable.Buffer.empty) +=
+              ((sec, rep, compiles() - c0))
           } catch { case e: Throwable =>
             errors(n) = e.toString.take(200) }
         }
       }
       val jobs = counter.counted()
-      val ok = names.filterNot(errors.contains)
+      val ok = queries.map(_._1).filterNot(errors.contains)
       val median = ok.map(n => n -> times(n).sortBy(_._1).apply(reps / 2)).toMap
       Result(ok.map(n => n -> median(n)._1),
         ok.map(n => n -> jobs.getOrElse(s"$n#${median(n)._2}", 0)).toMap,
+        ok.map(n => n -> median(n)._3).toMap,
         errors.toMap, foreign)
     } finally spark.sparkContext.removeSparkListener(counter)
   }

@@ -123,6 +123,94 @@ class CorpusPipelineSpec extends SparkSpec {
       spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
+  private def dropIncrementalStores(table: String): Unit =
+    for (t <- Seq(s"${table}_exact", s"${table}_mh_bands", s"${table}_mh_sigs"))
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+
+  private def freshIncremental(tag: String): (String, String) =
+    (s"spec_${tag}_${System.nanoTime()}", java.nio.file.Files
+      .createTempDirectory(s"graft_${tag}_spec").toString)
+
+  test("curateIncremental: extra batch columns survive in input order, then tokens") {
+    val (table, path) = freshIncremental("curinc_cols")
+    val cfg = CorpusPipeline.Config(langs = Seq("en", "es", "fr", "de"))
+    val batch = graft.Tables(spark, sf, "documents")
+      .select("source", "doc_id", "lang", "text", "n_chars")
+    val out = CorpusPipeline.curateIncremental(batch, table, path, cfg)
+    assert(out.columns.toSeq == batch.columns.toSeq :+ "tokens")
+    val got = out.drop("tokens").collect()
+    assert(got.nonEmpty)
+    val input = batch.collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
+    got.foreach(r => assert(r == input(r.getAs[Long]("doc_id"))))
+    dropIncrementalStores(table)
+  }
+
+  test("curateIncremental: a repeated (doc_id, text) row yields one output row") {
+    val (table, path) = freshIncremental("curinc_rep")
+    val cfg = CorpusPipeline.Config(langs = Seq("en"), minQuality = 0.3)
+    val base = "the quick brown fox jumps over the lazy dog and the cat " * 4
+    val other = "the completely different corpus of text about engines and the data " * 4
+    val batch = Seq((7L, base, "a"), (7L, base, "a"), (8L, other, "b"))
+      .toDF("doc_id", "text", "tag")
+    val out = CorpusPipeline.curateIncremental(batch, table, path, cfg)
+    assert(out.select("doc_id").as[Long].collect().sorted.toSeq == Seq(7L, 8L))
+    assert(spark.table(s"${table}_exact").count() == 2)
+    assert(spark.table(s"${table}_mh_sigs").count() == 2)
+    dropIncrementalStores(table)
+  }
+
+  test("curateIncremental over 3 batches equals the public gate composition") {
+    // the reference: tier-1 filter, then exactIncremental ->
+    // minhashSignatures -> minhashIncremental on the same inputs
+    val cfg = CorpusPipeline.Config(langs = Seq("en", "es", "fr", "de"),
+      minQuality = 0.3)
+    val docs = graft.Tables(spark, sf, "documents").select("doc_id", "text")
+    val part = pmod(col("doc_id"), lit(3))
+    val b0 = docs.filter(part === 0)
+    val b1 = docs.filter(part === 1)
+      .unionByName(b0.limit(20).select((col("doc_id") + 10000).as("doc_id"),
+        col("text")))                                    // corpus copies
+      .unionByName(docs.filter(part === 1).limit(5)
+        .select((col("doc_id") + 20000).as("doc_id"), col("text"))) // in-batch
+    val b2 = docs.filter(part === 2)
+      .unionByName(b1.limit(20).select((col("doc_id") + 30000).as("doc_id"),
+        regexp_replace(col("text"), "^\\S+", "zzz").as("text"))) // near copies
+    val batches = Seq(b0, b1, b2).map(_.localCheckpoint())
+
+    val (table, path) = freshIncremental("curinc_ref")
+    val (ref, refPath) = freshIncremental("curinc_ref_oracle")
+    graft.functions.Texts.register(spark)
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val got = CorpusPipeline.curateIncremental(b, table, path, cfg)
+        .select("doc_id").as[Long].collect().sorted.toSeq
+      val exactNew = Dedup.exactIncremental(
+        b.filter(graft.functions.CurateTier1
+          .tier1Keep(col("text"), cfg.langs, cfg.minQuality)),
+        "doc_id", "text", s"${ref}_exact", s"$refPath/exact")
+      val want = Dedup.minhashIncremental(
+          Dedup.minhashSignatures(exactNew, "doc_id", "text",
+            cfg.minhashBits, cfg.shingleN),
+          "doc_id", s"${ref}_mh", s"$refPath/mh", cfg.lshBands,
+          cfg.minEstJaccard)
+        .select("doc_id").as[Long].collect().sorted.toSeq
+      assert(got.nonEmpty, s"batch $i")
+      assert(got == want, s"batch $i")
+    }
+    def rows(t: String): Seq[String] = spark.table(t).collect().toSeq
+      .map(_.toSeq.map {
+        case b: Array[Byte] => b.toSeq.toString
+        case a: scala.collection.Seq[_] => a.toString
+        case v => String.valueOf(v)
+      }.mkString("|")).sorted
+    for (suffix <- Seq("_exact", "_mh_bands", "_mh_sigs")) {
+      assert(spark.table(s"$table$suffix").columns.toSeq ==
+        spark.table(s"$ref$suffix").columns.toSeq, suffix)
+      assert(rows(s"$table$suffix") == rows(s"$ref$suffix"), suffix)
+    }
+    dropIncrementalStores(table)
+    dropIncrementalStores(ref)
+  }
+
   test("curate on the real corpus shrinks it and is deterministic") {
     val docs = graft.Tables(spark, sf, "documents")
     val out1 = CorpusPipeline.curate(docs, CorpusPipeline.Config(

@@ -3,6 +3,7 @@ package graft.tools
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.SparkSpec
@@ -50,11 +51,38 @@ class TimeSetSpec extends SparkSpec {
     }
   }
 
+  /** Janino compiles while `body` runs, read straight off Spark's
+    * codegen metric.
+    */
+  private def compilesDuring(body: => Unit): Long = {
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+  }
+
+  test("codegen counts equal a direct compile-count delta") {
+    // a literal that changes on every call makes every run generate new
+    // code, so the median rep must compile; the catalog query's plans
+    // are cached after the warm-up, and one more run compiles the same
+    val seq = new java.util.concurrent.atomic.AtomicLong(1000L)
+    def fresh(): Unit = Timing.materialize(
+      spark.range(8).selectExpr(s"id * ${seq.incrementAndGet()} AS x"))
+    def q03(): Unit =
+      Timing.materialize(graft.SparkEntry.queries(names.head)(spark, sf))
+    val r = TimeSet.time(spark,
+      Seq("fresh" -> (() => fresh()), names.head -> (() => q03())), 1)
+    val direct = compilesDuring(fresh())
+    assert(direct > 0)
+    assert(r.codegen("fresh") == direct)
+    assert(r.codegen(names.head) == compilesDuring(q03()))
+  }
+
   test("the output line is JSON with queries, jobs and foreign_cores") {
     val json = new ObjectMapper().readTree(TimeSet.run(spark, names, sf, 1).line)
     names.foreach { n =>
       assert(json.get("queries").get(n).asDouble() > 0.0)
       assert(json.get("jobs").get(n).asInt() > 0)
+      assert(json.get("codegen").get(n).isIntegralNumber)
     }
     assert(json.get("foreign_cores").isNumber)
     assert(json.get("errors").size() == 0)
