@@ -519,8 +519,8 @@ object Bench {
       // r16: the SPAN family — window-hash store probes (the smallest
       // per-unit store state, 8 bytes/distinct window); the gate is the
       // fused-scan + two one-row-per-key mark joins of
-      // SpanDedup.statsIncremental. Methodology caveat (r16 Bloom A/B):
-      // ScaleUp's replica corpus adds no NEW distinct windows, so the
+      // SpanDedup.statsIncremental. Methodology caveat: ScaleUp's
+      // replica corpus adds no NEW distinct windows, so the
       // distinct-keyed stores (exact/segment/span) are replica-invariant
       // by construction — their small-vs-large datum pins the probe's
       // insensitivity to the batch/store SCAN, while the doc-keyed
@@ -536,26 +536,6 @@ object Bench {
       val spanLarge = seedSpan("spanlarge", largeDir)
       def spanSec(table: String): Double = timed(() =>
         graft.dedup.SpanDedup.statsIncremental(batch, 8, table).count())
-      val spanBloom = graft.dedup.SpanDedup.spanStoreBloom(spark, spanLarge,
-        2000000L)
-      def spanBloomSec(table: String): Double = timed(() =>
-        graft.dedup.SpanDedup.statsIncrementalBloom(batch, 8, table,
-          spanBloom.get).count())
-
-      // r14: the LARGE band stores are additionally probed through the
-      // Bloom pre-filter path — the corpus-scale shape (the plain gates
-      // above pay the full co-located band scan, which is exactly the
-      // term that grows with the store; the filter bounds it to the
-      // colliding fraction). Filter builds are store-summary one-timers
-      // and run untimed, like the seeds.
-      val mhBloom = graft.dedup.Dedup.bandStoreBloom(spark, mhLarge, 100000L)
-      def mhBloomSec(table: String): Double = timed(() =>
-        graft.dedup.Dedup.minhashGate(batchSig, "doc_id", table,
-          bands = 4, minEstJaccard = 0.9, bandBloom = mhBloom).count())
-      val embBloom = graft.dedup.Dedup.bandStoreBloom(spark, embLarge, 100000L)
-      def embBloomSec(table: String): Double = timed(() =>
-        graft.dedup.Dedup.embeddingGate(vecBatch, "vec_id", "embedding",
-          table, minCosine = 0.95, bandBloom = embBloom).count())
 
       // r18: the FLUENCY gate family — the model-based quality gate's
       // store analogue is the persisted MODEL (trained on the small vs
@@ -590,15 +570,12 @@ object Bench {
         "incgate1k_large_store_sec" -> exactSec(large),
         "mhgate1k_small_store_sec" -> mhSec(mhSmall),
         "mhgate1k_large_store_sec" -> mhSec(mhLarge),
-        "mhgate1k_large_store_bloom_sec" -> mhBloomSec(mhLarge),
         "embgate1k_small_store_sec" -> embSec(embSmall),
         "embgate1k_large_store_sec" -> embSec(embLarge),
-        "embgate1k_large_store_bloom_sec" -> embBloomSec(embLarge),
         "seggate1k_small_store_sec" -> segSec(segSmall),
         "seggate1k_large_store_sec" -> segSec(segLarge),
         "spangate1k_small_store_sec" -> spanSec(spanSmall),
-        "spangate1k_large_store_sec" -> spanSec(spanLarge),
-        "spangate1k_large_store_bloom_sec" -> spanBloomSec(spanLarge))
+        "spangate1k_large_store_sec" -> spanSec(spanLarge))
     } catch { case e: Throwable =>
       System.err.println(s"[bench] incremental-gate scale check failed: " +
         e.toString.take(200))

@@ -34,6 +34,12 @@ import org.apache.spark.sql.functions._
   * collisions at the default 2^61 modulus are the usual negligible
   * caveat. Probe docs present verbatim in the corpus are flagged by
   * construction (they share all their own shingles).
+  *
+  * This is the library's one Bloom-filtered operator, and there the
+  * filter is the algorithm: without it every corpus shingle would
+  * enter the verify join. The incremental store gates
+  * ([[Dedup.exactGate]] and its siblings) have no prefilter — their
+  * store anti-join is the whole gate.
   */
 object Decontaminate {
 

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
@@ -157,323 +157,19 @@ object Dedup {
     else rows.join(s.table(storeTable), Seq("text_hash"), "left_anti")
   }
 
-  /** One-time Bloom summary of the corpus hash store — the "index
-    * build" for [[exactGateBloom]].
-    *
-    * STALENESS CONTRACT: the gate is exact only while the filter covers
-    * EVERY row of the store it gates against — a key appended after the
-    * build would probe "definitely new" (a false NEGATIVE relative to
-    * the grown store) and admit its duplicates around the verify join.
-    * An incremental pipeline therefore maintains the filter instead of
-    * rebuilding: Bloom filters of equal layout OR-merge, so after
-    * [[appendHashStore]] fold the batch's own filter in with
-    * [[bloomOfHashes]] + [[mergeBlooms]] — no store rescan. Full
-    * rebuilds belong with store compaction (when fill grows past the
-    * target false-positive rate).
-    *
-    * `bitsPerItem = 8` gives ~2% false positives; a SINGLE filter must
-    * fit `spark.sql.optimizer.runtime.bloomFilter.maxNumBits` (default
-    * 64M bits = 8 MB ≈ 8M store docs) — past that, use
-    * [[storeBloomSharded]], which removes the ceiling by holding one
-    * filter per hash shard. Returns None for a missing store.
-    */
-  def storeBloom(spark: org.apache.spark.sql.SparkSession, storeTable: String,
-                 expectedItems: Long, bitsPerItem: Int = 8): Option[Array[Byte]] =
-    if (!spark.catalog.tableExists(storeTable)) None
-    else bloomOfHashes(spark.table(storeTable), expectedItems, bitsPerItem)
-
-  /** Bloom filter over a frame's `text_hash` column (the distributed
-    * half of filter maintenance: one map-side-combined aggregate, only
-    * serialized filters travel). Layout is (expectedItems, bitsPerItem)
-    * — merge partners must match ([[mergeBlooms]]). None for an empty
-    * frame (the aggregate yields no filter over zero rows).
-    */
-  def bloomOfHashes(keys: DataFrame, expectedItems: Long,
-                    bitsPerItem: Int = 8): Option[Array[Byte]] =
-    bloomOfKeys(keys, Seq("text_hash"), expectedItems, bitsPerItem)
-
-  /** [[bloomOfHashes]] over an arbitrary key-column tuple, hashed with
-    * `xxhash64(keyCols...)` — the probe side must hash the same columns
-    * in the same order.
-    */
-  def bloomOfKeys(df: DataFrame, keyCols: Seq[String], expectedItems: Long,
-                  bitsPerItem: Int = 8): Option[Array[Byte]] =
-    Option(df
-      .agg(graft.functions.Blooms.bloomAgg(xxhash64(keyCols.map(col): _*),
-        expectedItems, expectedItems * bitsPerItem).as("bf"))
-      .head().getAs[Array[Byte]]("bf"))
-
-  /** Bloom summary of a banded store's `_bands` table keys — the build
-    * half of the `bandBloom` pre-filter on [[minhashGate]],
-    * [[simhashGate]], and [[embeddingGate]] (all three stores share the
-    * `_bands` layout and (band, bkey) key). Same staleness contract as
-    * [[storeBloom]]: maintain across appends with
-    * `bloomOfKeys(<band rows of survivors>, Seq("band", "bkey"), ...)`
-    * + [[mergeBlooms]]. None for a missing store.
-    */
-  def bandStoreBloom(spark: org.apache.spark.sql.SparkSession,
-                     storeTable: String, expectedItems: Long,
-                     bitsPerItem: Int = 8): Option[Array[Byte]] =
-    if (!spark.catalog.tableExists(s"${storeTable}_bands")) None
-    else bloomOfKeys(spark.table(s"${storeTable}_bands"),
-      Seq("band", "bkey"), expectedItems, bitsPerItem)
-
-  /** A store filter bound to the store snapshot it was built from:
-    * `storeRows` is the store's row count at build time, the cheap
-    * version stamp [[exactGateBloomChecked]] verifies before gating.
-    * Nothing in the raw `Array[Byte]` API binds filter to snapshot — a
-    * stale filter (store appended, merge step forgotten) silently
-    * admits duplicates around the verify join — so pipelines that want
-    * staleness to fail LOUDLY carry this wrapper instead and maintain
-    * it with [[foldVersionedBloom]].
-    */
-  final case class VersionedBloom(filter: Array[Byte], storeRows: Long)
-
-  /** [[storeBloom]] returning a [[VersionedBloom]]: the filter and the
-    * row-count stamp come from ONE aggregate pass over the store.
-    */
-  def storeBloomVersioned(spark: org.apache.spark.sql.SparkSession,
-                          storeTable: String, expectedItems: Long,
-                          bitsPerItem: Int = 8): Option[VersionedBloom] =
-    if (!spark.catalog.tableExists(storeTable)) None
-    else {
-      val row = spark.table(storeTable)
-        .agg(graft.functions.Blooms.bloomAgg(xxhash64(col("text_hash")),
-          expectedItems, expectedItems * bitsPerItem).as("bf"),
-          count(lit(1)).as("n")).head()
-      Option(row.getAs[Array[Byte]]("bf"))
-        .map(VersionedBloom(_, row.getAs[Long]("n")))
-    }
-
-  /** [[exactGateBloom]] with the staleness contract ENFORCED at the API
-    * boundary: the store's current row count must equal the filter's
-    * snapshot stamp, else this throws instead of silently admitting
-    * duplicates. The check is one count job over the store — parquet
-    * count() resolves from file metadata, no data read, but it is still
-    * a job per gate call: use the checked form where corruption risk
-    * outweighs that job (or on a debug cadence), the raw
-    * [[exactGateBloom]] where the maintenance loop is already
-    * spec-pinned (e.g. [[graft.streaming.StreamingOps
-    * .bloomNoveltyGate]], whose closure owns the fold).
-    */
-  def exactGateBloomChecked(batch: DataFrame, idCol: String, textCol: String,
-                            storeTable: String,
-                            bloom: VersionedBloom): DataFrame = {
-    val s = batch.sparkSession
-    if (s.catalog.tableExists(storeTable)) {
-      val now = s.table(storeTable).count()
-      require(now == bloom.storeRows,
-        s"stale store Bloom filter for $storeTable: built at " +
-          s"${bloom.storeRows} store rows, store now has $now — fold every " +
-          "appended batch in with foldVersionedBloom (see the storeBloom " +
-          "staleness contract) or rebuild with storeBloomVersioned")
-    }
-    exactGateBloom(batch, idCol, textCol, storeTable, bloom.filter)
-  }
-
-  /** Maintenance step for a [[VersionedBloom]] after [[appendHashStore]]:
-    * folds the appended keys into the filter and advances the snapshot
-    * stamp, from one aggregate pass over the appended frame. Layout
-    * (`expectedItems`, `bitsPerItem`) must match the build call.
-    */
-  def foldVersionedBloom(bloom: VersionedBloom, appended: DataFrame,
-                         expectedItems: Long,
-                         bitsPerItem: Int = 8): VersionedBloom = {
-    val row = appended
-      .agg(graft.functions.Blooms.bloomAgg(xxhash64(col("text_hash")),
-        expectedItems, expectedItems * bitsPerItem).as("bf"),
-        count(lit(1)).as("n")).head()
-    Option(row.getAs[Array[Byte]]("bf")) match {
-      case None => bloom // empty append: nothing changed
-      case Some(bf) => VersionedBloom(mergeBlooms(bloom.filter, bf),
-        bloom.storeRows + row.getAs[Long]("n"))
-    }
-  }
-
-  /** Sharded [[storeBloom]]: one filter per hash shard, removing the
-    * single-filter conf ceiling (`spark.sql.optimizer.runtime
-    * .bloomFilter.maxNumBits`, default 64M bits ≈ 8M docs at 8
-    * bits/item). Keys route to shard `pmod(xxhash64(text_hash),
-    * nShards)` on BOTH the build side (here) and the probe side
-    * ([[shardedMightContain]]), so every key is looked up in exactly
-    * the filter it was inserted into and the no-false-negative
-    * property holds shard-wise — a 10⁹-doc store is 128 shards of
-    * 8 MB, each under the conf ceiling. Same staleness contract as
-    * [[storeBloom]]; maintain across appends with
-    * [[bloomOfHashesSharded]] + [[mergeShardedBlooms]] (shard counts
-    * must match — changing nShards is a rebuild, schedule it with
-    * compaction). None for a missing store.
-    */
-  def storeBloomSharded(spark: org.apache.spark.sql.SparkSession,
-                        storeTable: String, expectedItems: Long,
-                        nShards: Int, bitsPerItem: Int = 8)
-      : Option[Seq[Array[Byte]]] =
-    if (!spark.catalog.tableExists(storeTable)) None
-    else Some(bloomOfHashesSharded(spark.table(storeTable), expectedItems,
-      nShards, bitsPerItem))
-
-  /** Sharded [[bloomOfHashes]]: one aggregate pass grouped on the shard
-    * key builds all `nShards` filters distributed (only serialized
-    * filters reach the driver — nShards × filter bytes). Shards with no
-    * keys get an empty filter of the same layout, so probe routing and
-    * shard-wise merges stay total.
-    */
-  def bloomOfHashesSharded(keys: DataFrame, expectedItems: Long,
-                           nShards: Int, bitsPerItem: Int = 8)
-      : Seq[Array[Byte]] = {
-    require(nShards >= 1, "nShards must be >= 1")
-    val perShard = math.max(64L, expectedItems / nShards)
-    val h = xxhash64(col("text_hash"))
-    val built = keys
-      .groupBy(pmod(h, lit(nShards.toLong)).as("__shard"))
-      .agg(graft.functions.Blooms
-        .bloomAgg(h, perShard, perShard * bitsPerItem).as("bf"))
-      .collect()
-      .map(r => r.getAs[Long]("__shard").toInt -> r.getAs[Array[Byte]]("bf"))
-      .toMap
-    (0 until nShards).map(i =>
-      built.getOrElse(i, emptyBloom(perShard, perShard * bitsPerItem)))
-  }
-
-  /** Serialized empty filter of the given layout (for key-less shards:
-    * probing it is always "definitely new", merging it is identity).
-    */
-  private def emptyBloom(expectedItems: Long, numBits: Long): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    org.apache.spark.util.sketch.BloomFilter.create(expectedItems, numBits)
-      .writeTo(out)
-    out.toByteArray
-  }
-
-  /** Membership probe over sharded filters: routes each hash to its
-    * shard's filter through a codegen CASE chain — every branch probes
-    * ONE driver-held foldable filter, the shape Spark's
-    * `BloomFilterMightContain` requires (a row-dependent filter operand
-    * would not be foldable). nShards branches of a flat conditional per
-    * row; route with the same hash that was inserted ([[
-    * bloomOfHashesSharded]] routes and inserts `xxhash64(text_hash)`).
-    */
-  def shardedMightContain(shards: Seq[Array[Byte]], hash: Column): Column = {
-    require(shards.nonEmpty, "no shard filters")
-    val shard = pmod(hash, lit(shards.size.toLong))
-    shards.zipWithIndex.foldRight(lit(false)) { case ((bf, i), acc) =>
-      when(shard === i.toLong,
-        graft.functions.Blooms.bloomMightContain(lit(bf), hash))
-        .otherwise(acc)
-    }
-  }
-
-  /** Shard-wise [[mergeBlooms]] — the maintenance step for a sharded
-    * filter set after [[appendHashStore]] (routing is deterministic, so
-    * merging shard i with shard i covers every appended key).
-    */
-  def mergeShardedBlooms(a: Seq[Array[Byte]],
-                         b: Seq[Array[Byte]]): Seq[Array[Byte]] = {
-    require(a.size == b.size,
-      s"shard counts differ (${a.size} vs ${b.size}); changing nShards is a rebuild")
-    a.lazyZip(b).map(mergeBlooms)
-  }
-
-  /** The band-gate Bloom pre-filter shared by [[minhashGate]] /
-    * [[simhashGate]] / [[embeddingGate]]: drop batch band rows whose
-    * (band, bkey) provably matches no store band row. Applied AFTER the
-    * inline bucket cap (so the capped row set is identical with and
-    * without the filter) and exact by construction — the subsequent
-    * equi-join discards no-match rows anyway, so a false positive only
-    * forfeits the skip.
-    */
-  private def bandBloomFilter(capped: DataFrame,
-                              bandBloom: Option[Array[Byte]]): DataFrame =
-    bandBloom match {
-      case None => capped
-      case Some(bf) => capped.filter(graft.functions.Blooms
-        .bloomMightContain(lit(bf), xxhash64(col("band"), col("bkey"))))
-    }
-
-  /** Driver-side OR-merge of two serialized Bloom filters of identical
-    * layout — the O(filter bytes) operation that keeps [[exactGateBloom]]
-    * exact across appends without rescanning the store.
-    */
-  def mergeBlooms(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val fa = org.apache.spark.util.sketch.BloomFilter
-      .readFrom(new java.io.ByteArrayInputStream(a))
-    val fb = org.apache.spark.util.sketch.BloomFilter
-      .readFrom(new java.io.ByteArrayInputStream(b))
-    fa.mergeInPlace(fb)
-    val out = new java.io.ByteArrayOutputStream(a.length)
-    fa.writeTo(out)
-    out.toByteArray
-  }
-
-  /** [[exactGate]] with a Bloom PRE-FILTER: the 100 TB shape for a
-    * batch gated against a corpus-scale store. The driver-held filter
-    * (a compact artifact like an ANN index, built once per store
-    * snapshot by [[storeBloom]]) splits the batch BEFORE the join:
-    * "might_contain = false" rows are PROVEN corpus-new (a Bloom filter
-    * has no false negatives) and skip the store join entirely; only the
-    * "maybe" minority — the true duplicates plus the ~fpp false
-    * positives — pays the exact anti-join verify. Output is therefore
-    * IDENTICAL to [[exactGate]] (same oracle), but the store-side join
-    * input shrinks from the whole batch to its duplicate fraction: on
-    * a mostly-novel daily batch the expensive join becomes almost free,
-    * and the filter probe is a codegen predicate on the scan.
-    */
-  def exactGateBloom(batch: DataFrame, idCol: String, textCol: String,
-                     storeTable: String, bloom: Array[Byte]): DataFrame =
-    exactGateMaybe(batch, idCol, textCol, storeTable,
-      h => graft.functions.Blooms.bloomMightContain(lit(bloom), h))
-
-  /** [[exactGateBloom]] over a sharded filter set ([[storeBloomSharded]])
-    * — identical output (the sharded probe preserves no-false-negatives
-    * shard-wise), no single-filter size ceiling.
-    */
-  def exactGateBloomSharded(batch: DataFrame, idCol: String, textCol: String,
-                            storeTable: String,
-                            shards: Seq[Array[Byte]]): DataFrame =
-    exactGateMaybe(batch, idCol, textCol, storeTable,
-      h => shardedMightContain(shards, h))
-
-  /** Shared body of the Bloom-prefiltered exact gates: `maybeOf` maps
-    * the key hash to the membership-probe Column.
-    */
-  private def exactGateMaybe(batch: DataFrame, idCol: String, textCol: String,
-                             storeTable: String,
-                             maybeOf: Column => Column): DataFrame = {
-    val s = batch.sparkSession
-    graft.functions.Blooms.register(s)
-    if (!s.catalog.tableExists(storeTable)) exactGate(batch, idCol, textCol,
-      storeTable)
-    else {
-      // materialized once: BOTH branches (proven-novel passthrough and
-      // suspect verify join) consume this frame — without it each branch
-      // re-scans the batch and re-runs the dedup aggregate (verified: 4
-      // HashAggregates, no ReusedExchange in the unmaterialized plan),
-      // and batch-side work is exactly what the gate is meant to minimize
-      val inBatch = firstPerText(batch, idCol, textCol, Seq(idCol))
-        .withColumn("__maybe", maybeOf(xxhash64(col("text_hash"))))
-        .localCheckpoint()
-      val proven = inBatch.filter(!col("__maybe")).drop("__maybe")
-      val verified = notInStore(
-        inBatch.filter(col("__maybe")).drop("__maybe"), storeTable)
-      proven.unionByName(verified).select(col(idCol), col("text_hash"))
-    }
-  }
-
   /** The write half of [[exactIncremental]]: seed or extend the bucketed
     * corpus hash store with this batch's surviving (id, text_hash) rows.
     *
-    * `dedupAgainstStore` as in [[appendSigStore]] — normally the exact
-    * gate's own store anti-join already guarantees append idempotence
-    * under replay, but a Bloom-PREFILTERED replay can bypass that
-    * anti-join for keys a torn append committed after the filter was
-    * built (cleared rows skip the store join), so the Bloom streaming
-    * gate passes it when a replay is detected.
+    * No replay flag, unlike [[appendSigStore]]: every caller appends the
+    * output of a gate that anti-joins the store on this same key (the
+    * exact gate, the segment gate), so a replay after a torn append
+    * re-gates against the advanced store and re-adds only the hashes
+    * the first attempt did not commit.
     */
   def appendHashStore(keys: DataFrame, storeTable: String,
-                      storePath: String, nBuckets: Int = 8,
-                      dedupAgainstStore: Boolean = false): Unit =
+                      storePath: String, nBuckets: Int = 8): Unit =
     seedOrAppend(keys, storeTable, storePath, Seq("text_hash"),
-      keys.columns.toSeq, nBuckets, dedupAgainstStore)
+      keys.columns.toSeq, nBuckets, dedupAgainstStore = false)
 
   /** Incremental near-dup novelty filter against a persisted MinHash
     * signature store — "which of today's documents are new vs the
@@ -514,30 +210,18 @@ object Dedup {
     * small store), and once both sides are past it plans a sort-merge
     * join that reads the store through its bucketing, with no exchange
     * on the store side (StoreGatePlanSpec pins both plans).
-    *
-    * `bandBloom` is the [[exactGateBloom]] pre-filter transplanted to
-    * the band join ([[bandStoreBloom]] builds it; same staleness
-    * contract): batch band rows whose key provably matches no store
-    * band row are dropped BEFORE the join. Exactness is free here —
-    * the equi-join discards no-match rows anyway, so a false positive
-    * only forfeits the skip — and the filter applies AFTER the inline
-    * bucket cap so the capped row set (hence the candidate set) is
-    * byte-identical with and without the filter.
     */
   def minhashGate(batchSig: DataFrame, idCol: String, storeTable: String,
                   bands: Int, minEstJaccard: Double,
-                  maxBucket: Int = 500,
-                  bandBloom: Option[Array[Byte]] = None): DataFrame = {
+                  maxBucket: Int = 500): DataFrame = {
     val s = batchSig.sparkSession
     graft.functions.Texts.register(s) // sig_overlap
     val bandsT = s"${storeTable}_bands"
     val sigsT = s"${storeTable}_sigs"
     if (!s.catalog.tableExists(bandsT)) batchSig
     else {
-      val batchBands = bandBloomFilter(
-        capBucketsInline(bandRowsOf(batchSig, idCol, bands),
-          Seq("band", "bkey"), maxBucket),
-        bandBloom)
+      val batchBands = capBucketsInline(bandRowsOf(batchSig, idCol, bands),
+        Seq("band", "bkey"), maxBucket)
       // no pair-level distinct: a pair colliding in several bands reaches
       // the verify joins once per band (bounded by the band count), but
       // the id set is distinct'd after the filter anyway — dropping the
@@ -668,9 +352,13 @@ object Dedup {
     // null sig would give every null-text doc the SAME band key
     // (xxhash64 skips the null slice) — spurious candidate pairs now,
     // and an uncapped ever-growing store bucket in minhashGate later.
-    df.withColumn("sig", graft.functions.MinHashSig
+    // The filter is on the text, not on `sig`: minhash_sig is null
+    // exactly for null text, and a `sig IS NOT NULL` filter is pushed
+    // below the projection with the expression substituted, so the
+    // signature would be computed twice per row.
+    df.filter(col(textCol).isNotNull)
+      .withColumn("sig", graft.functions.MinHashSig
         .minhashSig(col(textCol), numHashes, shingleN, p))
-      .filter(col("sig").isNotNull)
   }
 
   /** LSH banding: signature rows → (band, bucket) keys → candidate pairs
@@ -1279,16 +967,12 @@ object Dedup {
 
   /** The read-only half of [[embeddingIncremental]]: batch (id, vector)
     * rows with no stored vector at cosine >= `minCosine`. No writes.
-    *
-    * `bandBloom` as in [[simhashGate]]: the band-store pre-filter
-    * ([[bandStoreBloom]] builds it), applied after the inline cap so
-    * output is byte-identical with and without the filter.
+    * The store joins follow [[minhashGate]]'s planner contract.
     */
   def embeddingGate(batch: DataFrame, idCol: String, vecCol: String,
                     storeTable: String, minCosine: Double,
                     nPlanes: Int = 32, bands: Int = 4,
-                    maxBucket: Int = 1000,
-                    bandBloom: Option[Array[Byte]] = None): DataFrame = {
+                    maxBucket: Int = 1000): DataFrame = {
     val s = batch.sparkSession
     val bandsT = s"${storeTable}_bands"
     val vecsT = s"${storeTable}_vecs"
@@ -1297,10 +981,9 @@ object Dedup {
     if (!s.catalog.tableExists(bandsT))
       bucketed.select(col(idCol), col(vecCol))
     else {
-      val batchBands = bandBloomFilter(
-        capBucketsInline(vectorBandRows(bucketed, idCol, nPlanes, bands),
-          Seq("band", "bkey"), maxBucket),
-        bandBloom)
+      val batchBands = capBucketsInline(
+        vectorBandRows(bucketed, idCol, nPlanes, bands),
+        Seq("band", "bkey"), maxBucket)
       graft.functions.Vectors.register(s)
       // no pair-level distinct: a pair colliding in several bands reaches
       // the verify joins once per band (bounded by the band count), but
@@ -1378,28 +1061,17 @@ object Dedup {
 
   /** The read-only half of [[simhashIncremental]]: batch fingerprint rows
     * with no stored fingerprint within `maxDist` Hamming bits. No writes.
-    *
-    * `bandBloom` is [[minhashGate]]'s band-store pre-filter transplanted
-    * verbatim ([[bandStoreBloom]] builds it — the `_bands` layout and
-    * (band, bkey) key are shared across the banded stores; same
-    * staleness contract): batch band rows whose key provably matches no
-    * store band row drop BEFORE the join. Exactness is free — the
-    * equi-join discards no-match rows anyway — and the filter applies
-    * AFTER the inline cap so the capped row set is byte-identical with
-    * and without it.
+    * The store joins follow [[minhashGate]]'s planner contract.
     */
   def simhashGate(batchFp: DataFrame, idCol: String, storeTable: String,
-                  maxDist: Int = 3, maxBucket: Int = 500,
-                  bandBloom: Option[Array[Byte]] = None): DataFrame = {
+                  maxDist: Int = 3, maxBucket: Int = 500): DataFrame = {
     val s = batchFp.sparkSession
     val bandsT = s"${storeTable}_bands"
     val fpsT = s"${storeTable}_fps"
     if (!s.catalog.tableExists(bandsT)) batchFp
     else {
-      val batchBands = bandBloomFilter(
-        capBucketsInline(simhashBandRows(batchFp, idCol),
-          Seq("band", "bkey"), maxBucket),
-        bandBloom)
+      val batchBands = capBucketsInline(simhashBandRows(batchFp, idCol),
+        Seq("band", "bkey"), maxBucket)
       // pair-level distinct dropped: duplication is bounded by the band
       // count and the id set is distinct'd after the hamming filter
       val dupIds = batchBands

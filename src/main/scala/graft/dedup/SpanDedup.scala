@@ -154,8 +154,7 @@ object SpanDedup {
     * exact and segment stores). Sizing: the smallest per-ENTRY state
     * of the store family (8 bytes per distinct window) but the most
     * entries — ~one per corpus token — so in TOTAL bytes it is the
-    * largest store in the pipeline (the [[spanStoreBloom]] sizing
-    * note).
+    * largest store in the pipeline.
     */
   def seedSpanStore(docs: DataFrame, w: Int, table: String, path: String,
                     nBuckets: Int = 8): Unit =
@@ -208,81 +207,6 @@ object SpanDedup {
   def statsIncremental(batch: DataFrame, w: Int, storeTable: String,
                        minOccur: Long = 2L): DataFrame =
     summarize(duplicatedSpansIncremental(batch, w, storeTable, minOccur))
-
-  /** [[statsIncremental]] through the Bloom pre-filter — row-identical
-    * output, store join paid only by filter hits.
-    */
-  def statsIncrementalBloom(batch: DataFrame, w: Int, storeTable: String,
-                            bloom: Array[Byte],
-                            minOccur: Long = 2L): DataFrame =
-    summarize(
-      duplicatedSpansIncrementalBloom(batch, w, storeTable, bloom, minOccur))
-
-  /** Bloom summary of the span store's `win_hash` column ([[Dedup
-    * .bloomOfKeys]] layout/staleness contract: fold every append in via
-    * `bloomOfKeys(<novel hashes>, Seq("win_hash"), ...)` +
-    * `mergeBlooms`, or duplicates admit silently around the probe).
-    * None for a missing store. Size `expectedItems` in WINDOWS (~one
-    * per corpus token) — the span store holds the MOST ENTRIES of any
-    * store in the pipeline (largest in total bytes despite the
-    * smallest per-entry state), which is why its gate would earn a
-    * pre-filter first if the store join were remote.
-    */
-  def spanStoreBloom(spark: org.apache.spark.sql.SparkSession,
-                     storeTable: String, expectedItems: Long,
-                     bitsPerItem: Int = 8): Option[Array[Byte]] =
-    if (!spark.catalog.tableExists(storeTable)) None
-    else Dedup.bloomOfKeys(spark.table(storeTable), Seq("win_hash"),
-      expectedItems, bitsPerItem)
-
-  /** [[duplicatedSpansIncremental]] with the span-store Bloom
-    * pre-filter: only windows that MIGHT be in the store (true dups +
-    * ~fpp) pay the store join; filter-missed windows are store-novel
-    * BY CONSTRUCTION (no false negatives), so the output is
-    * row-identical to the plain gate for any store/batch
-    * (SpanDedupSpec pins it) — a false positive only pushes a window
-    * through the verify join. The batch-dup rule is independent of the
-    * store and unaffected by the filter.
-    *
-    * MEASURED COST-NEUTRAL at local scale (r16 same-JVM A/B,
-    * 5-rep medians, foreign-cores 0.00): bloomed 0.41-0.66s vs plain
-    * 0.53-0.73s across THREE filter sizes (16KB near-100%-fpp, store-
-    * sized, oversized 2MB) and two stores — neither the filter literal
-    * nor the union-vs-marks shape moves the needle, and an official-
-    * bench single-session read of 0.93s did NOT survive this controlled
-    * replication (session variance, the README's standing bar). The
-    * filter cannot HELP locally either: the co-located bucketed store
-    * probe is already ~flat, so there is nothing to save. Use the plain
-    * gate by default; this surface exists for the deployment shape
-    * where the store join is genuinely expensive (remote/object-store
-    * probes, store >> executor memory).
-    */
-  def duplicatedSpansIncrementalBloom(batch: DataFrame, w: Int,
-                                      storeTable: String,
-                                      bloom: Array[Byte],
-                                      minOccur: Long = 2L): DataFrame = {
-    require(minOccur >= 2L,
-      s"spanDedup: minOccur < 2 flags every window, got $minOccur")
-    val s = batch.sparkSession
-    if (!s.catalog.tableExists(storeTable))
-      duplicatedSpansIncremental(batch, w, storeTable, minOccur)
-    else {
-      graft.functions.Blooms.register(s)
-      val grams = windowKeys(batch, w, useHashKey = true)
-      val dupKeys = grams.groupBy(col("k"))
-        .agg(count(lit(1)).as("n")).filter(col("n") >= minOccur)
-      val inBatch = grams.join(dupKeys.select("k"), Seq("k"), "left_semi")
-        .select(col("doc_id"), col("pos"))
-      val inStore = grams
-        .filter(graft.functions.Blooms.bloomMightContain(
-          lit(bloom), xxhash64(col("k"))))
-        .join(s.table(storeTable)
-          .select(col("win_hash").as("k")), Seq("k"), "left_semi")
-        .select(col("doc_id"), col("pos"))
-      mergeIslands(inBatch.unionByName(inStore)
-        .dropDuplicates("doc_id", "pos"), w)
-    }
-  }
 
   /** The batch's DISTINCT window hashes not yet in the store — the
     * store-append input. Because the append input is itself an

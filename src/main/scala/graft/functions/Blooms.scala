@@ -22,10 +22,12 @@ import org.apache.spark.util.sketch.BloomFilter
   * ALREADY-hashed 64-bit key (`xxhash64(...)`), keeping the hash choice
   * auditable at the call site.
   *
-  * The gate built on these ([[graft.dedup.Dedup.exactGateBloom]]) uses
-  * the one property that makes an approximate sketch safe in an EXACT
+  * The one operator built on these ([[graft.dedup.Decontaminate]]) uses
+  * the property that makes an approximate sketch safe in an EXACT
   * pipeline: no false negatives. "might_contain = false" proves a key
-  * is corpus-new; only the "maybe" minority pays the exact verify join.
+  * is absent; only the "maybe" minority pays the exact verify join.
+  * The store gates do not prefilter: they anti-join their store
+  * directly (see [[graft.dedup.Dedup.exactGate]]).
   */
 object Blooms {
 
@@ -45,8 +47,7 @@ object Blooms {
       // an rvalue") and the whole stage silently falls back to
       // interpreted eval. The wrapper pins the value in a local
       // variable so the cast always applies to a name. Column-probe
-      // plans (every production gate) are unaffected beyond a
-      // JIT-erased long copy.
+      // plans are unaffected beyond a JIT-erased long copy.
       exprs => org.apache.spark.sql.catalyst.expressions
         .BloomFilterMightContain(exprs(0), StableLong(exprs(1))),
       "built-in")
@@ -57,8 +58,8 @@ object Blooms {
   /** Convenience fallback for the one-session case; same off-thread and
     * MULTI-SESSION caveats as `Texts.ensureRegistered` (the thread's
     * active session may not be the session that analyzes the Column —
-    * the gate entry points call `register(batch.sparkSession)`
-    * explicitly instead of relying on this).
+    * library operators register on their input's session explicitly
+    * instead of relying on this).
     */
   private def ensureRegistered(): Unit =
     SparkSession.getActiveSession.foreach(register)

@@ -286,57 +286,6 @@ object Segments {
       col("__first.seg_no").as("seg_no"))
   }
 
-  /** [[segmentGateRows]] with the store Bloom pre-filter
-    * ([[graft.dedup.Dedup.storeBloom]] over the SEGMENT store — same
-    * `text_hash` layout as the doc store, so build/fold/merge reuse the
-    * exact gate's maintenance kit verbatim). Segment rows whose hash
-    * misses the filter are corpus-new BY CONSTRUCTION (no false
-    * negatives) and skip the store join entirely; only the maybe-dup
-    * fraction (true dups + ~2% fpp) pays it. Output is row-identical to
-    * the plain gate for any store/batch/layout (SegmentBloomPropertySpec)
-    * — false positives only push rows through the verify join.
-    *
-    * This is where the Bloom split earns the most: the store holds one
-    * 16-byte hash per DISTINCT SEGMENT (~`tokens/w` per document, 10-50x
-    * the doc count), so at corpus scale the segment store is the largest
-    * store in the pipeline while a mostly-novel daily batch still probes
-    * it almost entirely through the 8-bits-per-key filter. Same
-    * staleness contract as [[graft.dedup.Dedup.storeBloom]]: fold every
-    * appended batch in ([[novelHashes]] rows are already in
-    * `bloomOfHashes`' column contract) or duplicates are silently
-    * admitted around the verify join.
-    */
-  def segmentGateRowsBloom(batch: DataFrame, w: Int, storeTable: String,
-                           bloom: Array[Byte]): DataFrame = {
-    val s = batch.sparkSession
-    graft.functions.Blooms.register(s)
-    if (!s.catalog.tableExists(storeTable)) segmentGateRows(batch, w,
-      storeTable)
-    else {
-      val firstWin = Window.partitionBy(col("h"))
-        .orderBy(col("doc_id"), col("seg_no"))
-      // materialized once: both the proven-novel passthrough and the
-      // suspect verify join consume this frame (the exactGateBloom
-      // rationale — an unmaterialized plan re-explodes the batch and
-      // re-runs the row_number exchange per branch)
-      val rows = segmentRows(batch, w)
-        .withColumn("rn", row_number().over(firstWin))
-        .withColumn("__maybe", graft.functions.Blooms.bloomMightContain(
-          lit(bloom), xxhash64(col("h"))))
-        .localCheckpoint()
-      val proven = rows.filter(!col("__maybe")).drop("__maybe")
-        .withColumn("inStore", lit(false))
-      val verified = rows.filter(col("__maybe")).drop("__maybe")
-        .join(s.table(storeTable)
-          .select(col("text_hash").as("h"), lit(true).as("inStore")),
-          Seq("h"), "left_outer")
-      proven.unionByName(verified, allowMissingColumns = false)
-        .withColumn("isKept",
-          col("seg").isNotNull && col("rn") === 1 &&
-            coalesce(col("inStore"), lit(false)) === false)
-    }
-  }
-
   /** The store-append keys of a gated batch: the kept segments' distinct
     * hashes, in the [[graft.dedup.Dedup.appendHashStore]] column contract.
     */

@@ -207,11 +207,6 @@ object StreamingOps {
     * detects a replay. [[graft.dedup.Dedup.compactHashStore]] and
     * siblings remain the scheduled file-count maintenance op (appends add
     * a file per bucket per day).
-    *
-    * For a corpus-scale store, use [[bloomNoveltyGate]] instead: the
-    * same loop with a driver-held store Bloom filter maintained across
-    * micro-batches, so a mostly-novel batch skips the store join for
-    * every filter-cleared row.
     */
   def noveltyGateEachBatch(idCol: String, textCol: String,
                            storeTable: String, storePath: String,
@@ -230,180 +225,6 @@ object StreamingOps {
     gatedSinkWrite(batch, idCol, fresh, outPath, batchId)
     graft.dedup.Dedup.appendHashStore(fresh, storeTable, storePath, nBuckets)
   }
-
-  /** [[noveltyGateEachBatch]] with the store Bloom filter held across
-    * micro-batches — the corpus-scale shape of the streaming exact gate.
-    * Returns the `foreachBatch` function; the returned closure owns the
-    * filter lifecycle (foreachBatch runs on the driver, batches of one
-    * query run sequentially):
-    *
-    *  1. FIRST batch: build the filter from the store as it stands
-    *     ([[graft.dedup.Dedup.storeBloom]]) — the snapshot this stream
-    *     starts gating against (None while the store doesn't exist yet;
-    *     the gate then degenerates to the plain in-batch dedup exactly
-    *     like [[graft.dedup.Dedup.exactGateBloom]] does).
-    *  2. Every batch: gate with [[graft.dedup.Dedup.exactGateBloom]],
-    *     sink survivors (replay-idempotent, as the plain gate), append
-    *     the store.
-    *  3. After the append: fold the batch's own filter in
-    *     ([[graft.dedup.Dedup.bloomOfHashes]] + `mergeBlooms`) so the
-    *     held filter covers the grown store BEFORE the next batch gates
-    *     — the staleness contract on `storeBloom`, maintained at
-    *     O(filter bytes) per batch with no store rescan.
-    *
-    * Replay safety: a replayed batch gates against the pre-append
-    * filter (same survivors — a Bloom miss only proves novelty against
-    * the pre-append STORE, which is the same store the original attempt
-    * gated against, and the sink write unions with the partition's
-    * prior content). The one Bloom-specific hazard is the store append:
-    * filter-cleared rows bypass the store anti-join, so a replay could
-    * re-append hashes a torn first attempt already committed — the
-    * append therefore passes `dedupAgainstStore` when the sink write
-    * detects a replay. Re-folding the same keys into the filter is a
-    * no-op (OR-merge is idempotent).
-    *
-    * Use as `docs.writeStream.foreachBatch(bloomNoveltyGate(...))`.
-    * After a restart the first batch rebuilds the filter from the
-    * store, so crash recovery needs no filter persistence.
-    */
-  def bloomNoveltyGate(idCol: String, textCol: String,
-                       storeTable: String, storePath: String,
-                       outPath: String, expectedItems: Long,
-                       nBuckets: Int = 8): (DataFrame, Long) => Unit = {
-    var bloom: Option[Array[Byte]] = None // driver-held, batches sequential
-    (batch: DataFrame, batchId: Long) => {
-      if (bloom.isEmpty)
-        bloom = graft.dedup.Dedup.storeBloom(batch.sparkSession, storeTable,
-          expectedItems)
-      val fresh = graft.util.Checkpoints.scoped(s"exactgate:$storeTable")(
-        bloom match {
-          case Some(bf) => graft.dedup.Dedup.exactGateBloom(
-            batch, idCol, textCol, storeTable, bf)
-          case None => graft.dedup.Dedup.exactGate(
-            batch, idCol, textCol, storeTable)
-        })
-      val replay = gatedSinkWrite(batch, idCol, fresh, outPath, batchId)
-      graft.dedup.Dedup.appendHashStore(fresh, storeTable, storePath,
-        nBuckets, dedupAgainstStore = replay)
-      bloom = foldBloom(bloom,
-        graft.dedup.Dedup.bloomOfHashes(fresh, expectedItems))
-    }
-  }
-
-  /** [[minhashNoveltyGateEachBatch]] with the band-store Bloom
-    * pre-filter held across micro-batches ([[graft.dedup.Dedup
-    * .minhashGate]]'s `bandBloom`). Same lifecycle as
-    * [[bloomNoveltyGate]]: seed from the store's `_bands` table on
-    * first use ([[graft.dedup.Dedup.bandStoreBloom]]), gate, sink,
-    * append, then fold the batch's own band keys in so the filter
-    * covers the grown store before the next batch. Unlike the exact
-    * gate, a stale band filter here would DROP batch band rows whose
-    * only store match is a newly appended row — missed duplicates, not
-    * just a forfeited skip — which is why the fold runs inside the
-    * batch loop, not on a maintenance cadence.
-    */
-  def bloomMinhashNoveltyGate(idCol: String, textCol: String,
-                              storeTable: String, storePath: String,
-                              outPath: String, expectedItems: Long,
-                              numHashes: Int = 32, shingleN: Int = 5,
-                              bands: Int = 4, minEstJaccard: Double = 0.8,
-                              nBuckets: Int = 8): (DataFrame, Long) => Unit = {
-    var bloom: Option[Array[Byte]] = None // driver-held, batches sequential
-    (batch: DataFrame, batchId: Long) => {
-      if (bloom.isEmpty)
-        bloom = graft.dedup.Dedup.bandStoreBloom(batch.sparkSession,
-          storeTable, expectedItems)
-      val sig = graft.dedup.Dedup
-        .minhashSignatures(batch, idCol, textCol, numHashes, shingleN)
-      val fresh = graft.util.Checkpoints.scoped(s"mhgate:$storeTable")(
-        graft.dedup.Dedup.minhashGate(sig, idCol, storeTable, bands,
-          minEstJaccard, bandBloom = bloom))
-      val replay = gatedSinkWrite(batch, idCol, fresh, outPath, batchId)
-      graft.dedup.Dedup.appendSigStore(fresh, idCol, storeTable, storePath,
-        bands, nBuckets, dedupAgainstStore = replay)
-      bloom = foldBloom(bloom, graft.dedup.Dedup.bloomOfKeys(
-        graft.dedup.Dedup.bandRowsOf(fresh, idCol, bands),
-        Seq("band", "bkey"), expectedItems))
-    }
-  }
-
-  /** [[simhashNoveltyGateEachBatch]] with the band-store Bloom
-    * pre-filter held across micro-batches ([[graft.dedup.Dedup
-    * .simhashGate]]'s `bandBloom` — the `_bands` layout and (band, bkey)
-    * key are shared across the banded stores, so seed/fold reuse
-    * [[graft.dedup.Dedup.bandStoreBloom]] / `bloomOfKeys` unchanged).
-    * Same lifecycle and staleness contract as [[bloomMinhashNoveltyGate]]:
-    * a stale band filter would DROP batch band rows whose only store
-    * match is a newly appended fingerprint — missed duplicates — so the
-    * fold runs inside the batch loop. `expectedItems` sizes the filter
-    * in BAND ROWS (4 per stored fingerprint), not documents.
-    */
-  def bloomSimhashNoveltyGate(idCol: String, textCol: String,
-                              storeTable: String, storePath: String,
-                              outPath: String, expectedItems: Long,
-                              maxDist: Int = 3, maxBucket: Int = 500,
-                              nBuckets: Int = 8): (DataFrame, Long) => Unit = {
-    var bloom: Option[Array[Byte]] = None // driver-held, batches sequential
-    (batch: DataFrame, batchId: Long) => {
-      if (bloom.isEmpty)
-        bloom = graft.dedup.Dedup.bandStoreBloom(batch.sparkSession,
-          storeTable, expectedItems)
-      val fp = graft.dedup.Dedup.simhash(batch, idCol, textCol)
-      val fresh = graft.util.Checkpoints.scoped(s"shgate:$storeTable")(
-        graft.dedup.Dedup.simhashGate(fp, idCol, storeTable, maxDist,
-          maxBucket, bandBloom = bloom))
-      val replay = gatedSinkWrite(batch, idCol, fresh, outPath, batchId)
-      graft.dedup.Dedup.appendFpStore(fresh, idCol, storeTable, storePath,
-        nBuckets, dedupAgainstStore = replay)
-      bloom = foldBloom(bloom, graft.dedup.Dedup.bloomOfKeys(
-        graft.dedup.Dedup.simhashBandRows(fresh, idCol),
-        Seq("band", "bkey"), expectedItems))
-    }
-  }
-
-  /** [[embeddingNoveltyGateEachBatch]] with the band-store Bloom
-    * pre-filter held across micro-batches ([[graft.dedup.Dedup
-    * .embeddingGate]]'s `bandBloom`). Same lifecycle and staleness
-    * contract as [[bloomMinhashNoveltyGate]]; the fold input is the
-    * survivors' sign-LSH band rows, recomputed exactly as the store
-    * append computes them. `expectedItems` sizes the filter in BAND
-    * ROWS (`bands` per stored vector), not documents.
-    */
-  def bloomEmbeddingNoveltyGate(idCol: String, vecCol: String,
-                                storeTable: String, storePath: String,
-                                outPath: String, expectedItems: Long,
-                                minCosine: Double, nPlanes: Int = 32,
-                                bands: Int = 4, maxBucket: Int = 1000,
-                                nBuckets: Int = 8): (DataFrame, Long) => Unit = {
-    var bloom: Option[Array[Byte]] = None // driver-held, batches sequential
-    (batch: DataFrame, batchId: Long) => {
-      if (bloom.isEmpty)
-        bloom = graft.dedup.Dedup.bandStoreBloom(batch.sparkSession,
-          storeTable, expectedItems)
-      val fresh = graft.util.Checkpoints.scoped(s"embgate:$storeTable")(
-        graft.dedup.Dedup.embeddingGate(batch, idCol, vecCol, storeTable,
-          minCosine, nPlanes, bands, maxBucket, bandBloom = bloom))
-      val replay = gatedSinkWrite(batch, idCol, fresh, outPath, batchId)
-      graft.dedup.Dedup.appendVecStore(fresh, idCol, vecCol, storeTable,
-        storePath, nPlanes, bands, nBuckets, dedupAgainstStore = replay)
-      bloom = foldBloom(bloom, graft.dedup.Dedup.bloomOfKeys(
-        graft.dedup.Dedup.vectorBandRows(
-          graft.similarity.Similarity.withBuckets(
-            fresh.select(col(idCol), col(vecCol)), vecCol, nPlanes),
-          idCol, nPlanes, bands),
-        Seq("band", "bkey"), expectedItems))
-    }
-  }
-
-  /** OR-merge a batch's filter into the held one; either side may be
-    * absent (store not seeded yet / empty batch).
-    */
-  private def foldBloom(held: Option[Array[Byte]],
-                        batch: Option[Array[Byte]]): Option[Array[Byte]] =
-    (held, batch) match {
-      case (Some(a), Some(b)) => Some(graft.dedup.Dedup.mergeBlooms(a, b))
-      case (a, b) => b.orElse(a)
-    }
 
   /** [[noveltyGateEachBatch]]'s near-dup sibling: each micro-batch is
     * MinHash-signed and gated against the persisted signature store
@@ -480,81 +301,35 @@ object StreamingOps {
     * against the possibly-advanced store (its own segments may have
     * reached the store before the crash), and the original attempt's
     * rebuilds — already sunk — are the correct output for those docs.
-    * The store append stays idempotent via `dedupAgainstStore` on
-    * replay, and re-appended hashes are a no-op set-union.
+    * The store append is idempotent without a replay flag: its input is
+    * the kept segments of that re-gate, which excludes every hash a torn
+    * first attempt already committed.
     */
   def segmentNoveltyGateEachBatch(w: Int, storeTable: String,
                                   storePath: String, outPath: String,
                                   nBuckets: Int = 8)(
-      batch: DataFrame, batchId: Long): Unit =
-    segmentSinkAppend(
-      graft.ops.Segments.segmentGateRows(batch, w, storeTable),
-      storeTable, storePath, outPath, nBuckets, batchId)
-
-  /** [[segmentNoveltyGateEachBatch]] with the SEGMENT-store Bloom
-    * pre-filter held across micro-batches ([[graft.ops.Segments
-    * .segmentGateRowsBloom]]). Same lifecycle as [[bloomNoveltyGate]] —
-    * the segment store shares the doc store's `text_hash` layout, so
-    * seed/fold reuse [[graft.dedup.Dedup.storeBloom]] /
-    * [[graft.dedup.Dedup.bloomOfHashes]] unchanged, with
-    * [[graft.ops.Segments.novelHashes]] as the per-batch fold input.
-    * `expectedItems` sizes the filter in SEGMENTS, not documents
-    * (~`tokens/w` per doc — the segment store is the largest in the
-    * pipeline, which is exactly why the pre-filter matters here).
-    * After a restart the first batch rebuilds the filter from the
-    * store, so crash recovery needs no filter persistence.
-    */
-  def bloomSegmentNoveltyGate(w: Int, storeTable: String, storePath: String,
-                              outPath: String, expectedItems: Long,
-                              nBuckets: Int = 8): (DataFrame, Long) => Unit = {
+      batch: DataFrame, batchId: Long): Unit = {
     import graft.ops.Segments
-    var bloom: Option[Array[Byte]] = None // driver-held, batches sequential
-    (batch: DataFrame, batchId: Long) => {
-      if (bloom.isEmpty)
-        bloom = graft.dedup.Dedup.storeBloom(batch.sparkSession, storeTable,
-          expectedItems)
-      val rows = bloom match {
-        case Some(bf) => Segments.segmentGateRowsBloom(batch, w, storeTable,
-          bf)
-        case None => Segments.segmentGateRows(batch, w, storeTable)
-      }
-      val flagged = segmentSinkAppend(rows, storeTable, storePath, outPath,
-        nBuckets, batchId)
-      bloom = foldBloom(bloom, graft.dedup.Dedup.bloomOfHashes(
-        Segments.novelHashes(flagged), expectedItems))
-    }
-  }
-
-  /** Shared sink + store-append half of the segment novelty gates:
-    * materializes the flagged rows once (returned for filter folds),
-    * writes the prior-wins rebuilds, appends the novel hashes.
-    */
-  private def segmentSinkAppend(gateRows: DataFrame, storeTable: String,
-                                storePath: String, outPath: String,
-                                nBuckets: Int, batchId: Long): DataFrame = {
-    import graft.ops.Segments
-    val spark = gateRows.sparkSession
     // one materialization feeds the sink AND the store (scoped: see the
     // exact gate's note — batch N+1 releases batch N's blocks)
-    val rows = graft.util.Checkpoints.scoped(s"seggate:$storeTable")(gateRows)
-    val replay = priorWinsWrite(Segments.reassembleRows(rows), outPath,
-      batchId, s"seggate-replay:$outPath")
+    val rows = graft.util.Checkpoints.scoped(s"seggate:$storeTable")(
+      Segments.segmentGateRows(batch, w, storeTable))
+    priorWinsWrite(Segments.reassembleRows(rows), outPath, batchId,
+      s"seggate-replay:$outPath")
     graft.dedup.Dedup.appendHashStore(Segments.novelHashes(rows),
-      storeTable, storePath, nBuckets, dedupAgainstStore = replay)
-    rows
+      storeTable, storePath, nBuckets)
   }
 
   /** Prior-wins partition write shared by the rebuild-sinking gates
     * (segment, span): the batch's `(doc_id, ...)` rebuilds land under
     * a `__batch_id=<id>` partition; on replay the original attempt's
     * already-sunk rebuilds win by doc_id (they were gated against the
-    * pre-advance store — the correct output for those docs). Returns
-    * whether this WAS a replay, the callers' signal for store-append
-    * idempotence. The replay union is eagerly checkpointed under
-    * `scopeKey` because the overwrite targets the very path being read.
+    * pre-advance store — the correct output for those docs). The replay
+    * union is eagerly checkpointed under `scopeKey` because the
+    * overwrite targets the very path being read.
     */
   private def priorWinsWrite(rebuilt: DataFrame, outPath: String,
-                             batchId: Long, scopeKey: String): Boolean = {
+                             batchId: Long, scopeKey: String): Unit = {
     val spark = rebuilt.sparkSession
     val partDir =
       new org.apache.hadoop.fs.Path(outPath, s"__batch_id=$batchId")
@@ -574,7 +349,6 @@ object StreamingOps {
       .write.partitionBy("__batch_id")
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite").parquet(outPath)
-    replay
   }
 
   /** The span-granular member of the streaming novelty-gate family:
@@ -606,46 +380,6 @@ object StreamingOps {
     graft.dedup.SpanDedup.appendSpanStore(
       graft.dedup.SpanDedup.novelWindowHashes(batch, w, storeTable),
       storeTable, storePath, nBuckets)
-  }
-
-  /** [[spanNoveltyGateEachBatch]] with the span-store Bloom pre-filter
-    * held across micro-batches — the corpus-scale shape for the
-    * pipeline's LARGEST store (~one 8-byte hash per corpus token).
-    * Same lifecycle as [[bloomNoveltyGate]]: first batch snapshots the
-    * filter from the store ([[graft.dedup.SpanDedup.spanStoreBloom]]),
-    * every batch gates with the row-identical
-    * [[graft.dedup.SpanDedup.duplicatedSpansIncrementalBloom]], and the
-    * batch's novel hashes fold in AFTER the append (the storeBloom
-    * staleness contract, O(filter bytes)/batch). Replay: the sink is
-    * prior-wins like the plain gate, the append input anti-joins the
-    * store's own key, and re-folding the same keys is an OR-merge
-    * no-op.
-    */
-  def bloomSpanNoveltyGate(w: Int, storeTable: String, storePath: String,
-                           outPath: String, expectedItems: Long,
-                           nBuckets: Int = 8): (DataFrame, Long) => Unit = {
-    var bloom: Option[Array[Byte]] = None // driver-held, batches sequential
-    (batch: DataFrame, batchId: Long) => {
-      if (bloom.isEmpty)
-        bloom = graft.dedup.SpanDedup.spanStoreBloom(batch.sparkSession,
-          storeTable, expectedItems)
-      val spans = bloom match {
-        case Some(bf) => graft.dedup.SpanDedup
-          .duplicatedSpansIncrementalBloom(batch, w, storeTable, bf)
-        case None => graft.dedup.SpanDedup
-          .duplicatedSpansIncremental(batch, w, storeTable)
-      }
-      priorWinsWrite(graft.dedup.SpanDedup.stripBySpans(batch, spans),
-        outPath, batchId, s"spangate-replay:$outPath")
-      // one materialization feeds the append AND the filter fold
-      // (scoped: batch N+1 releases batch N's blocks)
-      val novel = graft.util.Checkpoints.scoped(s"spangate-novel:$storeTable")(
-        graft.dedup.SpanDedup.novelWindowHashes(batch, w, storeTable))
-      graft.dedup.SpanDedup.appendSpanStore(novel, storeTable, storePath,
-        nBuckets)
-      bloom = foldBloom(bloom, graft.dedup.Dedup.bloomOfKeys(novel,
-        Seq("win_hash"), expectedItems))
-    }
   }
 
   /** Replay-idempotent survivor write shared by the novelty gates: the
@@ -816,13 +550,12 @@ object StreamingOps {
     * persisted ([[graft.text.BigramLm.saveModel]]), scoring every
     * micro-batch as it arrives; documents whose average conditional
     * transition probability falls below `minFluency` micro-points are
-    * dropped before the sink. Returns the `foreachBatch` function (the
-    * [[bloomNoveltyGateEachBatch]] convention): the vocab-scale model
-    * parquet is read once, on the first batch, and `persist`ed in a
-    * process-wide MODEL CACHE keyed by model path, so a 1 Hz trigger
-    * re-plans one cached in-memory relation per batch instead of
-    * re-listing and re-reading the model files every batch — and a
-    * RESTARTED query (new closure, same path) reuses the cached model
+    * dropped before the sink. Returns the `foreachBatch` function: the
+    * vocab-scale model parquet is read once, on the first batch, and
+    * `persist`ed in a process-wide MODEL CACHE keyed by model path, so
+    * a 1 Hz trigger re-plans one cached in-memory relation per batch
+    * instead of re-listing and re-reading the model files every batch —
+    * and a RESTARTED query (new closure, same path) reuses the cached model
     * instead of re-persisting a duplicate. The model is immutable by
     * contract (retrain = new path); release the memory with
     * [[uncacheFluencyModel]] when a model is retired. No other

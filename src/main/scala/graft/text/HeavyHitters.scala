@@ -119,7 +119,8 @@ object HeavyHitters {
     * Plan: the q109 sketch (one-row aggregate) + cap-keyed verify build
     * the stop set, which is then COLLECTED — bounded by construction at
     * ≤ `1/maxTokenFrac` rows (the [[stopTokens]] mass argument), the
-    * same bounded-collect class as the Bloom assemblies — and the whole
+    * same bounded-collect class as [[graft.dedup.Decontaminate]]'s probe
+    * filter — and the whole
     * enforcement half runs as ONE narrow codegen projection
     * ([[graft.functions.StripStopTokensExpr]]): a token is a width-1
     * segment, and a width-1 stop rule against a driver-held set needs

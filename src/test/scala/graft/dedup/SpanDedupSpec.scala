@@ -132,27 +132,6 @@ class SpanDedupSpec extends SparkSpec {
     spark.sql(s"DROP TABLE $t")
   }
 
-  test("incremental Bloom gate is row-identical to the plain gate") {
-    val old = Seq(0L -> "the quick brown fox", 2L -> "lazy dog sleeps here")
-    val batch = docs(11L -> "a the quick brown fox b", 13L -> "m n x y m n",
-      15L -> "all novel tokens here")
-    val t = seeded(old: _*)
-    val bloom = SpanDedup.spanStoreBloom(spark, t, 1000L).get
-    val plain = SpanDedup.statsIncremental(batch, 2, t)
-      .orderBy("doc_id").as[(Long, Long, Long)].collect().toSeq
-    val bloomed = SpanDedup.statsIncrementalBloom(batch, 2, t, bloom)
-      .orderBy("doc_id").as[(Long, Long, Long)].collect().toSeq
-    assert(bloomed == plain && plain.nonEmpty)
-    // missing store table degrades to the batch-only gate
-    val fallback = SpanDedup.statsIncrementalBloom(
-        batch, 2, "graft_no_such_span_store", bloom)
-      .orderBy("doc_id").as[(Long, Long, Long)].collect().toSeq
-    assert(fallback == SpanDedup.statsIncremental(
-        batch, 2, "graft_no_such_span_store")
-      .orderBy("doc_id").as[(Long, Long, Long)].collect().toSeq)
-    spark.sql(s"DROP TABLE $t")
-  }
-
   test("determinism under repartitioning") {
     val d = docs(
       0L -> "w x y z w x y z", 1L -> "m w x y n", 2L -> "y z w x")

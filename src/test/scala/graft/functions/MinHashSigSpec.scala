@@ -93,4 +93,27 @@ class MinHashSigSpec extends SparkSpec {
     val equal = sigs(0).zip(sigs(1)).count { case (x, y) => x == y }
     assert(equal >= 24, s"expected >=24/32 equal positions, got $equal")
   }
+
+  test("minhashSignatures evaluates minhash_sig once per row") {
+    // the null filter must not be pushed below the projection as a copy
+    // of the signature expression: one MinHashSig in the executed plan.
+    // A range, not a local Seq, so the optimizer cannot fold the plan
+    // into a LocalRelation
+    val df = spark.range(3).select(col("id").as("doc_id"),
+      when(col("id") === 1L, lit(null).cast("string"))
+        .otherwise(concat(lit("alpha beta gamma delta "),
+          col("id").cast("string"))).as("text"))
+    val sigs = graft.dedup.Dedup.minhashSignatures(df, "doc_id", "text")
+    assert(sigs.as[(Long, Seq[Long])].collect().map(_._1).sorted.toSeq ==
+      Seq(0L, 2L))
+    val plan = sigs.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan
+      case other => other
+    }
+    val evaluations = plan.collect { case node =>
+      node.expressions.map(_.collect { case m: MinHashSig => m }.size).sum
+    }.sum
+    assert(evaluations == 1, s"MinHashSig evaluations in the plan:\n$plan")
+  }
 }

@@ -376,228 +376,6 @@ class StreamingOpsSpec extends SparkSpec {
     }
   }
 
-  test("bloomNoveltyGate: batch N's dups of batch N-1 gate through the merged filter") {
-    implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft-bloom-novelty")
-    val outPath = base.resolve("sink").toString
-    val plainOut = base.resolve("plainsink").toString
-    val storePath = base.resolve("store").toString
-    val plainStorePath = base.resolve("plainstore").toString
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-    val table = s"bloom_novelty_spec_$nonce"
-    val plainTable = s"plain_novelty_spec_$nonce"
-    try {
-      // pre-seed both stores so batch 0 builds a non-empty filter
-      val seed = Seq((1L, "alpha")).toDF("doc_id", "text")
-      graft.dedup.Dedup.exactIncremental(seed, "doc_id", "text",
-        table, storePath)
-      graft.dedup.Dedup.exactIncremental(seed, "doc_id", "text",
-        plainTable, plainStorePath)
-      val input = MemoryStream[(Long, String)]
-      val query = input.toDF().toDF("doc_id", "text")
-        .writeStream
-        .foreachBatch(StreamingOps.bloomNoveltyGate(
-          "doc_id", "text", table, storePath, outPath,
-          expectedItems = 10000))
-        .outputMode("update").start()
-      // batch 0: one store dup (pre-seeded alpha) + one novel doc
-      input.addData((10L, "alpha"), (11L, "beta"))
-      query.processAllAvailable()
-      // batch 1: dup of batch-0's beta — in the store ONLY via batch 0's
-      // append, so gating it requires the MERGED filter (a stale filter
-      // would prove it "definitely new" and leak it around the verify)
-      input.addData((20L, "beta"), (21L, "gamma"))
-      query.processAllAvailable()
-      // batch 2: dup of batch-1's gamma, same reasoning one merge later
-      input.addData((30L, "gamma"), (31L, "delta"))
-      query.processAllAvailable()
-      query.stop()
-      val got = spark.read.parquet(outPath)
-        .select("doc_id", "text", "__batch_id")
-        .as[(Long, String, Long)].collect().sortBy(_._1)
-      assert(got.toSeq == Seq(
-        (11L, "beta", 0L), (21L, "gamma", 1L), (31L, "delta", 2L)))
-      // output identical to the PLAIN gate run over the same batches
-      val plain = StreamingOps.noveltyGateEachBatch(
-        "doc_id", "text", plainTable, plainStorePath, plainOut) _
-      plain(Seq((10L, "alpha"), (11L, "beta")).toDF("doc_id", "text"), 0L)
-      plain(Seq((20L, "beta"), (21L, "gamma")).toDF("doc_id", "text"), 1L)
-      plain(Seq((30L, "gamma"), (31L, "delta")).toDF("doc_id", "text"), 2L)
-      val plainGot = spark.read.parquet(plainOut)
-        .select("doc_id", "text", "__batch_id")
-        .as[(Long, String, Long)].collect().sortBy(_._1)
-      assert(got.toSeq == plainGot.toSeq)
-      // both stores hold one hash per distinct text, no duplicate rows
-      assert(spark.table(table).count() == 4)
-      assert(spark.table(plainTable).count() == 4)
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.sql(s"DROP TABLE IF EXISTS $plainTable")
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
-    }
-  }
-
-  test("bloomMinhashNoveltyGate: merged band filter gates cross-batch near-dups") {
-    implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft-bloom-mh")
-    val outPath = base.resolve("sink").toString
-    val storePath = base.resolve("store").toString
-    val table = s"bloom_mh_spec_${java.util.UUID.randomUUID()
-      .toString.replace("-", "")}"
-    val textA = "the quick brown fox jumps over the lazy dog again and again"
-    val textB = "pack my box with five dozen liquor jugs before the dawn comes"
-    val textC = "sphinx of black quartz judge my vow under the evening stars"
-    try {
-      // pre-seed the signature store so batch 0 builds a band filter
-      graft.dedup.Dedup.minhashIncremental(
-        graft.dedup.Dedup.minhashSignatures(
-          Seq((1L, textA)).toDF("doc_id", "text"), "doc_id", "text"),
-        "doc_id", table, storePath, bands = 4, minEstJaccard = 0.8)
-      val input = MemoryStream[(Long, String)]
-      val query = input.toDF().toDF("doc_id", "text")
-        .writeStream
-        .foreachBatch(StreamingOps.bloomMinhashNoveltyGate(
-          "doc_id", "text", table, storePath, outPath,
-          expectedItems = 10000))
-        .outputMode("update").start()
-      // batch 0: a verbatim copy of the seeded text (gated) + novel textB
-      input.addData((10L, textA), (11L, textB))
-      query.processAllAvailable()
-      // batch 1: copy of batch-0's textB — its band rows are in the
-      // store only via batch 0's append, so the MERGED band filter must
-      // keep them flowing into the candidate join (a stale filter would
-      // drop them pre-join and admit the duplicate)
-      input.addData((20L, textB), (21L, textC))
-      query.processAllAvailable()
-      query.stop()
-      val got = spark.read.parquet(outPath)
-        .select("doc_id", "text", "__batch_id")
-        .as[(Long, String, Long)].collect().sortBy(_._1)
-      assert(got.toSeq == Seq((11L, textB, 0L), (21L, textC, 1L)))
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_bands")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_sigs")
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
-    }
-  }
-
-  test("bloomSimhashNoveltyGate: merged band filter gates cross-batch dups") {
-    implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft-bloom-sh")
-    val outPath = base.resolve("sink").toString
-    val plainOut = base.resolve("plainsink").toString
-    val storePath = base.resolve("store").toString
-    val plainStorePath = base.resolve("plainstore").toString
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-    val table = s"bloom_sh_spec_$nonce"
-    val plainTable = s"plain_sh_spec_$nonce"
-    val textA = "the quick brown fox jumps over the lazy dog again and again"
-    val textB = "pack my box with five dozen liquor jugs before the dawn comes"
-    val textC = "sphinx of black quartz judge my vow under the evening stars"
-    try {
-      // pre-seed both fingerprint stores so batch 0 builds a band filter
-      for ((t, p) <- Seq((table, storePath), (plainTable, plainStorePath)))
-        graft.dedup.Dedup.simhashIncremental(
-          graft.dedup.Dedup.simhash(
-            Seq((1L, textA)).toDF("doc_id", "text"), "doc_id", "text"),
-          "doc_id", t, p)
-      val input = MemoryStream[(Long, String)]
-      val query = input.toDF().toDF("doc_id", "text")
-        .writeStream
-        .foreachBatch(StreamingOps.bloomSimhashNoveltyGate(
-          "doc_id", "text", table, storePath, outPath,
-          expectedItems = 10000))
-        .outputMode("update").start()
-      // batch 0: a copy of the seeded text (hamming 0, gated) + novel textB
-      input.addData((10L, textA), (11L, textB))
-      query.processAllAvailable()
-      // batch 1: copy of batch-0's textB — its band rows are in the store
-      // only via batch 0's append, so the MERGED band filter must keep
-      // them flowing into the candidate join (a stale filter would drop
-      // them pre-join and admit the duplicate)
-      input.addData((20L, textB), (21L, textC))
-      query.processAllAvailable()
-      query.stop()
-      val got = spark.read.parquet(outPath)
-        .select("doc_id", "text", "__batch_id")
-        .as[(Long, String, Long)].collect().sortBy(_._1)
-      assert(got.toSeq == Seq((11L, textB, 0L), (21L, textC, 1L)))
-      // output identical to the PLAIN gate run over the same batches
-      val plain = StreamingOps.simhashNoveltyGateEachBatch(
-        "doc_id", "text", plainTable, plainStorePath, plainOut) _
-      plain(Seq((10L, textA), (11L, textB)).toDF("doc_id", "text"), 0L)
-      plain(Seq((20L, textB), (21L, textC)).toDF("doc_id", "text"), 1L)
-      val plainGot = spark.read.parquet(plainOut)
-        .select("doc_id", "text", "__batch_id")
-        .as[(Long, String, Long)].collect().sortBy(_._1)
-      assert(got.toSeq == plainGot.toSeq)
-    } finally {
-      for (t <- Seq(table, plainTable)) {
-        spark.sql(s"DROP TABLE IF EXISTS ${t}_bands")
-        spark.sql(s"DROP TABLE IF EXISTS ${t}_fps")
-      }
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
-    }
-  }
-
-  test("bloomEmbeddingNoveltyGate: merged band filter gates cross-batch dups") {
-    implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft-bloom-emb")
-    val outPath = base.resolve("sink").toString
-    val plainOut = base.resolve("plainsink").toString
-    val storePath = base.resolve("store").toString
-    val plainStorePath = base.resolve("plainstore").toString
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-    val table = s"bloom_emb_spec_$nonce"
-    val plainTable = s"plain_emb_spec_$nonce"
-    val vA = Array(1f, 0f, 0f, 0f)
-    val vB = Array(0f, 1f, 0f, 0f)
-    val vC = Array(0f, 0f, 1f, 0f)
-    try {
-      // pre-seed both vector stores so batch 0 builds a band filter
-      for ((t, p) <- Seq((table, storePath), (plainTable, plainStorePath)))
-        graft.dedup.Dedup.embeddingIncremental(
-          Seq((1L, vA)).toDF("vec_id", "embedding"),
-          "vec_id", "embedding", t, p, minCosine = 0.95)
-      val input = MemoryStream[(Long, Array[Float])]
-      val query = input.toDF().toDF("vec_id", "embedding")
-        .writeStream
-        .foreachBatch(StreamingOps.bloomEmbeddingNoveltyGate(
-          "vec_id", "embedding", table, storePath, outPath,
-          expectedItems = 10000, minCosine = 0.95))
-        .outputMode("update").start()
-      // batch 0: a copy of the seeded vA (cosine 1.0, gated) + novel vB
-      input.addData((10L, vA), (11L, vB))
-      query.processAllAvailable()
-      // batch 1: copy of batch-0's vB — store membership via batch 0's
-      // append only, so gating it requires the MERGED band filter
-      input.addData((20L, vB), (21L, vC))
-      query.processAllAvailable()
-      query.stop()
-      val got = spark.read.parquet(outPath)
-        .select("vec_id", "__batch_id")
-        .as[(Long, Long)].collect().sortBy(_._1)
-      assert(got.toSeq == Seq((11L, 0L), (21L, 1L)))
-      // output identical to the PLAIN gate run over the same batches
-      val plain = StreamingOps.embeddingNoveltyGateEachBatch(
-        "vec_id", "embedding", plainTable, plainStorePath, plainOut,
-        minCosine = 0.95) _
-      plain(Seq((10L, vA), (11L, vB)).toDF("vec_id", "embedding"), 0L)
-      plain(Seq((20L, vB), (21L, vC)).toDF("vec_id", "embedding"), 1L)
-      val plainGot = spark.read.parquet(plainOut)
-        .select("vec_id", "__batch_id")
-        .as[(Long, Long)].collect().sortBy(_._1)
-      assert(got.toSeq == plainGot.toSeq)
-    } finally {
-      for (t <- Seq(table, plainTable)) {
-        spark.sql(s"DROP TABLE IF EXISTS ${t}_bands")
-        spark.sql(s"DROP TABLE IF EXISTS ${t}_vecs")
-      }
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
-    }
-  }
-
   test("minhashNoveltyGateEachBatch: near-dup stream docs are gated by the store") {
     implicit val sqlCtx = spark.sqlContext
     val base = Files.createTempDirectory("graft-mh-novelty")
@@ -847,65 +625,6 @@ class StreamingOpsSpec extends SparkSpec {
     }
   }
 
-  test("bloomSegmentNoveltyGate: batch N's dup segments of batch N-1 gate through the merged filter") {
-    implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft-bloom-segnovelty")
-    val outPath = base.resolve("sink").toString
-    val plainOut = base.resolve("plainsink").toString
-    val storePath = base.resolve("store").toString
-    val plainStorePath = base.resolve("plainstore").toString
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-    val table = s"bloom_segnovelty_spec_$nonce"
-    val plainTable = s"plain_segnovelty_spec_$nonce"
-    try {
-      // pre-seed both stores so batch 0 builds a non-empty filter
-      val seed = Seq((1L, "a b")).toDF("doc_id", "text")
-      graft.ops.Segments.dedupSegmentsIncremental(seed, 2, table, storePath)
-      graft.ops.Segments.dedupSegmentsIncremental(seed, 2, plainTable,
-        plainStorePath)
-      val input = MemoryStream[(Long, String)]
-      val query = input.toDF().toDF("doc_id", "text")
-        .writeStream
-        .foreachBatch(StreamingOps.bloomSegmentNoveltyGate(
-          2, table, storePath, outPath, expectedItems = 10000))
-        .outputMode("update").start()
-      val batches = Seq(
-        // batch 0: "a b" is a store dup (pre-seeded); "c d" is novel
-        Seq((10L, "a b c d")),
-        // batch 1: "c d" is in the store ONLY via batch 0's append, so
-        // gating it requires the MERGED filter (a stale filter would
-        // prove it "definitely new" and leak it around the verify join)
-        Seq((20L, "c d e f")),
-        // batch 2: dup of batch-1's "e f", same reasoning one merge later
-        Seq((30L, "e f g h")))
-      batches.foreach { b => input.addData(b: _*); query.processAllAvailable() }
-      query.stop()
-      val got = spark.read.parquet(outPath)
-        .select("doc_id", "n_segs", "n_kept", "text_dedup", "__batch_id")
-        .as[(Long, Long, Long, String, Long)].collect().sortBy(_._1)
-      assert(got.toSeq == Seq(
-        (10L, 2L, 1L, "c d", 0L),
-        (20L, 2L, 1L, "e f", 1L),
-        (30L, 2L, 1L, "g h", 2L)))
-      // output identical to the PLAIN segment gate over the same batches
-      val plain = StreamingOps.segmentNoveltyGateEachBatch(
-        2, plainTable, plainStorePath, plainOut) _
-      batches.zipWithIndex.foreach { case (b, i) =>
-        plain(b.toDF("doc_id", "text"), i.toLong) }
-      val plainGot = spark.read.parquet(plainOut)
-        .select("doc_id", "n_segs", "n_kept", "text_dedup", "__batch_id")
-        .as[(Long, Long, Long, String, Long)].collect().sortBy(_._1)
-      assert(got.toSeq == plainGot.toSeq)
-      // both stores: "a b" seed + "c d","e f","g h" — one hash per segment
-      assert(spark.table(table).count() == 4)
-      assert(spark.table(plainTable).count() == 4)
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.sql(s"DROP TABLE IF EXISTS $plainTable")
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
-    }
-  }
-
   test("spanNoveltyGateEachBatch: spans stripped against store and batch") {
     implicit val sqlCtx = spark.sqlContext
     val base = Files.createTempDirectory("graft-spannovelty")
@@ -936,49 +655,6 @@ class StreamingOpsSpec extends SparkSpec {
       assert(spark.table(table).count() == 7)
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
-    }
-  }
-
-  test("bloomSpanNoveltyGate: merged filter gates batch N's dups of batch N-1; output matches the plain gate") {
-    val base = Files.createTempDirectory("graft-bloom-spannovelty")
-    val outPath = base.resolve("sink").toString
-    val plainOut = base.resolve("plainsink").toString
-    val storePath = base.resolve("store").toString
-    val plainStorePath = base.resolve("plainstore").toString
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-    val table = s"bloom_spannovelty_spec_$nonce"
-    val plainTable = s"plain_spannovelty_spec_$nonce"
-    try {
-      // pre-seed both stores so batch 0 builds a non-empty filter
-      val seed = Seq((1L, "a b c")).toDF("doc_id", "text")
-      graft.dedup.SpanDedup.seedSpanStore(seed, 2, table, storePath)
-      graft.dedup.SpanDedup.seedSpanStore(seed, 2, plainTable,
-        plainStorePath)
-      val bloomGate = StreamingOps.bloomSpanNoveltyGate(
-        2, table, storePath, outPath, expectedItems = 1000L)
-      val plainGate = StreamingOps.spanNoveltyGateEachBatch(
-        2, plainTable, plainStorePath, plainOut) _
-      // batch 0: "a b" hits the seeded store; "x y" is new
-      val b0 = Seq((10L, "a b x y")).toDF("doc_id", "text")
-      // batch 1: "x y" duplicates batch 0 — reachable only if the fold
-      // advanced the filter past the seed snapshot
-      val b1 = Seq((20L, "p x y q")).toDF("doc_id", "text")
-      for ((b, i) <- Seq(b0, b1).zipWithIndex) {
-        bloomGate(b, i.toLong); plainGate(b, i.toLong)
-      }
-      val got = spark.read.parquet(outPath)
-        .select("doc_id", "text").as[(Long, String)]
-        .collect().toSeq.sortBy(_._1)
-      val plain = spark.read.parquet(plainOut)
-        .select("doc_id", "text").as[(Long, String)]
-        .collect().toSeq.sortBy(_._1)
-      assert(got == plain)
-      assert(got == Seq((10L, "x y"), (20L, "p q")))
-      assert(spark.table(table).count() == spark.table(plainTable).count())
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.sql(s"DROP TABLE IF EXISTS $plainTable")
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
     }
   }
@@ -1030,6 +706,41 @@ class StreamingOpsSpec extends SparkSpec {
         .as[(Long, Long, String)].collect().toSeq
       assert(got == Seq((1L, 2L, "a b c d")))
       assert(spark.table(table).count() == 2)
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
+    }
+  }
+
+  test("segmentNoveltyGateEachBatch: replay after a torn store append adds no duplicate store rows") {
+    val base = Files.createTempDirectory("graft-segnovelty-torn")
+    val outPath = base.resolve("sink").toString
+    val storePath = base.resolve("store").toString
+    val table = s"segnovelty_torn_spec_${java.util.UUID.randomUUID()
+      .toString.replace("-", "")}"
+    try {
+      val gate = StreamingOps.segmentNoveltyGateEachBatch(
+        2, table, storePath, outPath) _
+      val b0 = Seq((1L, "a b c d")).toDF("doc_id", "text")
+      gate(b0, 0L)
+      // tear the append: the store keeps only one of the batch's two
+      // segment hashes, as if the crash hit midway through it
+      val committed = spark.table(table).orderBy("text_hash").limit(1)
+        .localCheckpoint()
+      spark.sql(s"DROP TABLE $table")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(storePath))
+      graft.dedup.Dedup.appendHashStore(committed, table, storePath)
+      assert(spark.table(table).count() == 1)
+      // the replay re-gates against the torn store and appends only the
+      // hash the first attempt did not commit
+      gate(b0, 0L)
+      val store = spark.table(table)
+      assert(store.count() == 2)
+      assert(store.distinct().count() == 2)
+      val got = spark.read.parquet(outPath)
+        .select("doc_id", "n_kept", "text_dedup")
+        .as[(Long, Long, String)].collect().toSeq
+      assert(got == Seq((1L, 2L, "a b c d")))
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
