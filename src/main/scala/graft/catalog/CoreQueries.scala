@@ -333,7 +333,7 @@ object CoreQueries {
     "q15_growth_sim" -> Q(
       (s, dir) => {
         val last = cum(s, dir).orderBy(desc("d")).limit(1).select("d", "cum")
-        Analytics.growthSim(last, 14, 1.5).orderBy("d")
+        Analytics.growthSim(last, 14, lit(1.5)).orderBy("d")
       },
       Some(
         s"""WITH cum AS ($cumSql),
@@ -349,7 +349,7 @@ object CoreQueries {
         val actual = cum(s, dir).select(col("d"), col("cum").as("count"))
         val last = actual.orderBy(desc("d")).limit(1)
           .select(col("d"), col("count").as("cum"))
-        val predicted = Analytics.growthSim(last, 14, 1.5)
+        val predicted = Analytics.growthSim(last, 14, lit(1.5))
         Analytics.tagAndUnion(actual, predicted).orderBy("series", "d")
       },
       Some(

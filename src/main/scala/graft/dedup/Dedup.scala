@@ -1123,33 +1123,11 @@ object Dedup {
     */
   def compactMinhashStore(spark: org.apache.spark.sql.SparkSession,
                           storeTable: String, storePath: String,
-                          idCol: String, nBuckets: Int = 8): Unit =
-    compactTwoTableStore(spark, storeTable, storePath, "sigs", idCol, nBuckets)
-
-  /** [[compactHashStore]] for [[embeddingIncremental]]'s band + vector
-    * tables.
-    */
-  def compactVecStore(spark: org.apache.spark.sql.SparkSession,
-                      storeTable: String, storePath: String,
-                      idCol: String, nBuckets: Int = 8): Unit =
-    compactTwoTableStore(spark, storeTable, storePath, "vecs", idCol, nBuckets)
-
-  /** [[compactHashStore]] for [[simhashIncremental]]'s band + fingerprint
-    * tables.
-    */
-  def compactFpStore(spark: org.apache.spark.sql.SparkSession,
-                     storeTable: String, storePath: String,
-                     idCol: String, nBuckets: Int = 8): Unit =
-    compactTwoTableStore(spark, storeTable, storePath, "fps", idCol, nBuckets)
-
-  private def compactTwoTableStore(spark: org.apache.spark.sql.SparkSession,
-                                   storeTable: String, storePath: String,
-                                   sub: String, idCol: String,
-                                   nBuckets: Int): Unit = {
+                          idCol: String, nBuckets: Int = 8): Unit = {
     graft.pipelines.Sinks.compactBucketed(spark, s"${storeTable}_bands",
       s"$storePath/bands", Seq("band", "bkey"), nBuckets, dedupRows = true)
-    graft.pipelines.Sinks.compactBucketed(spark, s"${storeTable}_$sub",
-      s"$storePath/$sub", Seq(idCol), nBuckets, dedupRows = true)
+    graft.pipelines.Sinks.compactBucketed(spark, s"${storeTable}_sigs",
+      s"$storePath/sigs", Seq(idCol), nBuckets, dedupRows = true)
   }
 
   /** Exact n-gram Jaccard via inverted shingle index: pairs sharing ≥1

@@ -73,25 +73,6 @@ object Blooms {
     ensureRegistered()
     call_function("bloom_agg", hash, lit(expectedItems), lit(numBits))
   }
-
-  /** `bloomMightContain(filter, hash)` → boolean; `filter` must be a
-    * foldable binary (a driver-held filter passed as a literal — the
-    * same shape Spark's own runtime filter injects after its subquery
-    * executes) or a scalar subquery.
-    */
-  def bloomMightContain(filter: Column, hash: Column): Column = {
-    ensureRegistered()
-    call_function("bloom_might_contain", filter, hash)
-  }
-
-  /** `bloomAny(filter, hashes)` → boolean: does ANY element of an
-    * `array<long>` hash column hit the filter? The set-valued
-    * counterpart of [[bloomMightContain]] — see [[BloomAny]].
-    */
-  def bloomAny(filter: Column, hashes: Column): Column = {
-    ensureRegistered()
-    call_function("bloom_any", filter, hashes)
-  }
 }
 
 /** Identity over a `bigint` that BLOCKS constant folding and surfaces

@@ -61,6 +61,23 @@ object Analytics {
     cum.withColumn(out, col(cumCol) / lag(col(cumCol), 1).over(w))
   }
 
+  /** W1+W3 in one window — the growth frame `(d, n, cum, rate)` of a
+    * daily count series `(d, n)`. The previous running total is
+    * `cum - n`, so the day-over-day ratio needs no `lag` window:
+    * `rate = cum / nullif(cum - n, 0)` equals [[growthRates]] over
+    * [[cumSum]] bit for bit on a count series (every `n` ≥ 1). Only the
+    * first row's `cum - n` is 0, so its rate is null and every later rate
+    * is set. The whole frame is one aggregate and one `Window.orderBy`,
+    * and every analytic that selects from it compiles to the same
+    * stages. The daily series is one row per day, so a narrow
+    * `coalesce(1)` gathers it onto one partition: the window, which
+    * needs a single partition anyway, then runs without a second shuffle
+    * (and its job).
+    */
+  def growthFrame(daily: DataFrame): DataFrame =
+    cumSum(daily.coalesce(1)).withColumn("rate",
+      col("cum") / nullif(col("cum") - col("n"), lit(0L)))
+
   /** W4 — lag difference with default 0 for the first row (reference:
     * cv-csv.py:86-94 `new_tests = tests - prev_tests`, carried loop var).
     */
@@ -93,18 +110,41 @@ object Analytics {
     tailN(rates.filter(col(valueCol).isNotNull), n, orderCol)
       .agg(round(avg(col(valueCol)), 6).as(out))
 
+  /** A6 as a running column of the growth frame ([[growthFrame]]): `gf`
+    * is the mean of the trailing `n` rates ending at each day, rounded to
+    * 6 places, and `last` marks the final day. Only the first day's rate
+    * is null and `avg` skips nulls, so on the last day `gf` equals
+    * [[trailingMean]] (non-null rates, then the last `n`) bit for bit:
+    * the sliding frame adds its rows in date order, as the aggregate
+    * does. One window, no aggregate and no driver fetch.
+    */
+  def trailingGrowth(frame: DataFrame, n: Int): DataFrame = {
+    val w = Window.orderBy("d")
+    frame
+      .withColumn("gf", round(avg(col("rate")).over(w.rowsBetween(1 - n, 0)), 6))
+      .withColumn("last", lead(col("d"), 1).over(w).isNull)
+  }
+
+  /** G1's closed form for predicted day `i`: `round(cum * gf^i)`. */
+  def simCount(cum: Column, gf: Column, i: Column): Column =
+    round(cum * pow(gf, i)).cast("long")
+
   /** G1 — growth simulation as a closed-form generator (reference:
     * cv-stats.py:70-83 compounds sequentially in a loop; the closed form
     * `count_i = last * gf^i` parallelizes and is what we generate with
     * `sequence` + `explode` — no driver-side loop, no custom Generator).
     * `last` must be a 1-row frame with columns (`d` date, `cum` long).
+    * `gf` is the growth factor, evaluated over `last`: a constant
+    * (`lit(1.5)`) or a column of `last` itself. A factor computed from
+    * the data stays a column, so the generated code does not change
+    * when the factor does.
     */
-  def growthSim(last: DataFrame, days: Int, gf: Double): DataFrame =
+  def growthSim(last: DataFrame, days: Int, gf: Column): DataFrame =
     last.select(explode(sequence(lit(1), lit(days))).as("i"),
-        col("d"), col("cum"))
+        col("d"), col("cum"), gf.as("__gf"))
       .select(
         date_add(col("d"), col("i")).as("d"),
-        round(col("cum") * pow(lit(gf), col("i"))).cast("long").as("count"))
+        simCount(col("cum"), col("__gf"), col("i")).as("count"))
 
   /** As-of join against a daily series: each left row picks the most
     * recent `series` value with date <= its own date.

@@ -15,6 +15,12 @@ object CountyStats {
 
   /** `top_five_counties` shape: (county, date, count, normalized_count)
     * (FIXTURES.md F5). `counties` must carry (county, population).
+    *
+    * The top-k counties' daily counts are at most k rows per day, so a
+    * narrow `coalesce(1)` gathers them for the per-county window without
+    * a second shuffle (and its job). The ranking keeps its own scan: the
+    * optimizer pushes the top-k semi-join down to the cases scan, so
+    * ranking from the (county, day) aggregate would not share it.
     */
   def topFiveCounties(cases: DataFrame, counties: DataFrame,
                       k: Int = 5, dateCol: String = "date_added"): DataFrame = {
@@ -23,7 +29,7 @@ object CountyStats {
     val daily = Analytics.dailyCountsByKey(
       cases.join(broadcast(top), Seq("county"), "left_semi"),
       col("county"), col(dateCol))
-    Analytics.cumSumByKey(daily)
+    Analytics.cumSumByKey(daily.coalesce(1))
       .select(col("k").as("county"), col("d").as("date"),
         col("cum").as("count"))
       .join(broadcast(counties.select("county", "population")),

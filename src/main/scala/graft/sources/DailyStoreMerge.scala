@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, count, countDistinct, lit}
+import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, sum, when}
 
 /** Engine-native row-level MERGE for the dailystore — the last S8
   * surface (SURVEY.md §2.1; reference cv.py:126-132 runs `update_one`
@@ -28,7 +28,9 @@ import org.apache.spark.sql.functions.{broadcast, col, count, countDistinct, lit
   * dailystore's day partitioning:
   *
   *  1. DISCOVERY: one column-pruned scan of (pcol, key) over the store,
-  *     semi-joined against the broadcast update keys, finds the days
+  *     semi-joined against the broadcast update keys (the updates' key
+  *     column as is: the contract below already proved it one row per
+  *     key, so no distinct stage precedes either join), finds the days
   *     where updated keys CURRENTLY live; unioned with the updates' own
   *     days it yields the touched set. This is the honest cost of MERGE
   *     without a key index (Delta's MERGE pays the same
@@ -51,9 +53,9 @@ import org.apache.spark.sql.functions.{broadcast, col, count, countDistinct, lit
   * written: their files stay byte-identical (DailyStoreMergeSpec pins
   * names + bytes). At 100 TB that is the difference between rewriting
   * a handful of day partitions and rewriting the store: cost is
-  * O(touched days' data) + one two-column discovery scan. The update
-  * keys are BROADCAST on both joins only while they are measurably
-  * small: the contract aggregate already counts the updates, and above
+  * O(touched days' data) + one two-column discovery scan. The updates'
+  * key column is BROADCAST on both joins only while it is measurably
+  * small: the contract aggregate already counts its keys, and above
   * `spark.graft.merge.maxBroadcastKeys` (default 1,000,000 — ~32 MB of
   * broadcast at a 32-byte key) both joins fall through to a
   * `shuffle_hash`-hinted join instead, so a 10⁸-key tombstone/GDPR
@@ -62,8 +64,10 @@ import org.apache.spark.sql.functions.{broadcast, col, count, countDistinct, lit
   * equality across both regimes pinned in DailyStoreMergeSpec).
   *
   * Driver state is bounded by construction: the only collects are the
-  * touched-day values (≤ the store's day domain — 3,650 for a 10-year
-  * daily store) and a 1-row sanity aggregate over the updates.
+  * discovered day values and one aggregate over the updates, a row per
+  * update day, that both checks the contract and yields the updates'
+  * own days. Both are bounded by the store's day domain (3,650 for a
+  * 10-year daily store).
   *
   * Contract on `updates`: one row per key (keyed REPLACE is ambiguous
   * under duplicates — rejected loudly), non-null key and partition
@@ -147,21 +151,32 @@ object DailyStoreMerge {
       updates: DataFrame, key: String, pcol: String,
       assumeKeyDayStable: Boolean, cols: Array[String],
       requireUniqueMatchedKeys: Boolean, addColumns: Boolean): Seq[String] = {
-    // one small-side aggregate validates the whole updates contract:
-    // n == count(key)  → no null keys;  n == count(pcol) → no null days;
-    // n == n_distinct(key) → one row per key
-    val chk = updates.agg(
-      count(lit(1)).as("n"), count(col(key)).as("nk"),
-      count(col(pcol)).as("np"), countDistinct(col(key)).as("nd")).head()
-    val n = chk.getLong(0)
+    // one small-side aggregate validates the whole updates contract and
+    // gathers the updates' own days, the insert half of the touched set:
+    // per key its rows, then per day the rows, the rows under a null key,
+    // the rows with a day and the keys. Summed over the days: no row
+    // under a null key → no null keys; n == rows with a day → no null
+    // days; n == keys → one row per key. Grouped by day, the collected
+    // rows are bounded by the day domain.
+    val perDay = updates
+      .groupBy(col(key)).agg(count(lit(1)).as("__rows"),
+        count(col(pcol)).as("__dated"), max(col(pcol)).as("__day"))
+      .groupBy(col("__day").cast("string")).agg(
+        sum(col("__rows")), sum(when(col(key).isNull, col("__rows"))),
+        sum(col("__dated")), count(col(key)))
+      .collect()
+    def total(i: Int): Long =
+      perDay.map(r => if (r.isNullAt(i)) 0L else r.getLong(i)).sum
+    val n = total(1)
     if (n == 0) return Nil
-    require(chk.getLong(1) == n,
+    require(total(2) == 0,
       s"dailystore merge: updates carry null '$key' values")
-    require(chk.getLong(2) == n,
+    require(total(3) == n,
       s"dailystore merge: updates carry null '$pcol' values")
-    require(chk.getLong(3) == n,
+    require(total(4) == n,
       s"dailystore merge: updates carry duplicate '$key' values — " +
         "keyed replace needs exactly one row per key")
+    val insertDays: Seq[String] = perDay.map(_.getString(0)).toSeq
 
     val hconf = spark.sessionState.newHadoopConf()
     val live = new Path(path)
@@ -198,8 +213,7 @@ object DailyStoreMerge {
       // Restamp to exactly this seed's columns when a sidecar exists.
       if (readSchemaSidecar(fs, live).exists(_ != cols.toSet))
         writeSchemaSidecar(fs, live, cols.toSet)
-      return updates.select(col(pcol).cast("string")).distinct()
-        .collect().map(_.getString(0)).toSeq.sorted
+      return insertDays.sorted
     }
     // column-set guard (class doc): the rewrite writes the updates'
     // columns, so the sets must match exactly — unless `addColumns`
@@ -314,9 +328,10 @@ object DailyStoreMerge {
     // nowhere — instead of wedging every later old-set merge)
     if (sidecarCols.isEmpty || (addColumns && storeCols != cols.toSet))
       writeSchemaSidecar(fs, live, cols.toSet)
-    // the contract aggregate proved one row per key, so n IS the key
-    // cardinality — the measured size that picks broadcast vs shuffle
-    val updKeys = sizedKeySide(spark, updates.select(col(key)).distinct(), n)
+    // the contract aggregate proved one row per key, so the key column
+    // needs no distinct and n IS the key cardinality — the measured
+    // size that picks broadcast vs shuffle
+    val updKeys = sizedKeySide(spark, updates.select(col(key)), n)
     // DISCOVERY is the only step that reads beyond the touched days:
     // one column-pruned full scan, read with the UPDATES' schema (pins
     // the partition column's type against directory-name inference —
@@ -327,9 +342,6 @@ object DailyStoreMerge {
         .select(col(pcol), col(key))
         .join(updKeys, Seq(key), "left_semi")
         .select(col(pcol).cast("string")).distinct()
-        .collect().map(_.getString(0)).toSeq
-    val insertDays: Seq[String] =
-      updates.select(col(pcol).cast("string")).distinct()
         .collect().map(_.getString(0)).toSeq
     val touched = (daysWithKeys ++ insertDays).distinct.sorted
     // the REWRITE reads ONLY the touched day directories, resolved

@@ -446,12 +446,6 @@ object StreamingOps {
       }
   }
 
-  /** Complete-mode snapshot aggregation (≡ truncate-and-reload every run,
-    * cv-api.py:184-207): the sink always holds the full current aggregate.
-    */
-  def snapshotCountsByKey(events: DataFrame, keyCol: String): DataFrame =
-    events.groupBy(col(keyCol)).agg(count(lit(1)).as("n"))
-
   /** Continuous corpus profiling: maintain ONE stream-wide Misra-Gries
     * heavy-hitter summary (≤ `cap` counters + the exact token total)
     * across micro-batches, at O(cap) state and O(batch) work per batch —

@@ -27,11 +27,6 @@ object Timing {
     ts(ts.size / 2)
   }
 
-  /** [[medianSec]] over a DataFrame builder, each pass fully
-    * materialized — the standard per-query probe. */
-  def medianDf(reps: Int)(f: () => DataFrame): Double =
-    medianSec(reps)(() => materialize(f()))
-
   /** The r15 host-contention stamp — THE one implementation, used by
     * [[graft.Bench]] and the solo tools alike (the README accept rule
     * compares `foreign_cores` across them, so the formula must not

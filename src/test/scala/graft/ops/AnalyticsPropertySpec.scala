@@ -49,10 +49,38 @@ object AnalyticsPropertySpec extends Properties("Analytics") {
       roundTrip.toSeq == counts
     }
 
+  /** Daily counts (n >= 1) on strictly increasing days with random gaps:
+    * the shape `dailyCounts` produces. */
+  private val gappedGen: Gen[List[(Int, Long)]] = for {
+    n <- Gen.choose(1, 12)
+    gaps <- Gen.listOfN(n, Gen.choose(1, 4))
+    counts <- Gen.listOfN(n, Gen.choose(1L, 1000L))
+  } yield gaps.scanLeft(0)(_ + _).tail.zip(counts)
+
+  private def bits(v: Option[Double]): Option[Long] =
+    v.map(java.lang.Double.doubleToRawLongBits)
+
+  property("growth frame: rate and trailing-5 factor equal cumSum -> " +
+    "growthRates -> trailingMean bit for bit") =
+    forAll(gappedGen) { series =>
+      val daily = series.map { case (day, n) =>
+        (Date.valueOf(java.time.LocalDate.of(2020, 1, 1).plusDays(day.toLong)), n)
+      }.toDF("d", "n")
+      val frame = Analytics.growthFrame(daily)
+      val rates = frame.orderBy("d").select("rate").as[Option[Double]].collect()
+      val ref = Analytics.growthRates(Analytics.cumSum(daily))
+      val refRates = ref.orderBy("d").select("rate").as[Option[Double]].collect()
+      val gf = Analytics.trailingGrowth(frame, 5).filter(col("last"))
+        .select("gf").as[Option[Double]].collect()
+      val refGf = Analytics.trailingMean(ref, 5).as[Option[Double]].collect()
+      rates.map(bits).toSeq == refRates.map(bits).toSeq &&
+        gf.length == 1 && bits(gf.head) == bits(refGf.head)
+    }
+
   property("growthSim equals the closed form last*gf^i") =
     forAll(Gen.choose(1L, 1000L), Gen.choose(1, 20)) { (last, days) =>
       val df = Seq((Date.valueOf("2020-03-01"), last)).toDF("d", "cum")
-      val got = Analytics.growthSim(df, days, 2.0).orderBy("d")
+      val got = Analytics.growthSim(df, days, lit(2.0)).orderBy("d")
         .select("count").as[Long].collect()
       got.toSeq == (1 to days).map(i => last * (1L << i))
     }

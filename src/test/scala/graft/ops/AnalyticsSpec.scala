@@ -70,7 +70,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("G1 growthSim: closed form equals last*gf^i on consecutive days") {
     val last = Seq((d("2020-03-04"), 10L)).toDF("d", "cum")
-    val got = Analytics.growthSim(last, 3, 2.0).orderBy("d")
+    val got = Analytics.growthSim(last, 3, lit(2.0)).orderBy("d")
       .as[(Date, Long)].collect()
     assert(got.toSeq == Seq(
       (d("2020-03-05"), 20L), (d("2020-03-06"), 40L), (d("2020-03-07"), 80L)))

@@ -45,6 +45,20 @@ class StatsPipelinesSpec extends SparkSpec {
     assert(got.filter("series = 'actual'").count() == 3)
   }
 
+  test("E2 growthSeries with simulation on an empty input: no rows") {
+    val none = Seq.empty[Date].toDF("date_added")
+    assert(GrowthStats.growthSeries(none, simulate = true).collect().isEmpty)
+  }
+
+  test("E2 growthSeries with simulation on one day: the actual row, no " +
+    "prediction (a single day has no growth rate)") {
+    val oneDay = Seq("2020-03-01", "2020-03-01", "2020-03-01")
+      .map(Date.valueOf).toDF("date_added")
+    val got = GrowthStats.growthSeries(oneDay, simulate = true)
+      .as[(Date, Long, String)].collect()
+    assert(got.toSeq == Seq((d("2020-03-01"), 3L, "actual")))
+  }
+
   test("P13 excludeOpenDay drops today/yesterday rows") {
     val withOpen = cases.unionByName(
       spark.range(2).select(current_date().as("date_added")))

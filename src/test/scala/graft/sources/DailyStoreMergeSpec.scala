@@ -73,6 +73,35 @@ class DailyStoreMergeSpec extends SparkSpec {
     assert(!new java.io.File(dir, "d=2020-03-03").exists())
   }
 
+  test("touched days and results: insert-only days touch only the " +
+    "updates' days; moved keys also touch the days they leave") {
+    val ins = freshDir("insonly")
+    seed(ins)
+    val before0302 = dayFiles(ins, "2020-03-02")
+    // new keys only: one into an existing day, one into a new day
+    val insTouched = DailyStoreMerge.mergeByKey(spark, ins,
+      rows(("2020-03-01", 10, "j"), ("2020-03-05", 11, "k")), key = "k")
+    assert(insTouched == Seq("2020-03-01", "2020-03-05"))
+    assert(readBack(ins) == Seq(
+      (d("2020-03-01"), 1, "a"), (d("2020-03-01"), 2, "b"),
+      (d("2020-03-01"), 10, "j"),
+      (d("2020-03-02"), 3, "c"), (d("2020-03-02"), 4, "d"),
+      (d("2020-03-03"), 5, "e"), (d("2020-03-05"), 11, "k")))
+    assert(dayFiles(ins, "2020-03-02") == before0302)
+
+    val mv = freshDir("moved")
+    seed(mv)
+    // k=1 moves 03-01 -> 03-03, k=4 moves 03-02 -> a new day 03-05
+    val mvTouched = DailyStoreMerge.mergeByKey(spark, mv,
+      rows(("2020-03-03", 1, "A"), ("2020-03-05", 4, "D")), key = "k")
+    assert(mvTouched == Seq("2020-03-01", "2020-03-02", "2020-03-03",
+      "2020-03-05"))
+    assert(readBack(mv) == Seq(
+      (d("2020-03-01"), 2, "b"), (d("2020-03-02"), 3, "c"),
+      (d("2020-03-03"), 1, "A"), (d("2020-03-03"), 5, "e"),
+      (d("2020-03-05"), 4, "D")))
+  }
+
   test("merge is idempotent: re-applying the same updates is a no-op " +
     "on contents") {
     val dir = freshDir("idem")

@@ -42,6 +42,31 @@ class CheckpointsSpec extends SparkSpec {
     assert(persistentCount == afterFirst)
   }
 
+  test("closeSession releases that session's checkpoints and keeps " +
+    "other sessions' entries") {
+    val other = spark.newSession()
+    val mine = Checkpoints.scoped("spec:close")(spark.range(10).toDF("id"))
+    val theirs = Checkpoints.scoped("spec:close")(other.range(20).toDF("id"))
+    def live(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.logical match {
+        case l: org.apache.spark.sql.execution.LogicalRDD =>
+          spark.sparkContext.getPersistentRDDs.contains(l.rdd.id)
+        case other => fail(s"not a checkpoint: ${other.getClass.getName}")
+      }
+    assert(live(mine) && live(theirs))
+    Checkpoints.closeSession(other)
+    assert(live(mine), "another session's checkpoint was released")
+    assert(!live(theirs), "the closed session's checkpoint is still live")
+    assert(mine.count() == 10)
+    // the entry is gone: re-adopting the key in the closed session
+    // releases nothing of the first session's
+    val again = Checkpoints.scoped("spec:close")(other.range(5).toDF("id"))
+    assert(live(mine) && again.count() == 5)
+    Checkpoints.closeSession(other)
+    Checkpoints.close(spark, "spec:close")
+    assert(!live(mine))
+  }
+
   test("scoped canonicalClusters: repeat calls replace the final checkpoint") {
     val ids = spark.range(16).select(col("id").cast("string").as("doc_id"))
     val pairs = spark.range(15)
