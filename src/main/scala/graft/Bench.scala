@@ -602,9 +602,9 @@ object Bench {
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    // ERROR, not WARN: per-query function registration emits a WARN per
-    // re-registration, and hundreds of those can crowd the bounded output
-    // tail the driver keeps (the metric line must survive in it).
+    // ERROR, not WARN: q115's SQL-function install emits a WARN per
+    // re-registered name on every rep, and those can crowd the bounded
+    // output tail the driver keeps (the metric line must survive in it).
     spark.sparkContext.setLogLevel("ERROR")
 
     val names = SparkEntry.queries.keys.toSeq.sorted

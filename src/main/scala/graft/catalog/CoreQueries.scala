@@ -389,7 +389,6 @@ object CoreQueries {
     // ----- §2.9 typed Aggregator: compound growth (geometric mean) -----
     "q44_geo_mean_growth" -> Q(
       (s, dir) => {
-        graft.functions.Aggregators.register(s)
         Analytics.growthRates(cum(s, dir))
           .filter(col("rate").isNotNull)
           .agg(round(graft.functions.Aggregators.geoMeanGrowth(col("rate")), 6)

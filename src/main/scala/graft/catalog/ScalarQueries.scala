@@ -314,7 +314,6 @@ object ScalarQueries {
     // bit-equal; the oracle re-verified at all three SFs).
     "q50_percentiles" -> Q(
       (s, dir) => {
-        graft.functions.ExactPercentilesF.register2(s)
         import graft.functions.ExactPercentilesF.exactPercentiles2
         Tables(s, dir, "lineitem")
           .groupBy("l_returnflag")
@@ -384,10 +383,6 @@ object ScalarQueries {
     // folded correctly).
     "q97_weighted_percentiles" -> Q(
       (s, dir) => {
-        // register against the query's OWN session: the helper's
-        // active-session fallback lands in the wrong registry under
-        // `newSession()` audits (PlanAudit) and `Verify`'s child session
-        graft.functions.ExactPercentilesF.registerWeighted(s)
         import graft.functions.ExactPercentilesF.exactPercentilesWeighted
         Tables(s, dir, "lineitem")
           .groupBy(col("l_returnflag"), col("l_linestatus"),
@@ -427,7 +422,6 @@ object ScalarQueries {
     // remains the composable executor for samplePerGroup.
     "q89_rank_topn_agg" -> Q(
       (s, dir) => {
-        graft.functions.TopK.register(s)
         val joined = Tables(s, dir, "orders")
           .join(Tables(s, dir, "customer").hint("shuffle_hash"),
             col("o_custkey") === col("c_custkey"))

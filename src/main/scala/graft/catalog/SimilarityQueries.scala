@@ -119,7 +119,6 @@ object SimilarityQueries {
   private[catalog] def quantizedCosineTopK(
       s: org.apache.spark.sql.SparkSession, dir: String,
       k: Int): org.apache.spark.sql.DataFrame = {
-    graft.functions.QuantizedVec.register(s)
     val qLit = array(graft.functions.QuantizedVec.quantizeFloats(
       queryVec(s, dir).toArray).map(b => lit(b)): _*)
     Tables(s, dir, "embeddings").filter(col("vec_id") =!= 0)
@@ -166,7 +165,6 @@ object SimilarityQueries {
     // ----- same query through the native codegen'd Expression -----
     "q43_cosine_topk_native" -> Q(
       (s, dir) => {
-        graft.functions.Vectors.register(s)
         val emb = Tables(s, dir, "embeddings")
         val query = emb.filter(col("vec_id") === 0)
           .select("embedding").head().getSeq[Float](0)
@@ -296,7 +294,6 @@ object SimilarityQueries {
     // hash compare.
     "q93_embedding_centroids" -> Q(
       (s, dir) => {
-        graft.functions.VecCentroid.register(s)
         val cent = Tables(s, dir, "embeddings")
           .groupBy(pmod(col("vec_id"), lit(10L)).as("grp"))
           .agg(graft.functions.VecCentroid.vecCentroid(col("embedding"))

@@ -83,7 +83,6 @@ object TextQueries {
     // permutation provides is the same uniformization role xxhash plays.
     "q54_kmv_sample" -> Q(
       (s, dir) => {
-        graft.functions.Sketches.register(s)
         Tables(s, dir, "documents")
           .groupBy("lang")
           .agg(array_join(
@@ -113,7 +112,6 @@ object TextQueries {
     // branch (fewer than k distinct inputs -> buffer size, no estimation).
     "q60_kmv_fixture" -> Q(
       (s, dir) => {
-        graft.functions.Sketches.register(s)
         Tables(s, dir, "documents").filter(col("doc_id") < 200)
           .groupBy("lang")
           .agg(
@@ -145,7 +143,7 @@ object TextQueries {
 
     // ----- token counting: whitespace + BPE-ish regex classes -----
     "q31_token_stats" -> Q(
-      (s, dir) => { graft.functions.TermCounts.register(s)
+      (s, dir) => {
         Tables(s, dir, "documents")
         .select(col("doc_id"),
           // long, matching DuckDB LEN's BIGINT (paritycheck WARN-free)
@@ -162,7 +160,6 @@ object TextQueries {
     // ----- quality scoring: length/punct/stopword composite -----
     "q32_quality_score" -> Q(
       (s, dir) => {
-        graft.functions.Texts.register(s) // stopword_counts
         Tables(s, dir, "documents")
         .select(col("doc_id"),
           TextAnalysis.punctRatio(col("text")).as("punct_ratio"),
@@ -187,7 +184,6 @@ object TextQueries {
     // ----- language ID: stopword-count argmax with fixed tie order -----
     "q33_lang_id" -> Q(
       (s, dir) => {
-        graft.functions.Texts.register(s) // stopword_counts
         Tables(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
           TextAnalysis.langId(col("text")).as("pred_lang"))
@@ -234,7 +230,6 @@ object TextQueries {
     // too-short documents.
     "q76_repetition_stats" -> Q(
       (s, dir) => {
-        graft.functions.Texts.register(s)
         Tables(s, dir, "documents")
           .select(col("doc_id"),
             TextAnalysis.repetitionStats(col("text")).as("r"))
@@ -348,7 +343,6 @@ object TextQueries {
       (s, dir) => {
         // fused per-row expression — the explode + min-agg formulation
         // this replaced shuffled one row per shingle position
-        graft.functions.Texts.register(s)
         Tables(s, dir, "documents")
         .select(col("doc_id"),
           graft.functions.ShingleFingerprint
@@ -423,7 +417,6 @@ object TextQueries {
     // hash match proves the scalable decomposition exact.
     "q81_pack_chunks" -> Q(
       (s, dir) => {
-        graft.functions.TermCounts.register(s) // ws_token_count
         // materialized once: prefixSum's bucket-offsets branch and its
         // main branch both consume this frame, and re-tokenizing the
         // corpus per branch costs more than checkpointing 16 bytes/doc
@@ -486,7 +479,6 @@ object TextQueries {
     // repartitioning, retries, and appends.
     "q85_mixture_budget" -> Q(
       (s, dir) => {
-        graft.functions.TermCounts.register(s) // ws_token_count
         // materialized once (the q81 pattern): sampleToBudget consumes
         // its input from BOTH the stratum-total aggregate and the join
         // side — without this the corpus tokenizes twice per execution,
@@ -642,7 +634,6 @@ object TextQueries {
     // exchange bytes as a thousand-doc one).
     "q94_balanced_sample" -> Q(
       (s, dir) => {
-        graft.functions.TopK.register(s)
         graft.ops.Sampling.samplePerGroup(
             Tables(s, dir, "documents"), "lang", "doc_id", k = 5, salt = "v1")
           .orderBy("lang", "rk")
@@ -976,9 +967,9 @@ object TextQueries {
     //      scan with q113's coalesce output convention.
     "q115_stop_token_tier_sql" -> Q(
       (s, dir) => {
-        graft.functions.MisraGriesAgg.register(s)
-        graft.functions.TermCounts.register(s)
-        graft.functions.StripStopTokens.register(s)
+        // SQL text names graft functions: install them on sessions
+        // built without GraftExtensions (ExplainQ, PlanAudit)
+        graft.functions.GraftFunctions.register(s)
         Tables(s, dir, "documents")
           .createOrReplaceTempView("v_docs_stoptier")
         // 1. PROFILE: sketch → candidates → exact verify counts

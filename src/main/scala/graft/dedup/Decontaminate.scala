@@ -61,7 +61,6 @@ object Decontaminate {
                           expectedProbeShingles: Long = 1L << 20,
                           bitsPerItem: Int = 8): DataFrame = {
     val s = docs.sparkSession
-    graft.functions.Texts.register(s)
     // distinct probe shingle hashes: small, reused by the filter build
     // and the verify join. persist, NOT localCheckpoint: the cache
     // fills inside the Bloom-build action below instead of spending a

@@ -215,7 +215,6 @@ object Dedup {
                   bands: Int, minEstJaccard: Double,
                   maxBucket: Int = 500): DataFrame = {
     val s = batchSig.sparkSession
-    graft.functions.Texts.register(s) // sig_overlap
     val bandsT = s"${storeTable}_bands"
     val sigsT = s"${storeTable}_sigs"
     if (!s.catalog.tableExists(bandsT)) batchSig
@@ -307,7 +306,6 @@ object Dedup {
     * O(len) compute with an 8-byte shuffle key.
     */
   def shingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    graft.functions.Texts.register(df.sparkSession)
     df.select(col(idCol),
         explode(graft.functions.Texts.ngramHashes(col(textCol), n, ShingleHashMod))
           .as("shingle"))
@@ -346,7 +344,6 @@ object Dedup {
   private[graft] def withMinhashSig(df: DataFrame, textCol: String,
                                     numHashes: Int, shingleN: Int): DataFrame = {
     val p = 2147483647L
-    graft.functions.Texts.register(df.sparkSession)
     // null-text docs are dropped, preserving the explode+agg row set
     // (explode of a null array emitted nothing). Without the filter a
     // null sig would give every null-text doc the SAME band key
@@ -386,7 +383,6 @@ object Dedup {
     // the fused form's clean integer-division slicing as the DEFINED
     // behavior outside that contract, where the composable form's
     // Column./ double arithmetic truncated slice starts per band).
-    graft.functions.Texts.register(sig.sparkSession)
     sig.select(col(idCol),
       posexplode(graft.functions.LshBandKeys.lshBandKeys(col("sig"), bands))
         .as(Seq("band", "bkey")))
@@ -410,7 +406,6 @@ object Dedup {
     */
   private[graft] def boundedBucketPairs(bandRows: DataFrame, idCol: String,
                                  maxBucket: Int): DataFrame = {
-    graft.functions.Texts.register(bandRows.sparkSession)
     bandRows
       .groupBy(col("band"), col("bkey"))
       .agg(graft.functions.BoundedIds.boundedIds(maxBucket, col(idCol))
@@ -518,7 +513,6 @@ object Dedup {
     * HOF pair — this runs once per candidate pair.
     */
   def minhashJaccard(pairs: DataFrame, sig: DataFrame, idCol: String): DataFrame = {
-    graft.functions.Texts.register(pairs.sparkSession)
     pairs
       .join(sig.select(col(idCol).as("id1"), col("sig").as("sig1")), "id1")
       .join(sig.select(col(idCol).as("id2"), col("sig").as("sig2")), "id2")
@@ -539,7 +533,6 @@ object Dedup {
     * bit-identical otherwise; SimHash64Spec pins the equivalence.
     */
   def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.Texts.register(df.sparkSession)
     df.select(col(idCol),
         graft.functions.SimHash64.simhash64(col(textCol)).as("simhash"))
       .filter(col("simhash").isNotNull)
@@ -561,7 +554,6 @@ object Dedup {
 
   private def simhashCandidatesLong(sh: DataFrame, idCol: String,
                                     maxDist: Int, maxBucket: Int): DataFrame = {
-    graft.functions.Texts.register(sh.sparkSession)
     sh.select(col(idCol), col("simhash"),
         posexplode(array((0 until 4).map(b =>
           shiftright(col("simhash"), b * 16).bitwiseAND(0xFFFF)): _*))
@@ -927,7 +919,6 @@ object Dedup {
       boundedBucketPairs(vectorBandRows(b, idCol, nPlanes, bands),
         idCol, maxBucket)
     }
-    graft.functions.Vectors.register(bucketed.sparkSession)
     cands
       .join(bucketed.select(col(idCol).as("id1"), col(vecCol).as("__v1")), "id1")
       .join(bucketed.select(col(idCol).as("id2"), col(vecCol).as("__v2")), "id2")
@@ -984,7 +975,6 @@ object Dedup {
       val batchBands = capBucketsInline(
         vectorBandRows(bucketed, idCol, nPlanes, bands),
         Seq("band", "bkey"), maxBucket)
-      graft.functions.Vectors.register(s)
       // no pair-level distinct: a pair colliding in several bands reaches
       // the verify joins once per band (bounded by the band count), but
       // the id set is distinct'd after the filter anyway — dropping the
@@ -1178,7 +1168,6 @@ object Dedup {
                    n: Int = 5, minJaccard: Double = 0.2,
                    maxPosting: Int = 500,
                    maxDocFrac: Double = 1.0): DataFrame = {
-    graft.functions.Texts.register(df.sparkSession)
     val exploded = df.select(col(idCol),
       explode(graft.functions.Texts.ngramHashes(col(textCol), n,
         ShingleHashMod)).as("shingle"))

@@ -150,7 +150,6 @@ object SemDedup {
             }
           n * (dim.toLong * FloatType.defaultSize + 48L) <= byteCap
       }
-    graft.functions.Texts.register(vecs.sparkSession)
     val vside = {
       val s = vecs.select(col(idCol).as("__sid"), col(vecCol).as("__v"))
       if (bcastVecs) broadcast(s) else s.hint("shuffle_hash")

@@ -81,10 +81,6 @@ object SpanDedup {
                          useHashKey: Boolean): DataFrame = {
     require(w >= 1, s"spanDedup: window must be >= 1 token, got $w")
     if (useHashKey) {
-      // register into the input's OWN session (the operator-entry-point
-      // contract — ensureRegistered() alone targets the active session,
-      // which differs under multi-session callers like PlanAudit)
-      graft.functions.Texts.register(docs.sparkSession)
       docs
         .select(col("doc_id"), posexplode(
           graft.functions.TokenWindowHashes

@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.{call_function, udaf}
+import org.apache.spark.sql.functions.udaf
 
 /** Typed `Aggregator[IN, BUF, OUT]` surface (SURVEY.md §2.9): the
   * compound-growth aggregate — geometric mean of day-over-day growth
@@ -25,13 +25,11 @@ object GeoMeanGrowth extends Aggregator[Double, (Double, Long), Double] {
 }
 
 object Aggregators {
-  private val name = "geo_mean_growth"
+  /** The SQL name [[GraftFunctions.register]] gives [[GeoMeanGrowth]]. */
+  val GeoMeanGrowthName = "geo_mean_growth"
 
-  def register(spark: SparkSession): Unit =
-    spark.udf.register(name, udaf(GeoMeanGrowth))
+  private[functions] val geoMean = udaf(GeoMeanGrowth).withName(GeoMeanGrowthName)
 
-  def geoMeanGrowth(rate: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(name, rate)
-  }
+  /** `geo_mean_growth(rate)` as a Column: the udaf applied directly. */
+  def geoMeanGrowth(rate: Column): Column = geoMean(rate)
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
@@ -157,28 +157,13 @@ object BigramHashCounts {
     new GenericArrayData(rows)
   }
 
-  private val name = "bigram_hash_counts"
+  /** `bigram_hash_counts(text)` as a Column. */
+  def bigramHashCounts(text: Column): Column =
+    column(BigramHashCounts(expression(text)))
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BigramHashCounts(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bigram_counts", exprs => BigramCounts(exprs(0)), "built-in")
-  }
-
-  /** Column API over the registered function (lazily registered against
-    * the active session, as [[Texts.ensureRegistered]]).
-    */
-  def bigramHashCounts(text: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(name, text)
-  }
-
-  /** Column API for [[BigramCounts]] (lazily registered likewise). */
-  def bigramCounts(text: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("bigram_counts", text)
-  }
+  /** `bigram_counts(text)` as a Column (see [[BigramCounts]]). */
+  def bigramCounts(text: Column): Column =
+    column(BigramCounts(expression(text)))
 }
 
 /** `bigram_counts(text)` → `array<struct<bigram string, cnt int>>`: the

@@ -1,19 +1,20 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, DataType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** SQL-callable surface over Spark's OWN Bloom filter Catalyst
   * expressions (`BloomFilterAggregate` / `BloomFilterMightContain` —
   * the machinery behind runtime row-group filtering), which Spark keeps
-  * internal rather than registering. Re-exposing them through the
-  * session registry is maximally Spark-first: the aggregate is a
+  * internal rather than registering. Re-exposing them as SQL names
+  * ([[GraftFunctions.table]]) is maximally Spark-first: the aggregate is a
   * TypedImperativeAggregate over Spark's `util.sketch.BloomFilter`
   * with map-side partial merge, and the membership probe is a codegen
   * predicate — nothing to reimplement.
@@ -31,48 +32,14 @@ import org.apache.spark.util.sketch.BloomFilter
   */
 object Blooms {
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      // The probe child is routed through [[StableLong]]: Spark's
-      // BloomFilterMightContain.doGenCode emits `(Long)$value`, and
-      // when the probe CONSTANT-FOLDS to a negative literal Janino
-      // cannot parse `(Long)-123L` (it reads a binary minus with the
-      // class name as an operand — "Expression java.lang.Long is not
-      // an rvalue") and the whole stage silently falls back to
-      // interpreted eval. The wrapper pins the value in a local
-      // variable so the cast always applies to a name. Column-probe
-      // plans are unaffected beyond a JIT-erased long copy.
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), StableLong(exprs(1))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_any", exprs => BloomAny(exprs(0), exprs(1)), "built-in")
-  }
-
-  /** Convenience fallback for the one-session case; same off-thread and
-    * MULTI-SESSION caveats as `Texts.ensureRegistered` (the thread's
-    * active session may not be the session that analyzes the Column —
-    * library operators register on their input's session explicitly
-    * instead of relying on this).
-    */
-  private def ensureRegistered(): Unit =
-    SparkSession.getActiveSession.foreach(register)
-
   /** `bloomAgg(hash, items, bits)` → serialized filter (`binary`).
     * `numBits` is bounded by
     * `spark.sql.optimizer.runtime.bloomFilter.maxNumBits` (default 64M
     * bits = 8 MB); size the filter for the store it summarizes.
     */
-  def bloomAgg(hash: Column, expectedItems: Long, numBits: Long): Column = {
-    ensureRegistered()
-    call_function("bloom_agg", hash, lit(expectedItems), lit(numBits))
-  }
+  def bloomAgg(hash: Column, expectedItems: Long, numBits: Long): Column =
+    column(new BloomFilterAggregate(expression(hash),
+      Literal(expectedItems), Literal(numBits)))
 }
 
 /** Identity over a `bigint` that BLOCKS constant folding and surfaces

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
 
 /** `bounded_ids(id[, payload...], max)` → `array<bigint>` (single
@@ -188,13 +188,11 @@ object BoundedIds {
     */
   final class Buffer(var longs: Array[Long], var n: Int)
 
-  /** Column API over the registered function (see [[Texts.register]]):
-    * `boundedIds(max, id)` gives `array<bigint>`,
-    * `boundedIds(max, id, payload, ...)` gives `array<struct<c0,c1,...>>`.
+  /** `bounded_ids(cols..., max)` as a Column, built directly (no
+    * session registry involved): `boundedIds(max, id)` gives
+    * `array<bigint>`, `boundedIds(max, id, payload, ...)` gives
+    * `array<struct<c0,c1,...>>`.
     */
-  def boundedIds(max: Int, cols: Column*): Column = {
-    Texts.ensureRegistered()
-    call_function("bounded_ids",
-      cols :+ org.apache.spark.sql.functions.lit(max): _*)
-  }
+  def boundedIds(max: Int, cols: Column*): Column =
+    column(BoundedIds(cols.map(expression), max))
 }

@@ -1,14 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression: cosine similarity of two `array<float>`
@@ -85,139 +82,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object Vectors {
-  private val name = "cosine_sim"
-
-  /** Register `cosine_sim` in the session's function registry (SQL +
-    * [[cosineSim]] both resolve through it).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-
-  /** Column API over the registered function (lazily registered against
-    * the active session, as [[Texts.ensureRegistered]]).
-    */
-  def cosineSim(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(name, a, b)
-  }
-}
-
-/** `SparkSessionExtensions` injector for cluster deployments:
-  * `spark.sql.extensions=graft.functions.GraftExtensions` makes the
-  * full graft expression inventory + the graft optimizer rules
-  * available in every session without driver code. (The sole
-  * session-registry function NOT injected is the `geo_mean_growth`
-  * udaf-wrapped Aggregator — `Aggregators.register(spark)` it per
-  * session; typed Aggregators have no expression builder to inject.)
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def intArg(e: Expression): Int =
-    e.eval().asInstanceOf[Number].intValue()
-  private def longArg(e: Expression): Long =
-    e.eval().asInstanceOf[Number].longValue()
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    val builders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-      ("cosine_sim", classOf[CosineSimilarity].getName,
-        es => CosineSimilarity(es(0), es(1))),
-      ("int8_quantize", classOf[Int8Quantize].getName,
-        es => Int8Quantize(es(0))),
-      ("int8_cosine", classOf[Int8Cosine].getName,
-        es => Int8Cosine(es(0), es(1))),
-      ("stopword_counts", classOf[StopwordCountsExpr].getName,
-        es => StopwordCountsExpr(es(0))),
-      ("curate_tier1", classOf[CurateTier1].getName,
-        es => CurateTier1(es(0), intArg(es(1)),
-          es(2).eval().asInstanceOf[Number].doubleValue())),
-      ("semdedup_dropped_ids", classOf[SemDedupDroppedIds].getName,
-        es => SemDedupDroppedIds(es(0), es(1), intArg(es(2)),
-          es(3).eval().asInstanceOf[Number].doubleValue())),
-      ("sig_overlap", classOf[SigOverlap].getName,
-        es => SigOverlap(es(0), es(1))),
-      ("ngram_hashes", classOf[NgramHashes].getName,
-        es => NgramHashes(es(0), intArg(es(1)), longArg(es(2)))),
-      ("minhash_sig", classOf[MinHashSig].getName,
-        es => MinHashSig(es(0), intArg(es(1)), intArg(es(2)), longArg(es(3)))),
-      ("simhash64", classOf[SimHash64].getName,
-        es => SimHash64(es(0))),
-      ("shingle_fingerprint", classOf[ShingleFingerprint].getName,
-        es => ShingleFingerprint(es(0), intArg(es(1)))),
-      ("repetition_counts", classOf[RepetitionCounts].getName,
-        es => RepetitionCounts(es(0))),
-      ("token_window_hashes", classOf[TokenWindowHashes].getName,
-        es => TokenWindowHashes(es(0), intArg(es(1)))),
-      ("hashed_score", classOf[HashedScoreExpr].getName,
-        es => HashedScoreExpr(es(0), es(1).eval().toString)),
-      ("segment_hashes", classOf[SegmentHashes].getName,
-        es => SegmentHashes(es(0), intArg(es(1)))),
-      ("term_counts", classOf[TermCounts].getName,
-        es => TermCounts(es(0))),
-      ("ws_token_count", classOf[WsTokenCount].getName,
-        es => WsTokenCount(es(0))),
-      ("html_table_rows", classOf[HtmlTableRows].getName,
-        es => HtmlTableRows(es(0))),
-      ("top_k_pairs", classOf[TopKPairs].getName,
-        es => TopKPairs(es(0), es(1), intArg(es(2)))),
-      ("exact_percentiles", classOf[ExactPercentilesAgg].getName,
-        es => {
-          val base = ExactPercentilesAgg(es(0), ExactPercentilesF.psArg(es(1)))
-          if (es.length >= 3) base.copy(maxDistinct = intArg(es(2))) else base
-        }),
-      ("exact_percentiles_weighted", classOf[ExactPercentilesAgg].getName,
-        es => {
-          val base = ExactPercentilesAgg(es(0),
-            ExactPercentilesF.psArg(es(2)), weight = Some(es(1)))
-          if (es.length >= 4) base.copy(maxDistinct = intArg(es(3))) else base
-        }),
-      ("exact_percentiles2", classOf[ExactPercentiles2Agg].getName,
-        es => ExactPercentiles2Agg(es(0), ExactPercentilesF.psArg(es(1)),
-          es(2), ExactPercentilesF.psArg(es(3)))),
-      ("vec_centroid", classOf[VecCentroidQ].getName,
-        es => VecCentroidQ(es(0), longArg(es(1)))),
-      ("bloom_any", classOf[BloomAny].getName,
-        es => BloomAny(es(0), es(1))),
-      ("ngram_bloom_any", classOf[NgramBloomAny].getName,
-        es => NgramBloomAny(es(0), es(1), intArg(es(2)), longArg(es(3)))),
-      ("bounded_ids", classOf[BoundedIds].getName,
-        es => BoundedIds(es.init, intArg(es.last))),
-      ("lsh_bucket", classOf[LshBucket].getName,
-        es => LshBucket(es(0), intArg(es(1)), longArg(es(2)))),
-      ("kmv_sample", classOf[KmvSketch].getName,
-        es => KmvSketch(Sketches.defaultHash(es(0)), es(0), intArg(es(1)))),
-      ("kmv_sample_by", classOf[KmvSketch].getName,
-        es => KmvSketch(es(0), es(1), intArg(es(2)))),
-      ("kmv_distinct", classOf[KmvDistinct].getName,
-        es => KmvDistinct(es(0), intArg(es(1)))),
-      ("mg_topk", classOf[MisraGriesAgg].getName,
-        es => MisraGriesAgg(es(0), intArg(es(1)))),
-      ("bigram_hash_counts", classOf[BigramHashCounts].getName,
-        es => BigramHashCounts(es(0))),
-      ("bigram_counts", classOf[BigramCounts].getName,
-        es => BigramCounts(es(0))),
-      // Spark's own (unregistered) Bloom expressions, re-exposed — see
-      // graft.functions.Blooms
-      ("bloom_agg",
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        es => new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(es(0), es(1), es(2))),
-      ("bloom_might_contain",
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        // StableLong: see Blooms.register — a folded negative-literal
-        // probe otherwise miscompiles Spark's `(Long)$value` codegen
-        // under Janino and silently drops the stage to interpreted eval
-        es => org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain(es(0), StableLong(es(1)))))
-    builders.foreach { case (name, cls, builder) =>
-      ext.injectFunction((
-        FunctionIdentifier(name), new ExpressionInfo(cls, name), builder))
-    }
-    ext.injectOptimizerRule(_ => graft.plans.FoldSelfCosine)
-    // SQL MERGE/UPDATE/DELETE on dailystore tables (r19): the analyzer's
-    // Resolution batch runs this to fixpoint, rewriting the DML node
-    // into a copy-on-write command BEFORE the built-in row-level
-    // rewrite batch would reject the connector
-    ext.injectResolutionRule(_ => graft.plans.DailyStoreDml)
-  }
+  /** `cosine_sim(a, b)` as a Column. */
+  def cosineSim(a: Column, b: Column): Column =
+    column(CosineSimilarity(expression(a), expression(b)))
 }

@@ -2,13 +2,13 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Open-addressing value→count map over double keys (stored as raw
@@ -440,49 +440,11 @@ object ExactPercentiles2Agg {
 }
 
 object ExactPercentilesF {
-  private val name = "exact_percentiles"
-
-  /** Evaluate a foldable numeric-array expression to doubles — SQL
-    * literals like `array(0.5)` arrive as DECIMAL arrays, Column-built
-    * ones as doubles.
-    */
-  def psArg(e: Expression): Seq[Double] = {
-    val arr = e.eval().asInstanceOf[ArrayData]
-    val et = e.dataType.asInstanceOf[ArrayType].elementType
-    arr.toObjectArray(et).toSeq.map {
-      case d: org.apache.spark.sql.types.Decimal => d.toDouble
-      case n: java.lang.Number => n.doubleValue()
-      case other => throw new IllegalArgumentException(
-        s"exact_percentiles: non-numeric percentile $other")
-    }
-  }
-
-  /** `exact_percentiles(value, ps[, maxDistinct])` — the optional third
-    * (foldable int) argument overrides the distinct-value abort cap.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => {
-        val base = ExactPercentilesAgg(exprs(0), psArg(exprs(1)))
-        if (exprs.length >= 3)
-          base.copy(maxDistinct =
-            exprs(2).eval().asInstanceOf[Number].intValue())
-        else base
-      },
-      "built-in")
-
   /** `exactPercentiles(value, ps)`: array of exact linear-interpolation
     * percentiles, in `ps` order.
     */
-  def exactPercentiles(value: Column, ps: Seq[Double]): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(name, value,
-      org.apache.spark.sql.functions.array(
-        ps.map(org.apache.spark.sql.functions.lit): _*))
-  }
-
-  private val wname = "exact_percentiles_weighted"
+  def exactPercentiles(value: Column, ps: Seq[Double]): Column =
+    column(ExactPercentilesAgg(expression(value), ps))
 
   /** Weighted form over PRE-COUNTED (value, count) rows — the final
     * stage of the expanded two-phase percentile shape: a codegen
@@ -491,49 +453,19 @@ object ExactPercentilesF {
     * count rows. Identical result to [[exactPercentiles]] over the raw
     * rows, pinned by PercentilesSpec.
     *
-    * `exact_percentiles_weighted(value, weight, ps[, maxDistinct])` —
-    * the weight may be any integral type, and the optional fourth
-    * argument overrides the distinct-value abort cap, mirroring the
-    * plain registration.
+    * SQL: `exact_percentiles_weighted(value, weight, ps[, maxDistinct])`
+    * — the weight may be any integral type, and the optional fourth
+    * argument overrides the distinct-value abort cap.
     */
-  def registerWeighted(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      wname,
-      exprs => {
-        val base = ExactPercentilesAgg(exprs(0), psArg(exprs(2)),
-          weight = Some(exprs(1)))
-        if (exprs.length >= 4)
-          base.copy(maxDistinct =
-            exprs(3).eval().asInstanceOf[Number].intValue())
-        else base
-      },
-      "built-in")
-
-  /** `exactPercentilesWeighted(value, count, ps)`. */
   def exactPercentilesWeighted(value: Column, count: Column,
-                               ps: Seq[Double]): Column = {
-    SparkSession.getActiveSession.foreach(registerWeighted)
-    call_function(wname, value, count,
-      org.apache.spark.sql.functions.array(
-        ps.map(org.apache.spark.sql.functions.lit): _*))
-  }
+                               ps: Seq[Double]): Column =
+    column(ExactPercentilesAgg(expression(value), ps,
+      weight = Some(expression(count))))
 
-  private val name2 = "exact_percentiles2"
-
-  /** `exact_percentiles2(v1, ps1, v2, ps2)` → struct(p1, p2). */
-  def register2(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name2,
-      exprs => ExactPercentiles2Agg(
-        exprs(0), psArg(exprs(1)), exprs(2), psArg(exprs(3))),
-      "built-in")
-
-  /** Fused two-column percentiles: one aggregate, one per-row update. */
+  /** Fused two-column percentiles: one aggregate, one per-row update.
+    * SQL: `exact_percentiles2(v1, ps1, v2, ps2)` → struct(p1, p2).
+    */
   def exactPercentiles2(v1: Column, ps1: Seq[Double],
-                        v2: Column, ps2: Seq[Double]): Column = {
-    SparkSession.getActiveSession.foreach(register2)
-    def arr(ps: Seq[Double]) = org.apache.spark.sql.functions.array(
-      ps.map(org.apache.spark.sql.functions.lit): _*)
-    call_function(name2, v1, arr(ps1), v2, arr(ps2))
-  }
+                        v2: Column, ps2: Seq[Double]): Column =
+    column(ExactPercentiles2Agg(expression(v1), ps1, expression(v2), ps2))
 }

@@ -2,13 +2,13 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -231,20 +231,7 @@ object MisraGriesAgg {
     }
   }
 
-  private val name = "mg_topk"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => MisraGriesAgg(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-
-  /** Column API over the registered function (lazily registered against
-    * the active session, as [[Texts.ensureRegistered]]).
-    */
-  def mgTopK(text: Column, cap: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(name, text, lit(cap))
-  }
+  /** `mg_topk(text, cap)` as a Column. */
+  def mgTopK(text: Column, cap: Int): Column =
+    column(MisraGriesAgg(expression(text), cap))
 }

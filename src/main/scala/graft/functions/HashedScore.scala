@@ -2,11 +2,11 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -110,19 +110,7 @@ object HashedScoreExpr {
 }
 
 object HashedScores {
-  private val name = "hashed_score"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => HashedScoreExpr(exprs(0), exprs(1).eval().toString),
-      "built-in")
-
-  /** Column API over the registered function (lazily registered against
-    * the active session, as [[Texts.ensureRegistered]]).
-    */
-  def hashedScore(text: Column, salt: String): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(name, text, org.apache.spark.sql.functions.lit(salt))
-  }
+  /** `hashed_score(text, salt)` as a Column. */
+  def hashedScore(text: Column, salt: String): Column =
+    column(HashedScoreExpr(expression(text), salt))
 }

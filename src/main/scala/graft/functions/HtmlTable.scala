@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -194,17 +194,7 @@ object HtmlTableRows {
     new GenericArrayData(rows.toArray.asInstanceOf[Array[Any]])
   }
 
-  private val name = "html_table_rows"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => HtmlTableRows(exprs(0)), "built-in")
-
-  /** Column API over the registered function (lazily registered against
-    * the active session, as [[Texts.ensureRegistered]]).
-    */
-  def htmlTableRows(html: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(name, html)
-  }
+  /** `html_table_rows(html)` as a Column. */
+  def htmlTableRows(html: Column): Column =
+    column(HtmlTableRows(expression(html)))
 }

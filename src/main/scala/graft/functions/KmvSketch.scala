@@ -4,13 +4,13 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** KMV (k-minimum-values) sketch as a `TypedImperativeAggregate` — the
@@ -28,7 +28,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * Catalyst plans partial+final aggregation with map-side combine.
   *
   * The ranking hash is an explicit child expression: the default
-  * registration (`kmv_sample`) passes `xxhash64(value)` (seed 42, the
+  * form (`kmv_sample`) passes `xxhash64(value)` (seed 42, the
   * exact hash the sketch applied internally before this was
   * parameterized), while `kmv_sample_by(hash, value, k)` lets a caller —
   * or a correctness fixture (q60) — supply a closed-form permutation so
@@ -160,10 +160,6 @@ case class KmvDistinct(
 }
 
 object Sketches {
-  private val name = "kmv_sample"
-  private val byName = "kmv_sample_by"
-  private val distinctName = "kmv_distinct"
-
   /** The sketch's default ranking hash: `xxhash64(value)` with Spark's
     * default seed 42 — for a bigint input this is exactly
     * `XXH64.hashLong(v, 42)`, the hash the sketch used before the hash
@@ -172,44 +168,19 @@ object Sketches {
   private[functions] def defaultHash(value: Expression): Expression =
     new org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(value))
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => KmvSketch(defaultHash(exprs(0)), exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      byName,
-      exprs => KmvSketch(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      distinctName,
-      exprs => KmvDistinct(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-  }
-
-  private def ensureRegistered(): Unit =
-    org.apache.spark.sql.SparkSession.getActiveSession.foreach(register)
-
   /** `kmvSample(col, k)`: deterministic k-element uniform sample. */
   def kmvSample(c: Column, k: Int): Column = {
-    ensureRegistered()
-    call_function(name, c, org.apache.spark.sql.functions.lit(k))
+    val e = expression(c)
+    column(KmvSketch(defaultHash(e), e, k))
   }
 
   /** `kmvSampleBy(hash, value, k)`: bottom-k values ranked by a
     * caller-supplied hash column (fixture/oracle hook; see q60).
     */
-  def kmvSampleBy(h: Column, v: Column, k: Int): Column = {
-    ensureRegistered()
-    call_function(byName, h, v, org.apache.spark.sql.functions.lit(k))
-  }
+  def kmvSampleBy(h: Column, v: Column, k: Int): Column =
+    column(KmvSketch(expression(h), expression(v), k))
 
   /** `kmvDistinct(col, k)`: deterministic distinct-count estimate. */
-  def kmvDistinct(c: Column, k: Int): Column = {
-    ensureRegistered()
-    call_function(distinctName, c, org.apache.spark.sql.functions.lit(k))
-  }
+  def kmvDistinct(c: Column, k: Int): Column =
+    column(KmvDistinct(expression(c), k))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** `lsh_band_keys(sig, bands)` → `array<long>`: all `bands` LSH band
@@ -93,9 +93,9 @@ object LshBandKeys {
     out
   }
 
-  /** Column API over the registered function (see [[Texts.register]]). */
-  def lshBandKeys(sig: Column, bands: Int): Column = {
-    Texts.ensureRegistered()
-    call_function("lsh_band_keys", sig, lit(bands))
-  }
+  /** `lsh_band_keys(sig, bands)` as a Column, built directly (no
+    * session registry involved).
+    */
+  def lshBandKeys(sig: Column, bands: Int): Column =
+    column(LshBandKeys(expression(sig), bands))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
 /** One-pass sign-random-projection LSH bucketing (static helper shared by
@@ -77,21 +77,7 @@ case class LshBucket(child: Expression, nPlanes: Int, seed: Long)
 }
 
 object LshBuckets {
-  private val name = "lsh_bucket"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => LshBucket(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].longValue()),
-      "built-in")
-
-  /** Column API over the registered function (lazily registered against
-    * the active session, as [[Texts.ensureRegistered]]).
-    */
-  def lshBucket(vec: Column, nPlanes: Int, seed: Long): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(name, vec, lit(nPlanes), lit(seed))
-  }
+  /** `lsh_bucket(vec, nPlanes, seed)` as a Column. */
+  def lshBucket(vec: Column, nPlanes: Int, seed: Long): Column =
+    column(LshBucket(expression(vec), nPlanes, seed))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -174,10 +174,10 @@ object MinHashSig {
     mins
   }
 
-  /** Column API over the registered function (see [[Texts.register]]). */
+  /** `minhash_sig(text, numHashes, shingleN, mod)` as a Column, built
+    * directly (no session registry involved).
+    */
   def minhashSig(text: Column, numHashes: Int, shingleN: Int,
-                 mod: Long): Column = {
-    Texts.ensureRegistered()
-    call_function("minhash_sig", text, lit(numHashes), lit(shingleN), lit(mod))
-  }
+                 mod: Long): Column =
+    column(MinHashSig(expression(text), numHashes, shingleN, mod))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
@@ -178,109 +178,13 @@ case class NgramHashes(child: Expression, n: Int, mod: Long)
 }
 
 object Texts {
-  private val name = "ngram_hashes"
-
-  /** Lazily [[register]] against the thread's active session, if any.
-    *
-    * Every Column API in this package calls this before building its
-    * `call_function` Column, so the helpers work on a bare session with
-    * no explicit `Texts.register` — the old hidden precondition made
-    * direct callers of e.g. `TextAnalysis.langId` fail with "undefined
-    * function" until an operator entry point happened to register first.
-    * Registration is idempotent and driver-side-cheap (one registry map
-    * write per function). Column construction without ANY active session
-    * (possible off-thread) still needs an explicit `register(spark)` /
-    * `GraftExtensions` before analysis.
-    *
-    * MULTI-SESSION caveat: `getActiveSession` is the thread's current
-    * session, which in an application juggling several sessions may not
-    * be the one that later analyzes the Column — registration then lands
-    * in the wrong registry and analysis still fails with "undefined
-    * function". This fallback is a convenience for the common one-session
-    * case only; the operator entry points (Dedup / TextAnalysis /
-    * Similarity) don't rely on it — they call `register(df.sparkSession)`
-    * explicitly, resolving the session from the DataFrame they operate
-    * on — and multi-session callers composing Columns directly should do
-    * the same (or install [[GraftExtensions]], which registers into
-    * every session at session build time).
-    */
-  def ensureRegistered(): Unit =
-    SparkSession.getActiveSession.foreach(register)
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => NgramHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].longValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_bloom_any",
-      exprs => NgramBloomAny(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue(),
-        exprs(3).eval().asInstanceOf[Number].longValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "stopword_counts", exprs => StopwordCountsExpr(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "semdedup_dropped_ids",
-      exprs => SemDedupDroppedIds(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue(),
-        exprs(3).eval().asInstanceOf[Number].doubleValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "curate_tier1",
-      exprs => CurateTier1(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].doubleValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sig_overlap", exprs => SigOverlap(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      exprs => MinHashSig(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue(),
-        exprs(3).eval().asInstanceOf[Number].longValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_band_keys",
-      exprs => LshBandKeys(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_fingerprint",
-      exprs => ShingleFingerprint(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "repetition_counts", exprs => RepetitionCounts(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_window_hashes",
-      exprs => TokenWindowHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bounded_ids",
-      exprs => BoundedIds(exprs.init,
-        exprs.last.eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    Blooms.register(spark)
-  }
-
-  /** Column API over the registered function. */
-  def ngramHashes(text: Column, n: Int, mod: Long): Column = {
-    ensureRegistered()
-    call_function(name, text, lit(n), lit(mod))
-  }
+  /** `ngram_hashes(text, n, mod)` as a Column. */
+  def ngramHashes(text: Column, n: Int, mod: Long): Column =
+    column(NgramHashes(expression(text), n, mod))
 
   /** Fused `bloom_any(filter, ngram_hashes(text, n, mod))` — see
     * [[NgramBloomAny]].
     */
-  def ngramBloomAny(filter: Column, text: Column, n: Int, mod: Long): Column = {
-    ensureRegistered()
-    call_function("ngram_bloom_any", filter, text, lit(n), lit(mod))
-  }
+  def ngramBloomAny(filter: Column, text: Column, n: Int, mod: Long): Column =
+    column(NgramBloomAny(expression(filter), expression(text), n, mod))
 }

@@ -1,12 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, FloatType}
 
 /** Symmetric int8 vector quantization for the ANN tier.
@@ -164,20 +164,8 @@ object QuantizedVec {
     else dot.toDouble / (Math.sqrt(na.toDouble) * Math.sqrt(nb.toDouble))
   }
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int8_quantize", es => Int8Quantize(es(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int8_cosine", es => Int8Cosine(es(0), es(1)), "built-in")
-  }
+  def int8Quantize(v: Column): Column = column(Int8Quantize(expression(v)))
 
-  def int8Quantize(v: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("int8_quantize", v)
-  }
-
-  def int8Cosine(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("int8_cosine", a, b)
-  }
+  def int8Cosine(a: Column, b: Column): Column =
+    column(Int8Cosine(expression(a), expression(b)))
 }

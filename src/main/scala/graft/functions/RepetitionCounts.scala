@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -193,9 +194,7 @@ object RepetitionCounts {
     ArrayData.toArrayData(counts)
   }
 
-  /** Column API over the registered function (see [[Texts.register]]). */
-  def repetitionCounts(c: Column): Column = {
-    Texts.ensureRegistered()
-    org.apache.spark.sql.functions.call_function("repetition_counts", c)
-  }
+  /** `repetition_counts(c)` as a Column. */
+  def repetitionCounts(c: Column): Column =
+    column(RepetitionCounts(expression(c)))
 }

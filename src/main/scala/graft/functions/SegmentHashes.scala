@@ -2,12 +2,12 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -99,20 +99,7 @@ object SegmentHashes {
 }
 
 object SegmentHashing {
-  private val name = "segment_hashes"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => SegmentHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-
-  /** Column API over the registered function (lazily registered against
-    * the active session, as [[Texts.ensureRegistered]]).
-    */
-  def segmentHashes(text: Column, w: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(name, text, lit(w))
-  }
+  /** `segment_hashes(text, w)` as a Column. */
+  def segmentHashes(text: Column, w: Int): Column =
+    column(SegmentHashes(expression(text), w))
 }

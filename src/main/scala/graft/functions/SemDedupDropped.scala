@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, RowOrdering, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, StructType, UserDefinedType}
 
 /** `semdedup_dropped_ids(id, vec, maxCluster, minCosine)` →
@@ -322,12 +322,9 @@ object SemDedupDroppedIds {
     else dot / (math.sqrt(nx) * math.sqrt(ny))
   }
 
-  /** Column API (see [[Texts.register]] for the registration contract). */
+  /** `semdedup_dropped_ids(id, vec, maxCluster, minCosine)` as a Column. */
   def droppedIds(maxCluster: Int, minCosine: Double,
-                 id: Column, vec: Column): Column = {
-    Texts.ensureRegistered()
-    call_function("semdedup_dropped_ids", id, vec,
-      org.apache.spark.sql.functions.lit(maxCluster),
-      org.apache.spark.sql.functions.lit(minCosine))
-  }
+                 id: Column, vec: Column): Column =
+    column(SemDedupDroppedIds(expression(id), expression(vec),
+      maxCluster, minCosine))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -104,9 +104,7 @@ object ShingleFingerprint {
     false
   }
 
-  /** Column API over the registered function (see [[Texts.register]]). */
-  def shingleFingerprint(text: Column, n: Int): Column = {
-    Texts.ensureRegistered()
-    call_function("shingle_fingerprint", text, lit(n))
-  }
+  /** `shingle_fingerprint(text, n)` as a Column. */
+  def shingleFingerprint(text: Column, n: Int): Column =
+    column(ShingleFingerprint(expression(text), n))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Native Catalyst expression: fraction of equal positions between two
@@ -86,9 +87,9 @@ case class SigOverlap(left: Expression, right: Expression)
 }
 
 object SigOverlap {
-  /** Column API over the registered function (see [[Texts.register]]). */
-  def sigOverlap(a: Column, b: Column): Column = {
-    Texts.ensureRegistered()
-    org.apache.spark.sql.functions.call_function("sig_overlap", a, b)
-  }
+  /** `sig_overlap(a, b)` as a Column, built directly (no session
+    * registry involved).
+    */
+  def sigOverlap(a: Column, b: Column): Column =
+    column(SigOverlap(expression(a), expression(b)))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
@@ -104,9 +104,6 @@ object SimHash64 {
     }
   }
 
-  /** Column API over the registered function (see [[Texts.register]]). */
-  def simhash64(text: Column): Column = {
-    Texts.ensureRegistered()
-    call_function("simhash64", text)
-  }
+  /** `simhash64(text)` as a Column. */
+  def simhash64(text: Column): Column = column(SimHash64(expression(text)))
 }

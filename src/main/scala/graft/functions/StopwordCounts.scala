@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -132,15 +133,12 @@ object StopwordCountsExpr {
     counts
   }
 
-  /** Column API over the registered function (see [[graft.functions.Texts.register]]):
-    * registration is session-scoped, so every graft entry point that uses
-    * the text tier registers it first, and `GraftExtensions` injects it
-    * for cluster deployments.
+  /** `stopword_counts(c)` as a Column, built directly: it resolves in
+    * any session, with no registration. The SQL name comes from
+    * [[GraftFunctions.table]].
     */
-  def stopwordCounts(c: Column): Column = {
-    Texts.ensureRegistered()
-    org.apache.spark.sql.functions.call_function("stopword_counts", c)
-  }
+  def stopwordCounts(c: Column): Column =
+    column(StopwordCountsExpr(expression(c)))
 }
 
 /** Fused corpus-curation tier-1 predicate:
@@ -238,13 +236,9 @@ object CurateTier1 {
       case (l, i) if langs.contains(l) => 1 << i
     }.sum
 
-  /** Column API (see [[StopwordCountsExpr.stopwordCounts]] for the
-    * registration contract).
+  /** `curate_tier1(c, maskFor(langs), minQuality)` as a Column, built
+    * directly (see [[StopwordCountsExpr.stopwordCounts]]).
     */
-  def tier1Keep(c: Column, langs: Seq[String], minQuality: Double): Column = {
-    Texts.ensureRegistered()
-    org.apache.spark.sql.functions.call_function("curate_tier1", c,
-      org.apache.spark.sql.functions.lit(maskFor(langs)),
-      org.apache.spark.sql.functions.lit(minQuality))
-  }
+  def tier1Keep(c: Column, langs: Seq[String], minQuality: Double): Column =
+    column(CurateTier1(expression(c), maskFor(langs), minQuality))
 }

@@ -1,12 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, coalesce, col, lit}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -138,19 +139,9 @@ case class StripStopTokensExpr(text: Expression, stop: Expression)
 
 object StripStopTokens {
 
-  private val name = "strip_stop_tokens"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => StripStopTokensExpr(exprs(0), exprs(1)), "built-in")
-
-  /** Column API over the registered function (lazily registered against
-    * the active session, as [[Texts.ensureRegistered]]).
-    */
-  def stripStopTokens(text: Column, stop: Seq[String]): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(name, text, lit(stop.toArray))
-  }
+  /** `strip_stop_tokens(text, stop)` as a Column. */
+  def stripStopTokens(text: Column, stop: Seq[String]): Column =
+    column(StripStopTokensExpr(expression(text), expression(lit(stop.toArray))))
 
   /** The shared ENFORCEMENT projection of the batch and streaming
     * stop-token surfaces ([[graft.text.HeavyHitters.dropStopTokens]] /
@@ -161,7 +152,6 @@ object StripStopTokens {
     */
   def stripProjection(docs: DataFrame, idCol: String, textCol: String,
                       stop: Seq[String]): DataFrame = {
-    register(docs.sparkSession)
     docs.select(col(idCol), stripStopTokens(col(textCol), stop).as("s"))
       .select(col(idCol),
         coalesce(col("s.n_toks").cast("long"), lit(0L)).as("n_toks"),

@@ -1,12 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -184,26 +184,10 @@ object TermCounts {
     new GenericArrayData(out)
   }
 
-  private val name = "term_counts"
+  /** `term_counts(text)` as a Column. */
+  def termCounts(text: Column): Column = column(TermCounts(expression(text)))
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => TermCounts(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ws_token_count", exprs => WsTokenCount(exprs(0)), "built-in")
-  }
-
-  /** Column API over the registered function (lazily registered against
-    * the active session, as [[Texts.ensureRegistered]]).
-    */
-  def termCounts(text: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(name, text)
-  }
-
-  /** Column API for [[WsTokenCount]] (lazily registered likewise). */
-  def wsTokenCount(text: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("ws_token_count", text)
-  }
+  /** `ws_token_count(text)` as a Column (see [[WsTokenCount]]). */
+  def wsTokenCount(text: Column): Column =
+    column(WsTokenCount(expression(text)))
 }

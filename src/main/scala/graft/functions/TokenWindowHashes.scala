@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
@@ -122,9 +122,9 @@ object TokenWindowHashes {
     new GenericArrayData(out)
   }
 
-  /** Column API over the registered function (see [[Texts.register]]). */
-  def tokenWindowHashes(text: Column, w: Int): Column = {
-    Texts.ensureRegistered()
-    call_function("token_window_hashes", text, lit(w))
-  }
+  /** `token_window_hashes(text, w)` as a Column, built directly (no
+    * session registry involved).
+    */
+  def tokenWindowHashes(text: Column, w: Int): Column =
+    column(TokenWindowHashes(expression(text), w))
 }

@@ -2,13 +2,13 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Primitive k-slot insertion buffer for [[TopKPairs]]: two parallel
@@ -153,23 +153,9 @@ case class TopKPairs(
 }
 
 object TopK {
-  private val name = "top_k_pairs"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => TopKPairs(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-
-  private def ensureRegistered(): Unit =
-    SparkSession.getActiveSession.foreach(register)
-
   /** `topKPairs(score, id, k)`: rank-ordered top-k (score desc, id asc)
     * as `array<struct<score, id>>`; pair with `posexplode` for rows.
     */
-  def topKPairs(score: Column, id: Column, k: Int): Column = {
-    ensureRegistered()
-    call_function(name, score, id, org.apache.spark.sql.functions.lit(k))
-  }
+  def topKPairs(score: Column, id: Column, k: Int): Column =
+    column(TopKPairs(expression(score), expression(id), k))
 }

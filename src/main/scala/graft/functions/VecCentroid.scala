@@ -2,13 +2,13 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Grouped embedding centroid as a dense-buffer `TypedImperativeAggregate`
@@ -147,23 +147,9 @@ object VecCentroidQ {
 }
 
 object VecCentroid {
-  private val name = "vec_centroid"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => VecCentroidQ(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].longValue()),
-      "built-in")
-
-  private def ensureRegistered(): Unit =
-    SparkSession.getActiveSession.foreach(register)
-
   /** `vecCentroid(vec, scale)`: exact quantized mean vector as
     * `array<double>` (see [[VecCentroidQ]] for the arithmetic contract).
     */
-  def vecCentroid(vec: Column, scale: Long = 1000000L): Column = {
-    ensureRegistered()
-    call_function(name, vec, org.apache.spark.sql.functions.lit(scale))
-  }
+  def vecCentroid(vec: Column, scale: Long = 1000000L): Column =
+    column(VecCentroidQ(expression(vec), scale))
 }

@@ -174,7 +174,6 @@ object Segments {
     * them via a left join on the docs frame).
     */
   private def segmentKeyRows(docs: DataFrame, w: Int): DataFrame = {
-    graft.functions.SegmentHashing.register(docs.sparkSession)
     docs.select(col("doc_id"),
       posexplode(graft.functions.SegmentHashing
         .segmentHashes(col("text"), w)).as(Seq("seg_no", "h")))

@@ -77,7 +77,6 @@ object CorpusPipeline {
     * near-dup cluster.
     */
   def curate(docs: DataFrame, cfg: Config = Config()): DataFrame = {
-    graft.functions.Texts.register(docs.sparkSession) // stopword_counts
     def cp(suffix: String)(df: DataFrame): DataFrame = cfg.scope match {
       case Some(k) => graft.util.Checkpoints.scoped(s"$k:$suffix")(df)
       case None => df.localCheckpoint()
@@ -189,7 +188,6 @@ object CorpusPipeline {
     require(!batch.columns.contains("sig"),
       "curateIncremental: the batch must not carry a sig column " +
         "(the near-dup gate adds it)")
-    graft.functions.Texts.register(batch.sparkSession) // stopword_counts
     val filtered = batch
       .filter(graft.functions.CurateTier1
         .tier1Keep(col("text"), cfg.langs, cfg.minQuality))

@@ -47,7 +47,6 @@ object Ingest {
     * sink with `current_timestamp()`).
     */
   def readHtmlCasesTable(spark: SparkSession, path: String): DataFrame = {
-    graft.functions.HtmlTableRows.register(spark)
     spark.read.option("wholetext", true).text(path)
       .select(posexplode(graft.functions.HtmlTableRows
         .htmlTableRows(col("value"))).as(Seq("row_num", "cells")))

@@ -19,7 +19,7 @@ import graft.functions.CosineSimilarity
   * scores 0.0 — so the rewrite targets [[SelfCosine]], which evaluates a
   * single norm sum instead of three accumulator sums. Injected via
   * `graft.functions.GraftExtensions` (spark.sql.extensions) or
-  * `Rules.register(spark)` on a live session.
+  * `graft.functions.GraftFunctions.register(spark)` on a live session.
   */
 case class SelfCosine(child: Expression) extends UnaryExpression {
   override def dataType: DataType = DoubleType
@@ -63,13 +63,4 @@ object FoldSelfCosine extends Rule[LogicalPlan] {
       case CosineSimilarity(a, b) if a.deterministic && a.semanticEquals(b) =>
         SelfCosine(a)
     }
-}
-
-object Rules {
-  /** Inject the extension rules into a live session's optimizer. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val field = spark.sessionState.experimentalMethods
-    if (!field.extraOptimizations.contains(FoldSelfCosine))
-      field.extraOptimizations = field.extraOptimizations :+ FoldSelfCosine
-  }
 }

@@ -36,7 +36,6 @@ object Similarity {
     */
   def bruteForceTopK(emb: DataFrame, idCol: String, vecCol: String,
                      query: Seq[Float], k: Int): DataFrame = {
-    graft.functions.Vectors.register(emb.sparkSession)
     emb.select(col(idCol),
         round(graft.functions.Vectors.cosineSim(col(vecCol), typedlit(query)), 6)
           .as("cosine"))
@@ -69,7 +68,6 @@ object Similarity {
   /** Bucket the corpus once (at scale: persist + partition by bucket). */
   def withBuckets(emb: DataFrame, vecCol: String,
                   nPlanes: Int = 12, seed: Long = 42L): DataFrame = {
-    graft.functions.LshBuckets.register(emb.sparkSession)
     emb.withColumn("bucket",
       graft.functions.LshBuckets.lshBucket(col(vecCol), nPlanes, seed))
   }

@@ -81,7 +81,6 @@ object BigramLm {
     * it), so models trained by either formulation join interchangeably.
     */
   private[text] def hashPairs(docs: DataFrame): DataFrame = {
-    graft.functions.BigramHashCounts.register(docs.sparkSession)
     docs.select(col("doc_id"),
         explode(graft.functions.BigramHashCounts.bigramHashCounts(
           col("text"))).as("b"))

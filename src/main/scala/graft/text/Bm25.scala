@@ -53,7 +53,6 @@ object Bm25 {
     */
   def narrowForTerms(docs: DataFrame, terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "bm25: empty query term set")
-    graft.functions.TermCounts.register(docs.sparkSession)
     docs.select(
       col("doc_id"),
       TextAnalysis.tokenCountWs(col("text")).cast("long").as("dl"),

@@ -62,8 +62,6 @@ object Collocations {
     // DISTINCT term/bigram per doc into the exchange) instead of
     // regex-tokenize + per-occurrence explode; the q104-family lesson
     // applied to the one bigram surface whose OUTPUT needs the text
-    graft.functions.TermCounts.register(docs.sparkSession)
-    graft.functions.BigramHashCounts.register(docs.sparkSession)
     val biAll = memo("bi")(
       docs.select(explode(
           graft.functions.BigramHashCounts.bigramCounts(col("text"))).as("b"))

@@ -117,10 +117,7 @@ object Dsir {
       if (useHashKey) {
         // fused scan path (r17): the flag rides the doc row through the
         // pre-hashed, pre-collapsed stream; one count exchange carries
-        // BOTH models' counters (c_t alongside c_r). Register against
-        // the frame's own session (the Texts convention) — the Column
-        // API's active-session fallback is wrong under newSession audits
-        graft.functions.BigramHashCounts.register(pool.sparkSession)
+        // BOTH models' counters (c_t alongside c_r)
         val flagged = pool.select(
             isTarget.cast("boolean").as("is_t"),
             explode(graft.functions.BigramHashCounts.bigramHashCounts(

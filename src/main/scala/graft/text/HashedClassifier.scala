@@ -52,7 +52,6 @@ object HashedClassifier {
   def scoreDocs(docs: DataFrame, idCol: String, textCol: String,
                 salt: String = "qc-v1", bias: Double = 0.0,
                 threshold: Double = 0.0): DataFrame = {
-    graft.functions.HashedScores.register(docs.sparkSession)
     docs
       .select(col(idCol),
         round(lit(bias) +

@@ -68,10 +68,6 @@ object HeavyHitters {
     * scan counts exactly those).
     */
   private def verifiedCandidateCounts(docs: DataFrame, cap: Int): DataFrame = {
-    // operator entry-point convention (functions.Texts scaladoc):
-    // register against THIS frame's session, not the thread-active one
-    MisraGriesAgg.register(docs.sparkSession)
-    TermCounts.register(docs.sparkSession)
     val candidates = docs
       .agg(MisraGriesAgg.mgTopK(col("text"), cap).as("s"))
       .select(col("s.total").as("total"), explode(col("s.items")).as("it"))
@@ -234,7 +230,6 @@ object HeavyHitters {
       docs: DataFrame, textCol: String, storePath: String,
       batchId: Long, cap: Int): Long = {
     val spark = docs.sparkSession
-    MisraGriesAgg.register(spark)
     val (priorItems, priorTotal) = readSummary(spark, storePath, batchId)
     val batchRow = docs
       .agg(MisraGriesAgg.mgTopK(col(textCol), cap).as("s"))
@@ -329,8 +324,6 @@ object HeavyHitters {
     require(cap >= k, s"cap ($cap) must be >= k ($k)")
     require(maxBroadcastGroups >= 1,
       s"maxBroadcastGroups must be >= 1, got $maxBroadcastGroups")
-    MisraGriesAgg.register(docs.sparkSession)
-    TermCounts.register(docs.sparkSession)
     val nGroups = docs
       .agg(approx_count_distinct(col(groupCol)).as("n"))
       .head().getLong(0)

@@ -79,11 +79,9 @@ object TextAnalysis {
     * minhash-signatures O(k²) note: derive everything from one pass,
     * never reference a shared array expression k times.
     *
-    * The expression resolves through the session function registry.
-    * The Column API registers lazily against the thread's active session
-    * ([[graft.functions.Texts.ensureRegistered]]), so these helpers work
-    * on a bare session; `GraftExtensions` injects cluster-wide for
-    * sessions built off-thread.
+    * The Column API builds the expression directly, so these helpers
+    * resolve in any session — no registration, whichever session is
+    * active.
     */
   private def swCounts(c: Column): Column =
     graft.functions.StopwordCountsExpr.stopwordCounts(c)

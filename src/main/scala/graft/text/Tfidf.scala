@@ -46,7 +46,6 @@ object Tfidf {
     * CorpusPipeline shared-tokenization audit says not to hold.
     */
   def topTermsBySource(docs: DataFrame, k: Int): DataFrame = {
-    graft.functions.TermCounts.register(docs.sparkSession)
     def pairs = docs.select(col("doc_id"), col("source"),
         explode(graft.functions.TermCounts.termCounts(col("text"))).as("tc"))
       .select(col("doc_id"), col("source"),

@@ -61,7 +61,6 @@ object OracleMargins {
     * to stay well below it.
     */
   def embeddingMargin(spark: SparkSession, dir: String): Double = {
-    graft.functions.Vectors.register(spark)
     val v = graft.Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding")).localCheckpoint()
     v.select(col("vec_id").as("id1"), col("embedding").as("v1"))

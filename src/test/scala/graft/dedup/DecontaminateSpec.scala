@@ -53,7 +53,6 @@ class DecontaminateSpec extends SparkSpec {
 
   test("bloom tier-1 flag never changes the result (exactness)") {
     // brute force: every doc pays the verify join, no bloom gate
-    graft.functions.Texts.register(spark)
     val mod = 1L << 61
     val probeSh = probes.select(explode(
       graft.functions.Texts.ngramHashes(col("text"), n, mod)).as("__h"))

@@ -8,7 +8,6 @@ class AggregatorsSpec extends SparkSpec {
   import spark.implicits._
 
   test("geo_mean_growth: exp(avg(ln(rate))), partial-agg mergeable") {
-    Aggregators.register(spark)
     val df = Seq(2.0, 8.0).toDF("rate").repartition(2) // forces merge path
     val got = df.agg(round(Aggregators.geoMeanGrowth(col("rate")), 9))
       .as[Double].head()
@@ -16,7 +15,6 @@ class AggregatorsSpec extends SparkSpec {
   }
 
   test("geo_mean_growth ignores non-positive rates (log domain)") {
-    Aggregators.register(spark)
     val got = Seq(4.0, 0.0, -1.0).toDF("rate")
       .agg(round(Aggregators.geoMeanGrowth(col("rate")), 9)).as[Double].head()
     assert(got == 4.0)

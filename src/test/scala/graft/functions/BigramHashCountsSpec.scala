@@ -78,7 +78,6 @@ class BigramHashCountsSpec extends AnyFunSuite {
 
   test("null propagates; sub-2-token text gives an empty array; SQL " +
       "registration resolves") {
-    BigramHashCounts.register(spark)
     val out = spark.sql(
       "SELECT size(bigram_hash_counts(t)) FROM VALUES ('one'), (''), " +
         "('a b') AS v(t)").as[Int].collect().toSeq

@@ -27,8 +27,7 @@ class BloomsSpec extends SparkSpec {
     // xxhash64(1L) folds to a negative long literal; without the
     // StableLong wrapper Spark's own `(Long)$value` codegen miscompiles
     // under Janino on exactly this shape and the stage silently drops
-    // to interpreted eval (ExtCheck checks the same shape)
-    Blooms.register(spark)
+    // to interpreted eval (FunctionRegistrySpec checks the same shape)
     val got = spark.sql("""
       SELECT bloom_might_contain(
                (SELECT bloom_agg(xxhash64(x), 3L, 8192L)

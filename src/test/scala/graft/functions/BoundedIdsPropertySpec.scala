@@ -30,7 +30,6 @@ object BoundedIdsPropertySpec extends Properties("BoundedIds") {
 
   property("per-bucket: all ids when <= max, null when > max") =
     forAll(scenario) { case (sizes, max, parts) =>
-      Texts.register(spark)
       val rows = sizes.toSeq.flatMap { case (b, n) =>
         (1L to n.toLong).map(i => (b, i))
       }
@@ -48,7 +47,6 @@ object BoundedIdsPropertySpec extends Properties("BoundedIds") {
 
   property("tuple payloads survive the same contract") =
     forAll(scenario) { case (sizes, max, parts) =>
-      Texts.register(spark)
       val rows = sizes.toSeq.flatMap { case (b, n) =>
         (1L to n.toLong).map(i => (b, i, i * 7))
       }

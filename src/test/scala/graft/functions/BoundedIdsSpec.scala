@@ -7,8 +7,6 @@ import graft.SparkSpec
 class BoundedIdsSpec extends SparkSpec {
   import spark.implicits._
 
-  Texts.register(spark)
-
   test("collects a bucket's ids; overflowed buckets evaluate to null") {
     val rows = (1L to 10L).map(i => ("small", i)) ++
       (1L to 600L).map(i => ("hot", i))

@@ -8,10 +8,7 @@ import graft.similarity.Similarity
 class CosineSimilaritySpec extends SparkSpec {
   import spark.implicits._
 
-  private def registered = { Vectors.register(spark); spark }
-
   test("cosine_sim matches hand values incl. null and zero-norm") {
-    registered
     val df = Seq(
       (Some(Seq(1f, 0f)), Some(Seq(1f, 0f))),
       (Some(Seq(1f, 0f)), Some(Seq(0f, 1f))),
@@ -25,7 +22,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("cosine_sim agrees with the composable expression on real embeddings") {
-    registered
     val emb = graft.Tables(spark, sf, "embeddings").limit(100)
     val q = emb.filter("vec_id = 0").select("embedding").head().getSeq[Float](0)
     val diff = emb.select(
@@ -36,7 +32,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("cosine_sim is usable from SQL after registration") {
-    registered
     graft.Tables(spark, sf, "embeddings").limit(5).createOrReplaceTempView("e")
     val n = spark.sql(
       "SELECT cosine_sim(a.embedding, b.embedding) AS c FROM e a CROSS JOIN e b")

@@ -9,7 +9,6 @@ class KmvSketchSpec extends SparkSpec {
   import spark.implicits._
 
   test("kmv_sample returns the k ids with globally smallest hashes") {
-    Sketches.register(spark)
     val ids = (0L until 500L).toDF("id")
     val got = ids.agg(Sketches.kmvSample(col("id"), 10)).as[Seq[Long]].head()
     val expected = (0L until 500L)
@@ -18,7 +17,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("deterministic under any partitioning (unlike reservoir sampling)") {
-    Sketches.register(spark)
     val base = (0L until 500L).toDF("id")
     val a = base.repartition(1).agg(Sketches.kmvSample(col("id"), 25)).as[Seq[Long]].head()
     val b = base.repartition(13).agg(Sketches.kmvSample(col("id"), 25)).as[Seq[Long]].head()
@@ -26,7 +24,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("per-group sampling via groupBy; size = min(k, group size)") {
-    Sketches.register(spark)
     val df = Seq.tabulate(100)(i => (s"g${i % 3}", i.toLong)).toDF("g", "id")
     val got = df.groupBy("g").agg(Sketches.kmvSample(col("id"), 5).as("s"))
       .select("g", "s").as[(String, Seq[Long])].collect().toMap
@@ -38,7 +35,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("kmv_distinct: exact below k, within 25% above k") {
-    Sketches.register(spark)
     val small = (0L until 50L).toDF("id")
       .agg(Sketches.kmvDistinct(col("id"), 64)).as[Double].head()
     assert(small == 50.0) // exact below k
@@ -52,7 +48,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("kmv_sample_by ranks by the supplied hash, multi-partition") {
-    Sketches.register(spark)
     // affine permutation mod a prime: bottom-k is closed-form
     val got = (0L until 500L).toDF("id").repartition(7)
       .agg(Sketches.kmvSampleBy(pmod(col("id") * 997, lit(1013L)), col("id"), 8))
@@ -62,7 +57,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("usable from SQL") {
-    Sketches.register(spark)
     (0L until 100L).toDF("id").createOrReplaceTempView("v_ids")
     val got = spark.sql("SELECT kmv_sample(id, 3) FROM v_ids")
       .as[Seq[Long]].head()

@@ -14,8 +14,6 @@ import graft.SparkSpec
 class LshBandKeysSpec extends SparkSpec {
   import spark.implicits._
 
-  Texts.register(spark)
-
   private def composable(bands: Int) = {
     val r = size(col("sig")) / bands
     posexplode(transform(sequence(lit(0), lit(bands - 1)),

@@ -19,7 +19,6 @@ class LshBucketSpec extends SparkSpec {
   private lazy val emb = graft.Tables(spark, sf, "embeddings")
 
   test("expression == composable HOF buckets on the embeddings corpus") {
-    LshBuckets.register(spark)
     for ((nPlanes, seed) <- Seq((8, 42L), (12, 42L), (32, 42L), (8, 7L))) {
       val mismatch = emb
         .select(
@@ -33,7 +32,6 @@ class LshBucketSpec extends SparkSpec {
   }
 
   test("expression == composable HOF on edge vectors") {
-    LshBuckets.register(spark)
     val edges = Seq(
       Seq.empty[Float], Seq(0.0f), Seq(1.0f), Seq(-1.0f),
       Seq(Float.MaxValue, Float.MinValue),
@@ -49,7 +47,6 @@ class LshBucketSpec extends SparkSpec {
   }
 
   test("expression == composable HOF on 100 seeded random vectors") {
-    LshBuckets.register(spark)
     val rnd = new scala.util.Random(42)
     val vecs = Seq.fill(100)(
       Seq.fill(1 + rnd.nextInt(64))((rnd.nextFloat() - 0.5f) * rnd.nextInt(20)))
@@ -64,7 +61,6 @@ class LshBucketSpec extends SparkSpec {
   }
 
   test("identical vectors always share a bucket; probe set contains center") {
-    LshBuckets.register(spark)
     val b = emb.limit(5)
       .select(LshBuckets.lshBucket(col("embedding"), 8, 42L).as("b"))
       .as[Long].collect()

@@ -7,8 +7,6 @@ import graft.SparkSpec
 class MinHashSigSpec extends SparkSpec {
   import spark.implicits._
 
-  Texts.register(spark)
-
   private val p = 2147483647L
 
   test("matches the explode(ngram_hashes) + groupBy(min...) formulation") {

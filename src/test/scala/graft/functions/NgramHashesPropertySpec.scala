@@ -46,7 +46,6 @@ object NgramHashesPropertySpec extends Properties("NgramHashes") {
 
   property("hashAll == pmod(xxhash64(substring(text,i,n)), mod) per position") =
     forAll(batch) { case (texts, n, mod) =>
-      Texts.register(spark)
       val rows = texts.toDF("text")
         .withColumn("cnt", greatest(length(col("text")) - (n - 1), lit(1)))
         .withColumn("i", explode(sequence(lit(1), col("cnt"))))

@@ -7,10 +7,7 @@ import graft.SparkSpec
 class QuantizedVecSpec extends SparkSpec {
   import spark.implicits._
 
-  private def registered = { QuantizedVec.register(spark); spark }
-
   test("quantize: max maps to +-127, half-up ties, zero vector to zeros") {
-    registered
     val got = Seq(
       Seq(2f, -2f, 1f, 0f),   // scale 63.5: 1f -> floor(64.0)=63... check below
       Seq(0f, 0f, 0f, 0f)
@@ -21,7 +18,6 @@ class QuantizedVecSpec extends SparkSpec {
   }
 
   test("driver-side quantizeFloats produces the scan side's bytes") {
-    registered
     val rows = graft.Tables(spark, sf, "embeddings").limit(50)
       .select(col("embedding"),
         QuantizedVec.int8Quantize(col("embedding")).as("q"))
@@ -32,7 +28,6 @@ class QuantizedVecSpec extends SparkSpec {
   }
 
   test("int8_cosine: hand values incl. zero-norm and null propagation") {
-    registered
     val df = Seq(
       (Some(Seq[Byte](127, 0)), Some(Seq[Byte](127, 0))),
       (Some(Seq[Byte](127, 0)), Some(Seq[Byte](0, 127))),
@@ -47,7 +42,6 @@ class QuantizedVecSpec extends SparkSpec {
   }
 
   test("quantized cosine tracks float cosine within the 1/127 error bar") {
-    registered
     val emb = graft.Tables(spark, sf, "embeddings")
     val q = emb.filter("vec_id = 0").select("embedding").head().getSeq[Float](0)
     val qq = QuantizedVec.quantizeFloats(q.toArray)
@@ -61,7 +55,6 @@ class QuantizedVecSpec extends SparkSpec {
   }
 
   test("usable from SQL; scores are bounded in [-1, 1]") {
-    registered
     graft.Tables(spark, sf, "embeddings").limit(8).createOrReplaceTempView("qe")
     val n = spark.sql(
       """SELECT int8_cosine(int8_quantize(a.embedding),

@@ -54,7 +54,6 @@ object RepetitionCountsSpec extends Properties("RepetitionCounts") {
 
   property("matches the tokenize+groupBy reference on random Unicode") =
     forAll(batch) { texts =>
-      Texts.register(spark)
       val got = texts.zipWithIndex
         .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
         .select(col("doc_id"),
@@ -64,7 +63,6 @@ object RepetitionCountsSpec extends Properties("RepetitionCounts") {
     }
 
   property("null propagates; hand-computed example") = {
-    Texts.register(spark)
     val rows = Seq((0L, null: String), (1L, "a b a b a"))
       .toDF("doc_id", "text")
       .orderBy("doc_id")

@@ -8,8 +8,6 @@ import graft.text.TextAnalysis
 class ShingleFingerprintSpec extends SparkSpec {
   import spark.implicits._
 
-  Texts.register(spark)
-
   test("matches the explode(shingleStarts) + min(md5(substring)) form") {
     val texts = Seq(
       "the quick brown fox jumps over the lazy dog",

@@ -7,8 +7,6 @@ import graft.SparkSpec
 class SigOverlapSpec extends SparkSpec {
   import spark.implicits._
 
-  Texts.register(spark)
-
   private def overlap(a: Seq[Long], b: Seq[Long]): Option[Double] =
     Seq((a, b)).toDF("a", "b")
       .select(SigOverlap.sigOverlap(col("a"), col("b")))

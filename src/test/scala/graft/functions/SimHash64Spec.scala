@@ -8,8 +8,6 @@ import graft.text.TextAnalysis
 class SimHash64Spec extends SparkSpec {
   import spark.implicits._
 
-  Texts.register(spark)
-
   test("matches the explode(tokens) + 64-vote-sum formulation") {
     val texts = Seq(
       "the quick brown fox",

@@ -41,7 +41,6 @@ object SketchFusionPropertySpec extends Properties("SketchFusion") {
 
   property("stopword_counts matches the fold-of-HOFs langId/ratios") =
     forAll(batch) { texts =>
-      Texts.register(spark)
       val d = df(texts)
       // reference formulations: the pre-fusion fold-of-HOFs shapes, on
       // the post-fix wsTokens (non-empty tokens — the property run that
@@ -75,7 +74,6 @@ object SketchFusionPropertySpec extends Properties("SketchFusion") {
 
   property("minhash_sig matches explode(ngram_hashes) + min aggregate") =
     forAll(batch) { texts =>
-      Texts.register(spark)
       val d = df(texts)
       val p = 2147483647L
       val k = 8
@@ -97,7 +95,6 @@ object SketchFusionPropertySpec extends Properties("SketchFusion") {
 
   property("simhash64 matches explode(tokens) + 64-vote aggregate") =
     forAll(batch) { texts =>
-      Texts.register(spark)
       val d = df(texts)
       val votes = (0 until 64).map(j =>
         sum(shiftright(col("h"), j).bitwiseAND(1) * 2 - 1).as(s"s$j"))
@@ -119,7 +116,6 @@ object SketchFusionPropertySpec extends Properties("SketchFusion") {
 
   property("shingle_fingerprint matches explode + min(md5(substring))") =
     forAll(batch) { texts =>
-      Texts.register(spark)
       val d = df(texts)
       val ref = d.select(col("doc_id"),
           explode(TextAnalysis.shingleStarts(col("text"))).as("i"),

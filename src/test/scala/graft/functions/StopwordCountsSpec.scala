@@ -8,8 +8,6 @@ import graft.text.TextAnalysis
 class StopwordCountsSpec extends SparkSpec {
   import spark.implicits._
 
-  Texts.register(spark)
-
   private def counts(t: String): Seq[Int] =
     Seq(t).toDF("t")
       .select(StopwordCountsExpr.stopwordCounts(col("t")))

@@ -36,7 +36,6 @@ class StripStopTokensSpec extends SparkSpec {
       "")
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
-    StripStopTokens.register(spark)
     val got = df.select(col("doc_id"),
         StripStopTokens.stripStopTokens(col("text"), stop).as("s"))
       .select(col("doc_id"), col("s.n_toks"), col("s.n_kept"),
@@ -51,7 +50,6 @@ class StripStopTokensSpec extends SparkSpec {
 
   test("null text propagates null; empty stop set keeps everything " +
       "with single-space normalization; non-foldable stop is rejected") {
-    StripStopTokens.register(spark)
     val df = Seq((1L, "x  y\tz"), (2L, null: String)).toDF("doc_id", "text")
     val got = df.select(col("doc_id"),
         StripStopTokens.stripStopTokens(col("text"), Nil).as("s"))

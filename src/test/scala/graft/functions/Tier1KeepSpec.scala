@@ -15,8 +15,6 @@ import graft.text.TextAnalysis
 class Tier1KeepSpec extends SparkSpec {
   import spark.implicits._
 
-  Texts.register(spark)
-
   // deterministic mixed corpus: every branch of the scan — plain en/es/
   // fr/de text, CJK stopwords (multi-byte + punct-class), pure
   // punctuation, empty/blank, argmax ties, long texts saturating the

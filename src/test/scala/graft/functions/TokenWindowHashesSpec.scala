@@ -61,7 +61,6 @@ class TokenWindowHashesSpec extends AnyFunSuite {
       .collect().map(r => if (r.isNullAt(0)) null else r.getSeq[Long](0))
     assert(out(1) == null)
     assert(out(2) == Seq.empty[Long])
-    Texts.register(spark)
     val sql = spark.sql(
       "SELECT token_window_hashes('a b c', 2) AS h").as[Seq[Long]].head()
     assert(sql.size == 2)

@@ -51,7 +51,6 @@ class TopKPairsSpec extends SparkSpec {
   test("top_k_pairs plan has no Sort below the final orderBy") {
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.adaptive.enabled", "false")
-    TopK.register(s2) // new session = new function registry
     import s2.implicits._
     val df = s2.range(100)
       .select((col("id") % 4).as("g"), col("id").as("i"),

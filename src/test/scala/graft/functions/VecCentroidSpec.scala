@@ -68,7 +68,6 @@ class VecCentroidSpec extends SparkSpec {
   }
 
   test("SQL surface via extensions name") {
-    VecCentroid.register(spark)
     val out = spark.sql(
       """SELECT vec_centroid(v, 1000000L) AS c
         |FROM VALUES (array(CAST(1.0 AS FLOAT))), (array(CAST(2.0 AS FLOAT))) AS t(v)

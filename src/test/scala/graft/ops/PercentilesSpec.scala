@@ -112,7 +112,6 @@ class PercentilesSpec extends SparkSpec {
   }
 
   test("count-map aggregate aborts, actionably, above the distinct cap") {
-    graft.functions.ExactPercentilesF.register(spark)
     val df = spark.range(1000)
       .selectExpr("cast(id as double) as v", "id % 2 as g")
     // 500 distinct values per group against a cap of 100: the job must
@@ -192,7 +191,6 @@ class PercentilesSpec extends SparkSpec {
       .select("ps").as[Seq[Double]].collect()
     assert(got.toSeq == Seq(Seq(25.0)))
     // the SQL registration mirrors the plain function's cap argument
-    graft.functions.ExactPercentilesF.registerWeighted(spark)
     df.createOrReplaceTempView("wcap_in")
     val e = intercept[Exception] {
       spark.sql("SELECT exact_percentiles_weighted(v, n, array(0.5d), 1) " +

@@ -179,7 +179,6 @@ class CorpusPipelineSpec extends SparkSpec {
 
     val (table, path) = freshIncremental("curinc_ref")
     val (ref, refPath) = freshIncremental("curinc_ref_oracle")
-    graft.functions.Texts.register(spark)
     batches.zipWithIndex.foreach { case (b, i) =>
       val got = CorpusPipeline.curateIncremental(b, table, path, cfg)
         .select("doc_id").as[Long].collect().sorted.toSeq

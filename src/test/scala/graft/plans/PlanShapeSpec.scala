@@ -47,7 +47,6 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("shingle fingerprint is a pure map: zero exchanges") {
-    graft.functions.Texts.register(spark)
     assert(exchanges(docs.select(col("doc_id"),
       graft.functions.ShingleFingerprint
         .shingleFingerprint(col("text"), 8).as("fp"))) == 0)

@@ -5,15 +5,12 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.functions.Vectors
+import graft.functions.{GraftFunctions, Vectors}
 
 class RulesSpec extends SparkSpec {
   import spark.implicits._
 
-  private def setup() = {
-    Vectors.register(spark)
-    Rules.register(spark)
-  }
+  private def setup() = GraftFunctions.register(spark)
 
   // File-backed input: ConvertToLocalRelation would eagerly evaluate a
   // LocalRelation projection before user-provided optimizer rules run.

@@ -238,7 +238,6 @@ class HeavyHittersSpec extends SparkSpec {
   }
 
   test("mg_topk resolves through SQL and GraftExtensions registration") {
-    MisraGriesAgg.register(spark)
     corpus(2, 10).createOrReplaceTempView("hh_docs")
     val r = spark.sql(
       "SELECT s.total, size(s.items) FROM " +

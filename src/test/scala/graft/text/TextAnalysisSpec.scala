@@ -7,8 +7,6 @@ import graft.SparkSpec
 class TextAnalysisSpec extends SparkSpec {
   import spark.implicits._
 
-  graft.functions.Texts.register(spark) // stopword_counts
-
   test("wsTokens: blank input yields empty array, not ['']") {
     val got = Seq("", "  ", "a  b\tc").toDF("t")
       .select(size(TextAnalysis.wsTokens(col("t")))).as[Int].collect()
