@@ -7,18 +7,15 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder, Transform}
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{AlwaysTrue, DataSourceRegister, EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -52,7 +49,8 @@ import org.apache.spark.util.SerializableConfiguration
   * day lands wholly in one task and each partition directory gets ONE
   * file per job instead of tasks×days small files. Task writers emit
   * ordinary hive-layout parquet (`<pcol>=<value>/part-*.parquet`)
-  * through parquet-hadoop's public writer into a per-query staging dir;
+  * through Spark's own parquet row writer (the one `FileFormatWriter`
+  * uses) into a per-query staging dir;
   * commit is directory surgery on the driver — delete the partitions the
   * mode condemns, then rename staged files in, bridged by a durable
   * manifest so a crash anywhere in the window replays mechanically
@@ -76,9 +74,13 @@ import org.apache.spark.util.SerializableConfiguration
   * deliberately adds no Scan: a second parquet reader would be worse
   * than Spark's own.
   *
-  * Supported column types: the case-record primitives (int, long,
-  * float, double, boolean, string, date, timestamp). The partition
-  * column must be a date or string and non-null.
+  * Column types: every type Spark's parquet writes — arrays, structs,
+  * maps and decimals included, so the whole case record (FIXTURES.md
+  * F2) fits — with the session's codec
+  * (`spark.sql.parquet.compression.codec`) and timestamp type
+  * (`spark.sql.parquet.outputTimestampType`). The partition column must
+  * be a date or string, its values non-null and path-safe. Type errors
+  * fail in the write builder, on the driver, before any job starts.
   */
 class DailyStoreDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "dailystore"
@@ -317,7 +319,7 @@ private[sources] object DelegateCache {
       rebuilds += 1
       ParquetTable(name, spark, CaseInsensitiveStringMap.empty(),
         Seq(path), Some(delegateSchema),
-        classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat])
+        classOf[ParquetFileFormat])
     }
     if (!enabled(spark)) return build()
     val e = entryFor(spark, path)
@@ -611,8 +613,17 @@ class DailyStoreWriteBuilder(path: String, pcol: String,
     }
   }
 
+  /** Schema checks run here, on the driver, before any job starts: the
+    * partition column becomes a directory name (date or string only),
+    * and every column must be a type Spark's parquet writes. */
   override def build(): Write = new Write with RequiresDistributionAndOrdering {
     private val pIdx = info.schema().fieldIndex(pcol)
+    info.schema()(pIdx).dataType match {
+      case DateType | StringType => ()
+      case other => throw new IllegalArgumentException(
+        s"dailystore: partition column must be date or string, got $other")
+    }
+    DataSourceUtils.verifySchema(new ParquetFileFormat, info.schema())
 
     // one day -> one task -> one file: the engine plans the clustering
     // shuffle reloadPartitioned() documents by hand
@@ -635,12 +646,21 @@ class DailyStoreBatchWrite(path: String, pcol: String, pIdx: Int,
   extends BatchWrite {
 
   private val staging = s"$path/__stage_$queryId"
-  private val conf = new SerializableConfiguration(
-    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+  private val conf =
+    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
 
+  /** Spark's own parquet row writer, configured once per write from the
+    * session (codec, timestamp type, legacy format) exactly as
+    * `FileFormatWriter` configures it. */
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory =
-    DailyStoreWriterFactory(staging, schema, pcol, pIdx, conf)
+      info: PhysicalWriteInfo): DataWriterFactory = {
+    val job = Job.getInstance(conf)
+    val parquet = new ParquetFileFormat().prepareWrite(
+      org.apache.spark.sql.SparkSession.active, job, Map.empty,
+      DailyStoreWriter.dataSchema(schema, pIdx))
+    DailyStoreWriterFactory(staging, schema, pcol, pIdx, parquet,
+      new SerializableConfiguration(job.getConfiguration))
+  }
 
   /** Commit messages carry (partition value, staged file) pairs, and
     * ONLY those files are renamed into the store: a failed or
@@ -739,7 +759,7 @@ class DailyStoreBatchWrite(path: String, pcol: String, pIdx: Int,
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.value)
+    val fs = new Path(path).getFileSystem(conf)
     val live = new Path(path)
     // the single-writer lease covers the whole window — recovery
     // preamble through manifest cleanup — so a concurrent writer fails
@@ -753,7 +773,7 @@ class DailyStoreBatchWrite(path: String, pcol: String, pIdx: Int,
                            messages: Array[WriterCommitMessage]): Unit = {
     // replay any torn commit a crashed driver left behind: its manifest
     // names a DIFFERENT queryId's staging, never this write's
-    DailyStoreRecovery.recoverPendingCommits(path, conf.value,
+    DailyStoreRecovery.recoverPendingCommits(path, conf,
       heldBy = Some(queryId), ttlMs = leaseTtlMs)
     def partDirs(): Seq[Path] =
       if (!fs.exists(live)) Nil
@@ -862,7 +882,7 @@ class DailyStoreBatchWrite(path: String, pcol: String, pIdx: Int,
     * warning so a committed-on-failure write is visible in driver logs.
     */
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(staging).getFileSystem(conf.value)
+    val fs = new Path(staging).getFileSystem(conf)
     val live = new Path(path)
     val manifest = DailyStoreRecovery.manifestPath(live, queryId)
     if (fs.exists(manifest)) {
@@ -876,7 +896,7 @@ class DailyStoreBatchWrite(path: String, pcol: String, pIdx: Int,
       // skip rather than race it
       try {
         WriterLease.acquire(fs, live, queryId, leaseTtlMs)
-        try DailyStoreRecovery.recoverPendingCommits(path, conf.value,
+        try DailyStoreRecovery.recoverPendingCommits(path, conf,
           heldBy = Some(queryId), ttlMs = leaseTtlMs)
         finally WriterLease.release(fs, live, queryId)
       } catch {
@@ -1189,51 +1209,39 @@ final case class DailyStoreCommit(files: Seq[(String, String)])
   extends WriterCommitMessage
 
 case class DailyStoreWriterFactory(staging: String, schema: StructType,
-    pcol: String, pIdx: Int, conf: SerializableConfiguration)
+    pcol: String, pIdx: Int, parquet: OutputWriterFactory,
+    conf: SerializableConfiguration)
   extends DataWriterFactory {
   override def createWriter(partitionId: Int,
                             taskId: Long): DataWriter[InternalRow] =
-    new DailyStoreWriter(staging, schema, pcol, pIdx, conf, taskId)
+    new DailyStoreWriter(staging, schema, pcol, pIdx, parquet, conf, taskId)
 }
 
-/** Task-side hive-layout parquet writer over parquet-hadoop's public
-  * Group API. One open writer per partition value seen (under the
+object DailyStoreWriter {
+  /** The columns a data file holds: all but the partition column. */
+  def dataSchema(schema: StructType, pIdx: Int): StructType =
+    StructType(schema.fields.patch(pIdx, Nil, 1))
+}
+
+/** Task-side hive-layout writer over Spark's own parquet
+  * `OutputWriter`. One open writer per partition value seen (under the
   * clustered distribution that is one per task); data files exclude the
   * partition column, hive-style.
   */
 class DailyStoreWriter(staging: String, schema: StructType, pcol: String,
-    pIdx: Int, conf: SerializableConfiguration, taskId: Long)
+    pIdx: Int, parquet: OutputWriterFactory,
+    conf: SerializableConfiguration, taskId: Long)
   extends DataWriter[InternalRow] {
 
-  private val dataFields: Array[(StructField, Int)] =
-    schema.fields.zipWithIndex.filter(_._2 != pIdx)
+  private val dataSchema = DailyStoreWriter.dataSchema(schema, pIdx)
+  /** Reused view of the incoming row without the partition column. */
+  private val dataRow = ProjectingInternalRow(dataSchema,
+    schema.indices.filter(_ != pIdx))
+  private val dateValues = schema(pIdx).dataType == DateType
+  private val context =
+    new TaskAttemptContextImpl(conf.value, new TaskAttemptID())
 
-  private val messageType: MessageType = {
-    val b = Types.buildMessage()
-    dataFields.foreach { case (f, _) =>
-      val opt = Types.optional _
-      val prim = f.dataType match {
-        case IntegerType => opt(PrimitiveTypeName.INT32)
-        case LongType => opt(PrimitiveTypeName.INT64)
-        case FloatType => opt(PrimitiveTypeName.FLOAT)
-        case DoubleType => opt(PrimitiveTypeName.DOUBLE)
-        case BooleanType => opt(PrimitiveTypeName.BOOLEAN)
-        case StringType => opt(PrimitiveTypeName.BINARY)
-          .as(LogicalTypeAnnotation.stringType())
-        case DateType => opt(PrimitiveTypeName.INT32)
-          .as(LogicalTypeAnnotation.dateType())
-        case TimestampType => opt(PrimitiveTypeName.INT64)
-          .as(LogicalTypeAnnotation.timestampType(true,
-            LogicalTypeAnnotation.TimeUnit.MICROS))
-        case other => throw new IllegalArgumentException(
-          s"dailystore: unsupported column type $other for ${f.name}")
-      }
-      b.addField(prim.named(f.name))
-    }
-    b.named("dailystore")
-  }
-
-  private val writers = mutable.Map.empty[String, ParquetWriter[Group]]
+  private val writers = mutable.Map.empty[String, OutputWriter]
   private val files = mutable.Buffer.empty[(String, String, Path)]
 
   /** Hive-path-safe charset: the value becomes a directory name, and
@@ -1248,13 +1256,10 @@ class DailyStoreWriter(staging: String, schema: StructType, pcol: String,
   private def partitionValue(row: InternalRow): String = {
     require(!row.isNullAt(pIdx),
       s"dailystore: null $pcol partition value")
-    val v = schema.fields(pIdx).dataType match {
-      case DateType => java.time.LocalDate.ofEpochDay(row.getInt(pIdx).toLong)
-        .toString
-      case StringType => row.getUTF8String(pIdx).toString
-      case other => throw new IllegalArgumentException(
-        s"dailystore: partition column must be date or string, got $other")
-    }
+    val v =
+      if (dateValues)
+        java.time.LocalDate.ofEpochDay(row.getInt(pIdx).toLong).toString
+      else row.getUTF8String(pIdx).toString
     if (!SafePartitionValue.matches(v))
       throw new IllegalArgumentException(
         s"dailystore: partition value '$v' contains path-unsafe " +
@@ -1268,26 +1273,10 @@ class DailyStoreWriter(staging: String, schema: StructType, pcol: String,
       val name = s"part-$taskId-${UUID.randomUUID()}.parquet"
       val file = new Path(s"$staging/$pcol=$pv/$name")
       files += ((pv, name, file))
-      ExampleParquetWriter.builder(file)
-        .withConf(conf.value).withType(messageType).build()
+      parquet.newInstance(file.toString, dataSchema, context)
     })
-    val g = new SimpleGroup(messageType)
-    var out = 0
-    while (out < dataFields.length) {
-      val (f, i) = dataFields(out)
-      if (!row.isNullAt(i)) f.dataType match {
-        case IntegerType | DateType => g.add(out, row.getInt(i))
-        case LongType | TimestampType => g.add(out, row.getLong(i))
-        case FloatType => g.add(out, row.getFloat(i))
-        case DoubleType => g.add(out, row.getDouble(i))
-        case BooleanType => g.add(out, row.getBoolean(i))
-        case StringType =>
-          g.add(out, Binary.fromString(row.getUTF8String(i).toString))
-        case _ => () // unreachable: messageType build rejected it
-      }
-      out += 1
-    }
-    w.write(g)
+    dataRow.project(row)
+    w.write(dataRow)
   }
 
   override def commit(): WriterCommitMessage = {

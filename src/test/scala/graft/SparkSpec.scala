@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,4 +31,32 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Jobs started while `body` runs, counted by a plain listener over
+    * every job: a one-job sentinel on each side marks the window, because
+    * listener events arrive asynchronously but in order.
+    */
+  protected def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("-"))
+    }
+    def sentinel(tag: String): Int = {
+      sc.setJobGroup(tag, tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      Iterator.continually(seen.poll(60, TimeUnit.SECONDS))
+        .takeWhile { g => assert(g != null, "sentinel not delivered"); g != tag }
+        .size
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel("jobs-during-before")
+      body
+      sentinel("jobs-during-after")
+    } finally sc.removeSparkListener(listener)
+  }
 }

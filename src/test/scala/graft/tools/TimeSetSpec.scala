@@ -1,43 +1,12 @@
 package graft.tools
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.SparkSpec
 
 class TimeSetSpec extends SparkSpec {
   private val names = Seq("q03_growth_rates", "q12_pricing_summary")
-
-  /** Jobs started while `body` runs, counted by a plain listener over
-    * every job: a one-job sentinel on each side marks the window, because
-    * listener events arrive asynchronously but in order.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val seen = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.put(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse("-"))
-    }
-    def sentinel(tag: String): Int = {
-      sc.setJobGroup(tag, tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      Iterator.continually(seen.poll(60, TimeUnit.SECONDS))
-        .takeWhile { g => assert(g != null, "sentinel not delivered"); g != tag }
-        .size
-    }
-    sc.addSparkListener(listener)
-    try {
-      sentinel("timeset-spec-before")
-      body
-      sentinel("timeset-spec-after")
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("job counts equal a direct listener count of one more run") {
     val r = TimeSet.run(spark, names, sf, 2)
