@@ -93,7 +93,7 @@ object DedupQueries {
     * so corpus drift fails loudly, not as a silent hash mismatch).
     * Verbatim
     * copies still share the exact salted TEXT, so the full real path —
-    * xxhash shingling, banding, bounded-bucket candidates, verify join —
+    * xxhash shingling, banding, bounded-bucket candidates, verify —
     * must emit exactly the copy pairs at est 1.0 / hamming 0. The salt
     * never appears in the oracle (closed form over ids alone), so it
     * needs determinism, not SQL expressibility.
@@ -404,8 +404,8 @@ object DedupQueries {
       "Bloom-gated eval-set contamination screen vs substring-set oracle"),
 
     // ----- MinHash + LSH banding over the salted copy-seeded corpus -----
-    // The REAL scale path (fused minhash_sig over every doc, LSH band
-    // join, bounded-bucket candidates, sig_overlap verify) under the
+    // The REAL scale path (fused minhash_sig over every doc, LSH
+    // banding, bounded-bucket candidates, in-bucket sig_overlap) under the
     // closed-form copy oracle (see saltedCopySeeded): at est >= 0.99
     // exactly the 50 seeded copy pairs survive — a broken band split,
     // candidate path, or overlap count loses copies; an over-wide
@@ -414,15 +414,10 @@ object DedupQueries {
     // by q45's near-dup tier and q57's fully-oracled band fixture.
     "q37_minhash_lsh" -> Q(
       (s, dir) => {
-        // materialized once (CorpusPipeline pattern): consumed by the
-        // band join sides and the verify joins — recomputing shingle
-        // hashing per consumer would dominate
-        val sig = graft.util.Checkpoints.scoped(s"q37sig:$dir")(
-          Dedup.minhashSignatures(
-            saltedCopySeeded(s, dir), "doc_id", "text",
-            numHashes = 32, shingleN = 5))
-        Dedup.minhashJaccard(Dedup.lshCandidates(sig, "doc_id", bands = 8),
-            sig, "doc_id")
+        val sig = Dedup.minhashSignatures(
+          saltedCopySeeded(s, dir), "doc_id", "text",
+          numHashes = 32, shingleN = 5)
+        Dedup.lshCandidates(sig, "doc_id", bands = 8)
           .filter(col("est_jaccard") >= 0.99)
           .orderBy("id1", "id2")
       },
@@ -430,13 +425,13 @@ object DedupQueries {
         """SELECT doc_id AS id1, doc_id + 10000000 AS id2,
           |       CAST(1.0 AS DOUBLE) AS est_jaccard
           |FROM documents WHERE doc_id < 50 ORDER BY id1, id2""".stripMargin),
-      "MinHash signatures -> LSH band join -> verify, copy-pair oracle"),
+      "MinHash signatures -> LSH banding -> in-bucket verify, copy-pair oracle"),
 
     // ----- full corpus-curation composition, closed-form oracle -----
     // Every tier runs for real over the full corpus (see curationCorpus):
     // tier-1 expression filters scan everything; exact dedup must fold
     // the 50 verbatim copies; signatures/bands/verify run over all docs
-    // (organic salted candidates flow through the verify join and are
+    // (organic salted candidates flow through the in-bucket verify and are
     // rejected below 0.9); CC must collapse the 20 seeded three-member
     // clusters to their min ids. Survivors are closed-form: every
     // original doc (salted originals are pairwise distinct and below
@@ -539,9 +534,9 @@ object DedupQueries {
           |FROM documents WHERE doc_id < 50 ORDER BY id1, id2""".stripMargin),
       "64-bit SimHash, banded candidates, hamming<=3, copy-pair oracle"),
 
-    // ----- LSH band join + estimated-Jaccard verify on a FIXED fixture --
-    // q37's post-hash stages (band slice -> bucket equi-join -> distinct
-    // pairs -> positionwise signature agreement) under a full DuckDB
+    // ----- LSH banding + estimated-Jaccard verify on a FIXED fixture ----
+    // q37's post-hash stages (band slice -> bucket gather -> in-bucket
+    // positionwise signature agreement -> distinct) under a full DuckDB
     // oracle: the signature fixture is pure modular arithmetic, so band
     // equality is expressible as paired mod predicates — only xxhash64
     // itself stays outside the oracle's reach.
@@ -551,8 +546,7 @@ object DedupQueries {
           .select(col("doc_id"),
             array((0 until 8).map(i =>
               pmod(col("doc_id"), lit((i + 2).toLong))): _*).as("sig"))
-        Dedup.minhashJaccard(
-            Dedup.lshCandidates(sig, "doc_id", bands = 4), sig, "doc_id")
+        Dedup.lshCandidates(sig, "doc_id", bands = 4)
           .orderBy("id1", "id2")
       },
       Some(
@@ -575,11 +569,11 @@ object DedupQueries {
           |   (CASE WHEN id1%9=id2%9 THEN 1 ELSE 0 END)) / 8.0
           |    AS est_jaccard
           |FROM pairs ORDER BY id1, id2""".stripMargin),
-      "LSH band join + minhashJaccard verify stages under a real oracle"),
+      "LSH banding + in-bucket est_jaccard verify under a real oracle"),
 
     // ----- SimHash banding + hamming verify on a FIXED fixture -----
-    // q38's post-hash stages (16-bit band split -> bucket equi-join ->
-    // distinct -> bit_count(xor) hamming) DuckDB-oracled: band b of the
+    // q38's post-hash stages (16-bit band split -> bucket gather ->
+    // in-bucket bit_count(xor) hamming -> distinct) DuckDB-oracled: band b of the
     // fixture fingerprint is doc_id mod 8/16/32/64, so band equality
     // collapses to mod-8 equality (mod 16/32/64 equality each imply it).
     "q58_simhash_bands_fixture" -> Q(
@@ -606,22 +600,21 @@ object DedupQueries {
           |ORDER BY id1, id2""".stripMargin),
       "SimHash banding + hamming verify stages under a real oracle"),
 
-    // ----- string-id adapter through the LSH band stage, oracled -------
+    // ----- string ids through the LSH band stage, oracled ---------------
     // q57's modular-signature fixture re-run with STRING doc ids
-    // ('d' || doc_id): exercises Dedup.adaptIdType's dense-surrogate
-    // path end to end under a full-result oracle. The candidate set is
-    // q57's, but pair normalization must follow STRING ordering
-    // ('d10' < 'd2'), which the oracle mirrors with LEAST/GREATEST over
-    // the concatenated ids; est_jaccard is symmetric, so
-    // re-normalization cannot change it.
+    // ('d' || doc_id): the candidate stage's gather holds string ids in
+    // Spark's internal form, end to end under a full-result oracle. The
+    // candidate set is q57's, but pair normalization must follow STRING
+    // ordering ('d10' < 'd2'), which the oracle mirrors with
+    // LEAST/GREATEST over the concatenated ids; est_jaccard is
+    // symmetric, so the normalization cannot change it.
     "q74_lsh_string_ids" -> Q(
       (s, dir) => {
         val sig = Tables(s, dir, "documents").filter(col("doc_id") < 200)
           .select(concat(lit("d"), col("doc_id")).as("doc_id"),
             array((0 until 8).map(i =>
               pmod(col("doc_id"), lit((i + 2).toLong))): _*).as("sig"))
-        Dedup.minhashJaccard(
-            Dedup.lshCandidates(sig, "doc_id", bands = 4), sig, "doc_id")
+        Dedup.lshCandidates(sig, "doc_id", bands = 4)
           .orderBy("id1", "id2")
       },
       Some(
@@ -646,7 +639,7 @@ object DedupQueries {
           |   (CASE WHEN x%9=y%9 THEN 1 ELSE 0 END)) / 8.0
           |    AS est_jaccard
           |FROM pairs ORDER BY id1, id2""".stripMargin),
-      "string-id surrogate adapter through LSH banding + verify, oracled"),
+      "string ids through LSH banding + in-bucket verify, oracled"),
 
     // ----- string-id connected components, oracled ---------------------
     // q59's chain fixture with STRING ids: canonicalClusters'
@@ -776,7 +769,7 @@ object DedupQueries {
           |FROM dots JOIN n n1 ON id1 = n1.vec_id JOIN n n2 ON id2 = n2.vec_id
           |WHERE dot/(n1.nrm*n2.nrm) >= 0.42
           |ORDER BY id1, id2""".stripMargin),
-      "band join + cosine verify stages value-for-value vs DuckDB"),
+      "banding + in-bucket cosine verify value-for-value vs DuckDB"),
 
     // ----- SemDeDup: KMeans-cell semantic dedup, lowest id survives ----
     // Copy-seeded answer key (the q37/q38 construction, but with a far
@@ -927,8 +920,7 @@ object DedupQueries {
       (s, dir) => {
         val corpus = curationCorpus(s, dir)
         val sig = Dedup.minhashSignatures(corpus, "doc_id", "text")
-        val pairs = Dedup.minhashJaccard(
-            Dedup.lshCandidates(sig, "doc_id", bands = 8), sig, "doc_id")
+        val pairs = Dedup.lshCandidates(sig, "doc_id", bands = 8)
           .filter(col("est_jaccard") >= 0.9)
         val clusters = Dedup.canonicalClusters(
           corpus.select("doc_id"), pairs, "doc_id",

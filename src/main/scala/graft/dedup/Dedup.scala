@@ -1,8 +1,7 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 import graft.text.TextAnalysis
@@ -26,33 +25,24 @@ import graft.text.TextAnalysis
   * Id contract: every operator here accepts an id column of ANY
   * orderable type. The join/min-label tiers (ngramJaccard,
   * canonicalClusters, exact) and the incremental gates (pure joins and
-  * min-aggregates on the id) are type-agnostic natively; the
-  * bounded-bucket candidate stages (lshCandidates, simhashCandidates,
-  * embeddingNearDups) adapt non-bigint ids through the exact long
-  * surrogate in [[adaptIdType]] so [[graft.functions.BoundedIds]] keeps
-  * its flat-long aggregation buffer.
+  * min-aggregates on the id) are type-agnostic natively. The candidate
+  * stages (lshCandidates, simhashCandidates, embeddingNearDups) gather
+  * `(id, payload)` tuples in [[graft.functions.BoundedIds]], which holds
+  * ids of any orderable atomic type in Spark's internal form, so every
+  * id type takes the same in-bucket path and pairs normalize in the id
+  * type's own order.
   */
 object Dedup {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Bucket-cap rationale (shared by every capped candidate stage): a
-    * single degenerate bucket (boilerplate docs, stop-shingles) makes a
-    * bucket self-join genuinely quadratic in that bucket — pair count
-    * C(sz,2) — and no AQE skew-split can fix a quadratic pair count, so
-    * the only scale-safe move is to cap. Members of a dropped bucket
-    * still pair up in every other band/bucket they share — with b bands,
-    * near-dups have b chances to collide — and the exact-dedup tier
-    * catches the pathological all-identical case that saturates buckets
-    * in the first place.
-    */
   /** Action-free bucket cap for the incremental gates'
     * BATCH side: a window count over the bucket key filters over-cap
     * buckets inline, with no driver-side stats job. The window's
     * exchange hash-partitions the rows on exactly the key the store
     * join shuffles them to anyway, so the join reuses it — the cap is
     * effectively free, where a count+anti-join form would pay a separate
-    * aggregate job per micro-batch. Silent like [[boundedBucketPairs]]'
+    * aggregate job per micro-batch. Silent like [[bucketPairs]]'
     * cap; [[bucketCapAudit]] is the monitoring-cadence counterpart.
     */
   private def capBucketsInline(rows: DataFrame, keys: Seq[String],
@@ -358,135 +348,103 @@ object Dedup {
         .minhashSig(col(textCol), numHashes, shingleN, p))
   }
 
-  /** LSH banding: signature rows → (band, bucket) keys → candidate pairs
-    * via equi-join. `bands` must divide the signature length. With b bands
-    * of r rows, pairs with Jaccard j collide w.p. 1-(1-j^r)^b.
-    *
-    * Buckets larger than `maxBucket` are dropped before the self-join
-    * ([[boundedBucketPairs]]' in-aggregate cap): one boilerplate-saturated
-    * bucket would otherwise contribute C(sz,2) pairs and dominate the
-    * whole job at scale.
-    */
   /** (id, band, bkey) rows of a signature frame: each signature splits
     * into `bands` equal slices, keyed by the slice hash.
     * (`private[graft]`: StreamingOpsSpec appends band rows alone to
     * simulate a crash midway through [[appendSigStore]]'s two jobs.)
     */
-  private[graft] def bandRowsOf(sig: DataFrame, idCol: String, bands: Int): DataFrame = {
-    // r21 per-task-work pass: the original composable form —
-    // posexplode(transform(sequence, b => slice(sig, ...))) +
-    // xxhash64(band, bslice) — allocated a sequence array, `bands`
-    // slice copies and a struct per row before the generic hash ran.
-    // lsh_band_keys fuses the walk into one primitive-array loop with
-    // BIT-IDENTICAL keys wherever bands divides the signature length
-    // (every operator use; LshBandKeysSpec pins the equality, and pins
-    // the fused form's clean integer-division slicing as the DEFINED
-    // behavior outside that contract, where the composable form's
-    // Column./ double arithmetic truncated slice starts per band).
-    sig.select(col(idCol),
-      posexplode(graft.functions.LshBandKeys.lshBandKeys(col("sig"), bands))
-        .as(Seq("band", "bkey")))
-  }
+  private[graft] def bandRowsOf(sig: DataFrame, idCol: String, bands: Int): DataFrame =
+    sig.select(col(idCol), posexplode(sigBandKeys(bands)).as(Seq("band", "bkey")))
 
-  /** In-bucket candidate pairs from (…, band, bkey) rows in ONE
-    * aggregation pass: graft.functions.BoundedIds gathers each bucket's
-    * ids with hard-bounded state (a bucket past `maxBucket` evaluates to
-    * null and is filtered — identical drop semantics to a
-    * count-then-anti-join cap, minus its separate count job),
-    * then pairs expand WITHIN each bucket row: posexplode picks each id,
-    * slice takes its later neighbors. vs the previous self-join form
-    * this is one exchange instead of three (count agg + both join sides)
-    * and no driver-side stats action; the pair set is unchanged
-    * (least/greatest + distinct normalize the in-bucket order, which —
-    * like collect_list — is partitioning-dependent).
-    *
-    * The drop is SILENT on the hot path (logging it would cost the very
-    * stats job this shape removes) — operators audit the dropped mass on
-    * their own cadence with [[bucketCapAudit]] over the same band rows.
+  /** The `bands` band keys of a `sig` column. r21 per-task-work pass:
+    * the original composable form — posexplode(transform(sequence,
+    * b => slice(sig, ...))) + xxhash64(band, bslice) — allocated a
+    * sequence array, `bands` slice copies and a struct per row before
+    * the generic hash ran. lsh_band_keys fuses the walk into one
+    * primitive-array loop with BIT-IDENTICAL keys wherever bands divides
+    * the signature length (every operator use; LshBandKeysSpec pins the
+    * equality, and pins the fused form's clean integer-division slicing
+    * as the DEFINED behavior outside that contract, where the composable
+    * form's Column./ double arithmetic truncated slice starts per band).
     */
-  private[graft] def boundedBucketPairs(bandRows: DataFrame, idCol: String,
-                                 maxBucket: Int): DataFrame = {
-    bandRows
+  private def sigBandKeys(bands: Int): Column =
+    graft.functions.LshBandKeys.lshBandKeys(col("sig"), bands)
+
+  /** In-bucket candidate pairs, the one shape of every candidate stage
+    * (lshCandidates, simhashCandidates, embeddingNearDups): each row of
+    * `rows` falls into one (band, bkey) bucket per element of its
+    * `bandKeys` array; graft.functions.BoundedIds gathers each bucket's `(id, payload)`
+    * tuples with hard-bounded state; pairs expand WITHIN each bucket row
+    * (posexplode picks each tuple, slice takes its later neighbors) and
+    * are scored there by `score` over the two payloads. So only
+    * `(id1, id2, score)` rows leave the bucket: no join ever brings a
+    * signature or a vector back to a pair. Output columns are `id1`,
+    * `id2` (least/greatest in the id type's own order) and `scoreCol`.
+    * `score` must be symmetric, because the payloads are not swapped
+    * with the ids.
+    *
+    * Bucket cap: a single degenerate bucket (boilerplate docs,
+    * stop-shingles) is genuinely quadratic in pair count — C(sz,2) — and
+    * no AQE skew-split can fix a quadratic pair count, so the only
+    * scale-safe move is to cap. A bucket past `maxBucket` tuples
+    * evaluates to null and is filtered: the drop semantics of a
+    * count-then-anti-join cap, minus its separate count job. Members of
+    * a dropped bucket still pair up in every other bucket they share —
+    * with b bands, near-dups have b chances to collide — and the
+    * exact-dedup tier catches the all-identical case that saturates
+    * buckets in the first place. The drop is SILENT on the hot path
+    * (logging it would cost the very stats job this shape removes) —
+    * operators audit the dropped mass on their own cadence with
+    * [[bucketCapAudit]] over the same band rows.
+    *
+    * A tuple with a null id or a null payload is skipped (it takes no cap
+    * space); a duplicated id never pairs with itself; a pair colliding in
+    * several bands is emitted once, by the `distinct` after the score.
+    */
+  private def bucketPairs(rows: DataFrame, idCol: String, payloadCol: String,
+                          bandKeys: Column, maxBucket: Int, scoreCol: String)
+                         (score: (Column, Column) => Column): DataFrame = {
+    val idType = rows.schema(idCol).dataType
+    require(graft.functions.BoundedIds.isIdType(idType),
+      s"candidate stages need an orderable atomic id column; " +
+        s"got $idCol: ${idType.simpleString}")
+    rows.select(col(idCol), col(payloadCol),
+        posexplode(bandKeys).as(Seq("band", "bkey")))
       .groupBy(col("band"), col("bkey"))
-      .agg(graft.functions.BoundedIds.boundedIds(maxBucket, col(idCol))
-        .as("ids"))
-      .filter(col("ids").isNotNull && size(col("ids")) >= 2)
-      .select(posexplode(col("ids")).as(Seq("i", "ida")), col("ids"))
-      .select(col("ida"),
-        explode(slice(col("ids"), col("i") + lit(2),
-          size(col("ids")) - col("i") - lit(1))).as("idb"))
-      .select(least(col("ida"), col("idb")).as("id1"),
-        greatest(col("ida"), col("idb")).as("id2"))
-      // a duplicated input id in one bucket would otherwise emit a
-      // (id, id) self-pair — the old self-join's strict id1 < id2
-      // excluded those, so keep that contract
-      .filter(col("id1") =!= col("id2"))
-      // a pair colliding in several bands is emitted once per band
+      .agg(graft.functions.BoundedIds
+        .boundedIds(maxBucket, col(idCol), col(payloadCol)).as("xs"))
+      .filter(col("xs").isNotNull && size(col("xs")) >= 2)
+      .select(posexplode(col("xs")).as(Seq("i", "a")), col("xs"))
+      .select(col("a"),
+        explode(slice(col("xs"), col("i") + lit(2),
+          size(col("xs")) - col("i") - lit(1))).as("b"))
+      .filter(col("a.c0") =!= col("b.c0"))
+      .select(least(col("a.c0"), col("b.c0")).as("id1"),
+        greatest(col("a.c0"), col("b.c0")).as("id2"),
+        score(col("a.c1"), col("b.c1")).as(scoreCol))
       .distinct()
   }
 
-  /** Runs a bounded-bucket candidate stage for an id column of ANY
-    * orderable type, adapting to the bigint contract that keeps
-    * [[graft.functions.BoundedIds]]'s aggregation buffer a flat long
-    * array (the allocation-free property its hard state bound rests
-    * on). Three tiers, all EXACT:
+  /** MinHash LSH candidates, verified in the bucket: signature rows →
+    * `bands` (band, bucket) keys → `(id1, id2, est_jaccard)` for every
+    * pair sharing a bucket ([[bucketPairs]]). `bands` must divide the
+    * signature length. With b bands of r rows, pairs with Jaccard j
+    * collide w.p. 1-(1-j^r)^b. The estimate is the fraction of equal
+    * signature positions, the same [[graft.functions.SigOverlap]] value
+    * [[minhashJaccard]] computes for arbitrary pairs; a caller's
+    * `est_jaccard` threshold filters a grouping column of the final
+    * distinct, so Catalyst applies it below that exchange.
     *
-    *  - bigint ids: passthrough, zero cost;
-    *  - narrower integrals (tinyint/smallint/int): lossless widening
-    *    cast in, cast back on the pair output — least/greatest order
-    *    is unchanged under widening, so the pair set is identical;
-    *  - anything else orderable (string doc ids, dates, decimals,
-    *    timestamps): each DISTINCT id gets a dense long surrogate
-    *    (`monotonically_increasing_id` over the distinct ids,
-    *    localCheckpointed so re-evaluation cannot reassign), the stage
-    *    runs in surrogate space, and the pair OUTPUT joins back and
-    *    re-normalizes least/greatest in the ORIGINAL type's ordering
-    *    (surrogate order is arbitrary). Exact by construction — no
-    *    hash-collision caveat, unlike an xxhash64 surrogate, where a
-    *    collision inside one bucket would silently DROP a candidate
-    *    pair via the self-pair filter. Cost: one distinct exchange
-    *    over the id column plus two joins against the capped (small)
-    *    pair set. A duplicated input id maps to ONE surrogate,
-    *    preserving the bigint path's self-pair-exclusion contract.
-    *
-    * `carry` names symmetric pair-level columns (e.g. simhash's
-    * `hamming`) forwarded through the join-back unchanged.
+    * Each signature crosses the band exchange once per band, instead of
+    * the pair set crossing two signature joins after it. Buckets larger
+    * than `maxBucket` are dropped: one boilerplate-saturated bucket
+    * would otherwise contribute C(sz,2) pairs and dominate the whole job
+    * at scale.
     */
-  private[dedup] def adaptIdType(df: DataFrame, idCol: String,
-                          carry: Seq[String] = Nil)
-                         (run: DataFrame => DataFrame): DataFrame =
-    df.schema(idCol).dataType match {
-      case LongType => run(df)
-      case t @ (ByteType | ShortType | IntegerType) =>
-        run(df.withColumn(idCol, col(idCol).cast(LongType)))
-          .select(Seq(col("id1").cast(t).as("id1"),
-            col("id2").cast(t).as("id2")) ++ carry.map(col): _*)
-      case t if RowOrdering.isOrderable(t) =>
-        val mapping = df.select(col(idCol).as("__orig")).distinct()
-          .withColumn("__gid", monotonically_increasing_id())
-          .localCheckpoint()
-        val surrogate = df
-          .join(mapping, col(idCol) === col("__orig"))
-          .drop(idCol, "__orig")
-          .withColumnRenamed("__gid", idCol)
-        run(surrogate)
-          .join(mapping.select(col("__gid").as("id1"),
-            col("__orig").as("__o1")), "id1")
-          .join(mapping.select(col("__gid").as("id2"),
-            col("__orig").as("__o2")), "id2")
-          .select(Seq(least(col("__o1"), col("__o2")).as("id1"),
-            greatest(col("__o1"), col("__o2")).as("id2")) ++
-            carry.map(col): _*)
-      case other => throw new IllegalArgumentException(
-        s"candidate stages need an orderable id column; " +
-          s"got $idCol: ${other.simpleString}")
-    }
-
   def lshCandidates(sig: DataFrame, idCol: String, bands: Int,
                     maxBucket: Int = 500): DataFrame =
-    adaptIdType(sig, idCol) { s =>
-      boundedBucketPairs(bandRowsOf(s, idCol, bands), idCol, maxBucket)
-    }
+    bucketPairs(sig, idCol, "sig", sigBandKeys(bands), maxBucket,
+      "est_jaccard")(graft.functions.SigOverlap.sigOverlap)
 
   /** Audit for the bounded-bucket candidate stages' silent hot-bucket
     * drop: (hot bucket count, total rows they cover) above `maxBucket`,
@@ -494,7 +452,7 @@ object Dedup {
     * a candidate stage consumes — e.g.
     * `bucketCapAudit(Dedup.bandRowsOf(sig, "doc_id", 8), 500)`. Run on
     * the monitoring cadence, not per query: the hot path drops
-    * over-cap buckets without counting them (see [[boundedBucketPairs]]).
+    * over-cap buckets without counting them (see [[bucketPairs]]).
     */
   def bucketCapAudit(bandRows: DataFrame, maxBucket: Int,
                      keys: Seq[String] = Seq("band", "bkey")): (Long, Long) = {
@@ -506,11 +464,12 @@ object Dedup {
     (stats.getAs[Long]("nb"), stats.getAs[Long]("mass"))
   }
 
-  /** Estimated Jaccard for candidate pairs = fraction of equal signature
-    * positions (MinHash property). Verification tier after banding.
-    * The position-equality count is the codegen'd
-    * [[graft.functions.SigOverlap]] expression, not a zip_with/filter
-    * HOF pair — this runs once per candidate pair.
+  /** Estimated Jaccard for arbitrary `(id1, id2)` pairs = fraction of
+    * equal signature positions (MinHash property), joined from `sig`.
+    * [[lshCandidates]] already carries this value for its own pairs; this
+    * is the verify for pairs from anywhere else. The position-equality
+    * count is the codegen'd [[graft.functions.SigOverlap]] expression,
+    * not a zip_with/filter HOF pair — this runs once per pair.
     */
   def minhashJaccard(pairs: DataFrame, sig: DataFrame, idCol: String): DataFrame = {
     pairs
@@ -539,43 +498,18 @@ object Dedup {
   }
 
   /** SimHash near-dup candidates: equal 16-bit band (pigeonhole: hamming
-    * ≤ 3 guarantees ≥1 equal band of 4) then exact hamming filter.
-    * Same single-exchange bounded-bucket shape as [[boundedBucketPairs]],
-    * with the fingerprint carried through the bucket as a tuple payload
-    * (hamming is symmetric, so the least/greatest id normalization needs
-    * no payload swap); buckets above `maxBucket` evaluate to null and
-    * are dropped, exactly the count-then-anti-join cap semantics.
+    * ≤ 3 guarantees ≥1 equal band of 4), then the exact hamming distance
+    * computed in the bucket ([[bucketPairs]], with the fingerprint as the
+    * payload) and filtered at `maxDist`. Buckets above `maxBucket` are
+    * dropped.
     */
   def simhashCandidates(sh: DataFrame, idCol: String, maxDist: Int = 3,
                         maxBucket: Int = 500): DataFrame =
-    adaptIdType(sh, idCol, carry = Seq("hamming")) { shL =>
-      simhashCandidatesLong(shL, idCol, maxDist, maxBucket)
-    }
-
-  private def simhashCandidatesLong(sh: DataFrame, idCol: String,
-                                    maxDist: Int, maxBucket: Int): DataFrame = {
-    sh.select(col(idCol), col("simhash"),
-        posexplode(array((0 until 4).map(b =>
-          shiftright(col("simhash"), b * 16).bitwiseAND(0xFFFF)): _*))
-          .as(Seq("band", "bkey")))
-      .groupBy(col("band"), col("bkey"))
-      .agg(graft.functions.BoundedIds
-        .boundedIds(maxBucket, col(idCol), col("simhash")).as("xs"))
-      .filter(col("xs").isNotNull && size(col("xs")) >= 2)
-      .select(posexplode(col("xs")).as(Seq("i", "a")), col("xs"))
-      .select(col("a"),
-        explode(slice(col("xs"), col("i") + lit(2),
-          size(col("xs")) - col("i") - lit(1))).as("b"))
-      .select(
-        least(col("a.c0"), col("b.c0")).as("id1"),
-        greatest(col("a.c0"), col("b.c0")).as("id2"),
-        bit_count(col("a.c1").bitwiseXOR(col("b.c1"))).as("hamming"))
-      // self-pairs from a duplicated input id: the old self-join's
-      // strict id1 < id2 excluded them
-      .filter(col("id1") =!= col("id2"))
-      .distinct()
+    bucketPairs(sh, idCol, "simhash",
+        array((0 until 4).map(b =>
+          shiftright(col("simhash"), b * 16).bitwiseAND(0xFFFF)): _*),
+        maxBucket, "hamming")((a, b) => bit_count(a.bitwiseXOR(b)))
       .filter(col("hamming") <= maxDist)
-  }
 
   /** Above this many candidate PAIRS the CC fallthrough stays
     * distributed (class doc of [[canonicalClusters]]'s local path).
@@ -879,6 +813,23 @@ object Dedup {
         coalesce(col("label"), col(idCol)).as("canonical_id"))
   }
 
+  /** The `bands` exact-match band keys of a sign-LSH `bucket` column:
+    * its `nPlanes` bits split into equal slices (pigeonhole).
+    */
+  private def vectorBandKeys(nPlanes: Int, bands: Int): Column = {
+    require(nPlanes % bands == 0, "bands must divide nPlanes")
+    val w = nPlanes / bands
+    val mask = (1L << w) - 1
+    array((0 until bands).map(b =>
+      shiftright(col("bucket"), b * w).bitwiseAND(mask)): _*)
+  }
+
+  /** (id, band, bkey) rows of a sign-LSH `bucket` column. */
+  private[graft] def vectorBandRows(bucketed: DataFrame, idCol: String,
+                                    nPlanes: Int, bands: Int): DataFrame =
+    bucketed.select(col(idCol),
+      posexplode(vectorBandKeys(nPlanes, bands)).as(Seq("band", "bkey")))
+
   /** Embedding-cosine near-duplicates: the vector-space member of the
     * dedup tier (exact / MinHash / SimHash / n-gram / embedding).
     *
@@ -886,47 +837,26 @@ object Dedup {
     * `Similarity.withBuckets` (sign-random-projection LSH over the
     * vector), or a closed-form key in fixtures. The bucket's `nPlanes`
     * bits split into `bands` exact-match band keys (pigeonhole, same
-    * shape as [[simhashCandidates]]); pairs sharing any band become
-    * candidates, then the fused codegen cosine verifies against
-    * `minCosine`. Identical vectors always share every band (the bucket
-    * is a deterministic function of the vector), so true duplicates are
-    * found with probability 1; near-dups with cosine c agree per plane
-    * w.p. 1 - arccos(c)/π.
+    * shape as [[simhashCandidates]]); pairs sharing any band are scored
+    * in the bucket by the fused codegen cosine ([[bucketPairs]], with
+    * the vector as the payload) and kept at cosine ≥ `minCosine`,
+    * rounded to 6 places. Identical vectors always share every band (the
+    * bucket is a deterministic function of the vector), so true
+    * duplicates are found with probability 1; near-dups with cosine c
+    * agree per plane w.p. 1 - arccos(c)/π.
     *
-    * At 100 TB: candidates come from a bucketed equi-join (never
-    * all-pairs), hot buckets are capped, and only the (id1, id2)
-    * candidate pairs — not vectors — flow through the distinct; vectors
-    * join back for the verify stage only.
+    * At 100 TB: candidates come from bucket gathers (never all-pairs),
+    * hot buckets are capped, each vector crosses the band exchange once
+    * per band, and only scored `(id1, id2, cosine)` rows reach the
+    * distinct.
     */
-  /** (id, band, bkey) rows of a sign-LSH `bucket` column: `nPlanes` bits
-    * split into `bands` exact-match band keys (pigeonhole).
-    */
-  private[graft] def vectorBandRows(bucketed: DataFrame, idCol: String,
-                                    nPlanes: Int, bands: Int): DataFrame = {
-    require(nPlanes % bands == 0, "bands must divide nPlanes")
-    val w = nPlanes / bands
-    val mask = (1L << w) - 1
-    bucketed.select(col(idCol),
-      posexplode(array((0 until bands).map(b =>
-        shiftright(col("bucket"), b * w).bitwiseAND(mask)): _*))
-        .as(Seq("band", "bkey")))
-  }
-
   def embeddingNearDups(bucketed: DataFrame, idCol: String, vecCol: String,
                         minCosine: Double = 0.9, nPlanes: Int = 32,
-                        bands: Int = 4, maxBucket: Int = 1000): DataFrame = {
-    val cands = adaptIdType(bucketed, idCol) { b =>
-      boundedBucketPairs(vectorBandRows(b, idCol, nPlanes, bands),
-        idCol, maxBucket)
-    }
-    cands
-      .join(bucketed.select(col(idCol).as("id1"), col(vecCol).as("__v1")), "id1")
-      .join(bucketed.select(col(idCol).as("id2"), col(vecCol).as("__v2")), "id2")
-      .select(col("id1"), col("id2"),
-        graft.functions.Vectors.cosineSim(col("__v1"), col("__v2")).as("__c"))
+                        bands: Int = 4, maxBucket: Int = 1000): DataFrame =
+    bucketPairs(bucketed, idCol, vecCol, vectorBandKeys(nPlanes, bands),
+        maxBucket, "__c")(graft.functions.Vectors.cosineSim)
       .filter(col("__c") >= minCosine)
       .select(col("id1"), col("id2"), round(col("__c"), 6).as("cosine"))
-  }
 
   /** Incremental embedding novelty gate against a persisted vector
     * store — the vector-space member of the incremental tier
@@ -1159,7 +1089,7 @@ object Dedup {
     * schedules one job per shuffle stage under it). The persisted
     * frame keeps the shingle partitioning AND (shingle, id) sort order,
     * so the inverted-index self-join needs no exchange and no re-sort.
-    * The cap drop is silent here like [[boundedBucketPairs]]' (the old
+    * The cap drop is silent here like [[bucketPairs]]' (the old
     * logged-stats form cost a dedicated driver job per call);
     * [[graft.tools.StoreAudit]] is the monitoring-cadence audit of the
     * dropped mass.

@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * loop with zero allocation.
   *
   * Bucket values are IDENTICAL to the composable form
-  * (`Similarity.hyperplaneBucketComposable`, equality pinned by
-  * LshBucketSpec over random vectors): the plane weight re-derives the
+  * (`hyperplaneBucketComposable` in LshBucketSpec, which pins the
+  * equality over random vectors): the plane weight re-derives the
   * same xxhash64 chain Spark's `xxhash64(lit(seed), lit(p), j)` computes
   * — fold over children starting from the default seed 42, LongType seed
   * hashed as long, IntegerType plane/component hashed as int — then the

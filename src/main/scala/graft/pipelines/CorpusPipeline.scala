@@ -133,12 +133,11 @@ object CorpusPipeline {
     }
 
     // tier 3: near-dup clusters -> canonical survivor per cluster
-    // (signatures feed both the band join and the verify join; pairs feed
-    // the iterative CC — materialize each once)
-    val sig = cp("sig")(Dedup.minhashSignatures(detokened, "doc_id", "text",
-      cfg.minhashBits, cfg.shingleN))
-    val nearPairs = cp("pairs")(Dedup.minhashJaccard(
-        Dedup.lshCandidates(sig, "doc_id", cfg.lshBands), sig, "doc_id")
+    // (signatures feed only the band rows, which verify in the bucket;
+    // pairs feed the iterative CC — materialized once)
+    val sig = Dedup.minhashSignatures(detokened, "doc_id", "text",
+      cfg.minhashBits, cfg.shingleN)
+    val nearPairs = cp("pairs")(Dedup.lshCandidates(sig, "doc_id", cfg.lshBands)
       .filter(col("est_jaccard") >= cfg.minEstJaccard))
     val clusters = Dedup.canonicalClusters(
       detokened.select("doc_id"), nearPairs, "doc_id",

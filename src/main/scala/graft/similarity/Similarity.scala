@@ -42,29 +42,6 @@ object Similarity {
       .orderBy(desc("cosine"), col(idCol)).limit(k)
   }
 
-  /** Deterministic pseudo-random hyperplane weight for (plane, component):
-    * xxhash64-derived uniform in [-1, 1].
-    */
-  private def planeWeight(seed: Long, p: Column, j: Column): Column =
-    (pmod(xxhash64(lit(seed), p, j), lit(2000001L)) - 1000000L) / 1000000.0
-
-  /** LSH bucket key via composable built-ins: `nPlanes` sign bits of
-    * hyperplane projections. Reference semantics only — production paths
-    * go through the fused codegen `lsh_bucket` Expression
-    * (graft.functions.LshBucket), which computes bit-identical buckets
-    * without the per-element higher-order-function dispatch this form
-    * pays nPlanes times per row (LshBucketSpec pins the equality).
-    */
-  private[graft] def hyperplaneBucketComposable(
-      vec: Column, nPlanes: Int, seed: Long = 42L): Column =
-    (0 until nPlanes).map { p =>
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (v, j) => v.cast("double") * planeWeight(seed, lit(p), j)),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj > 0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-
   /** Bucket the corpus once (at scale: persist + partition by bucket). */
   def withBuckets(emb: DataFrame, vecCol: String,
                   nPlanes: Int = 12, seed: Long = 42L): DataFrame = {

@@ -37,9 +37,7 @@ object OracleMargins {
     val corpus = graft.catalog.DedupQueries.saltedCopySeeded(spark, dir)
     val sig = Dedup.minhashSignatures(corpus, "doc_id", "text", 32, 5)
       .localCheckpoint()
-    val mh = Dedup.minhashJaccard(
-      Dedup.lshCandidates(sig, "doc_id", bands = 8), sig, "doc_id")
-      .localCheckpoint()
+    val mh = Dedup.lshCandidates(sig, "doc_id", bands = 8).localCheckpoint()
     val q37Rows = mh.filter(col("est_jaccard") >= 0.99).count()
     val organicEst = mh.filter(col("id2") < shift)
       .agg(max("est_jaccard")).head().getDouble(0)

@@ -6,7 +6,7 @@ import graft.dedup.Dedup
 import graft.similarity.Similarity
 
 /** Operational readout for the bounded-bucket candidate stages' SILENT
-  * hot-bucket drop: the hot paths (boundedBucketPairs, capBucketsInline)
+  * hot-bucket drop: the hot paths (bucketPairs, capBucketsInline)
   * cap over-sized buckets without counting them — counting would cost
   * the very stats job those shapes remove — so a cluster operator runs
   * THIS on the monitoring cadence instead (weekly, alongside store

@@ -35,7 +35,7 @@ class DedupSpec extends SparkSpec {
   test("LSH banding surfaces exact and near dup pairs") {
     val sig = Dedup.minhashSignatures(docs, "doc_id", "text", 32, 5)
     val pairs = Dedup.lshCandidates(sig, "doc_id", bands = 8)
-      .as[(Long, Long)].collect().toSet
+      .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(pairs.contains((0L, 1L)))
     assert(pairs.contains((0L, 2L)) || pairs.contains((1L, 2L)))
   }
@@ -96,7 +96,7 @@ class DedupSpec extends SparkSpec {
     val df = flood.toDF("doc_id", "text")
     val sig = Dedup.minhashSignatures(df, "doc_id", "text", 32, 5)
     val pairs = Dedup.lshCandidates(sig, "doc_id", bands = 8)
-      .as[(Long, Long)].collect().toSet
+      .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1000L, 1001L)))
     assert(!pairs.exists(p => p._1 < 1000L && p._2 < 1000L))
 
@@ -129,9 +129,10 @@ class DedupSpec extends SparkSpec {
   test("hot-bucket cap is inert when no bucket exceeds the threshold") {
     val sig = Dedup.minhashSignatures(docs, "doc_id", "text", 32, 5)
     val capped = Dedup.lshCandidates(sig, "doc_id", 8, maxBucket = 500)
-      .as[(Long, Long)].collect().toSet
+      .select("id1", "id2").as[(Long, Long)].collect().toSet
     val uncapped = Dedup.lshCandidates(sig, "doc_id", 8,
-      maxBucket = Int.MaxValue).as[(Long, Long)].collect().toSet
+      maxBucket = Int.MaxValue).select("id1", "id2")
+      .as[(Long, Long)].collect().toSet
     assert(capped == uncapped)
   }
 
@@ -139,14 +140,14 @@ class DedupSpec extends SparkSpec {
 
   private def longPairs: Set[(Long, Long)] = Dedup.lshCandidates(
     Dedup.minhashSignatures(docs, "doc_id", "text", 32, 5), "doc_id", 8)
-    .as[(Long, Long)].collect().toSet
+    .select("id1", "id2").as[(Long, Long)].collect().toSet
 
   test("string doc ids flow through lshCandidates with the exact pair set") {
     val sdocs = docs.selectExpr("concat('doc-', doc_id) as doc_id", "text")
     val sig = Dedup.minhashSignatures(sdocs, "doc_id", "text", 32, 5)
     val pairs = Dedup.lshCandidates(sig, "doc_id", bands = 8)
     assert(pairs.schema("id1").dataType.typeName == "string")
-    assert(pairs.as[(String, String)].collect().toSet ==
+    assert(pairs.select("id1", "id2").as[(String, String)].collect().toSet ==
       longPairs.map { case (a, b) => (s"doc-$a", s"doc-$b") })
   }
 
@@ -155,7 +156,7 @@ class DedupSpec extends SparkSpec {
     val sig = Dedup.minhashSignatures(idocs, "doc_id", "text", 32, 5)
     val pairs = Dedup.lshCandidates(sig, "doc_id", bands = 8)
     assert(pairs.schema("id1").dataType.typeName == "integer")
-    assert(pairs.as[(Int, Int)].collect().toSet ==
+    assert(pairs.select("id1", "id2").as[(Int, Int)].collect().toSet ==
       longPairs.map { case (a, b) => (a.toInt, b.toInt) })
   }
 
@@ -191,7 +192,7 @@ class DedupSpec extends SparkSpec {
     val two = Seq(("z-doc", longA), ("a-doc", longA)).toDF("doc_id", "text")
     val pairs = Dedup.lshCandidates(
         Dedup.minhashSignatures(two, "doc_id", "text", 32, 5), "doc_id", 8)
-      .as[(String, String)].collect().toSet
+      .select("id1", "id2").as[(String, String)].collect().toSet
     assert(pairs == Set(("a-doc", "z-doc")))
   }
 
@@ -201,7 +202,7 @@ class DedupSpec extends SparkSpec {
     val dup = Seq(("x", longA), ("x", longA), ("y", longB)).toDF("doc_id", "text")
     val pairs = Dedup.lshCandidates(
         Dedup.minhashSignatures(dup, "doc_id", "text", 32, 5), "doc_id", 8)
-      .as[(String, String)].collect().toSet
+      .select("id1", "id2").as[(String, String)].collect().toSet
     assert(!pairs.contains(("x", "x")))
   }
 

@@ -1,12 +1,13 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.similarity.Similarity
 
 /** Pins the fused `lsh_bucket` Expression to the composable
-  * HOF formulation it replaces (`Similarity.hyperplaneBucketComposable`):
+  * HOF formulation it replaces (`hyperplaneBucketComposable` below):
   * bucket values must be bit-identical — same xxhash64 fold for the plane
   * weights, same double accumulation order — on the real embeddings
   * corpus AND on adversarial vectors (empty, single-element, negative,
@@ -18,12 +19,35 @@ class LshBucketSpec extends SparkSpec {
 
   private lazy val emb = graft.Tables(spark, sf, "embeddings")
 
+  /** Deterministic pseudo-random hyperplane weight for (plane, component):
+    * xxhash64-derived uniform in [-1, 1].
+    */
+  private def planeWeight(seed: Long, p: Column, j: Column): Column =
+    (pmod(xxhash64(lit(seed), p, j), lit(2000001L)) - 1000000L) / 1000000.0
+
+  /** LSH bucket key via composable built-ins: `nPlanes` sign bits of
+    * hyperplane projections. Reference semantics only — production paths
+    * go through the fused codegen `lsh_bucket` Expression
+    * (graft.functions.LshBucket), which computes bit-identical buckets
+    * without the per-element higher-order-function dispatch this form
+    * pays nPlanes times per row.
+    */
+  private def hyperplaneBucketComposable(
+      vec: Column, nPlanes: Int, seed: Long = 42L): Column =
+    (0 until nPlanes).map { p =>
+      val proj = aggregate(
+        zip_with(vec, sequence(lit(0), size(vec) - 1),
+          (v, j) => v.cast("double") * planeWeight(seed, lit(p), j)),
+        lit(0.0), (acc, v) => acc + v)
+      when(proj > 0, lit(1L << p)).otherwise(lit(0L))
+    }.reduce((a, b) => a.bitwiseOR(b))
+
   test("expression == composable HOF buckets on the embeddings corpus") {
     for ((nPlanes, seed) <- Seq((8, 42L), (12, 42L), (32, 42L), (8, 7L))) {
       val mismatch = emb
         .select(
           LshBuckets.lshBucket(col("embedding"), nPlanes, seed).as("fused"),
-          Similarity.hyperplaneBucketComposable(col("embedding"), nPlanes, seed)
+          hyperplaneBucketComposable(col("embedding"), nPlanes, seed)
             .as("composable"))
         .filter(col("fused") =!= col("composable"))
         .count()
@@ -39,7 +63,7 @@ class LshBucketSpec extends SparkSpec {
     val mismatch = edges.toDF("v")
       .select(
         LshBuckets.lshBucket(col("v"), 16, 42L).as("fused"),
-        Similarity.hyperplaneBucketComposable(col("v"), 16, 42L)
+        hyperplaneBucketComposable(col("v"), 16, 42L)
           .as("composable"))
       .filter(col("fused") =!= col("composable"))
       .count()
@@ -53,7 +77,7 @@ class LshBucketSpec extends SparkSpec {
     val mismatch = vecs.toDF("v")
       .select(
         LshBuckets.lshBucket(col("v"), 12, 42L).as("fused"),
-        Similarity.hyperplaneBucketComposable(col("v"), 12, 42L)
+        hyperplaneBucketComposable(col("v"), 12, 42L)
           .as("composable"))
       .filter(col("fused") =!= col("composable"))
       .count()

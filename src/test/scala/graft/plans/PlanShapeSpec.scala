@@ -21,6 +21,14 @@ class PlanShapeSpec extends SparkSpec {
       .findAllIn(df.queryExecution.executedPlan.toString).size
   }
 
+  /** No join node anywhere in the executed plan: a candidate stage
+    * verifies in the bucket, never by joining signatures or vectors back.
+    */
+  private def assertNoJoin(df: DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("Join"), s"expected no join:\n$plan")
+  }
+
   private lazy val docs = graft.Tables(spark, sf, "documents")
 
   test("minhashSignatures is a pure map: zero exchanges") {
@@ -44,6 +52,47 @@ class PlanShapeSpec extends SparkSpec {
     val sh = Dedup.simhash(docs, "doc_id", "text").localCheckpoint()
     val n = exchanges(Dedup.simhashCandidates(sh, "doc_id"))
     assert(n <= 2, s"expected <=2 exchanges, got $n")
+  }
+
+  test("embeddingNearDups: one bucket-gather exchange plus the distinct") {
+    val bucketed = graft.similarity.Similarity.withBuckets(
+        graft.Tables(spark, sf, "embeddings").select("vec_id", "embedding"),
+        "embedding", nPlanes = 32)
+      .localCheckpoint()
+    val pairs = Dedup.embeddingNearDups(bucketed, "vec_id", "embedding")
+    val n = exchanges(pairs)
+    assert(n <= 2, s"expected <=2 exchanges, got $n")
+    assertNoJoin(pairs)
+  }
+
+  test("string-id lsh and simhash candidates join nothing back") {
+    val sdocs = docs.select(concat(lit("d"), col("doc_id")).as("doc_id"),
+      col("text"))
+    val sig = Dedup.minhashSignatures(sdocs, "doc_id", "text").localCheckpoint()
+    val sh = Dedup.simhash(sdocs, "doc_id", "text").localCheckpoint()
+    for (pairs <- Seq(Dedup.lshCandidates(sig, "doc_id", bands = 8),
+                      Dedup.simhashCandidates(sh, "doc_id"))) {
+      val n = exchanges(pairs)
+      assert(n <= 2, s"expected <=2 exchanges, got $n")
+      assertNoJoin(pairs)
+    }
+  }
+
+  test("a string-id lshCandidates frame builds without a job") {
+    val sig = Dedup.minhashSignatures(
+      docs.select(concat(lit("d"), col("doc_id")).as("doc_id"), col("text")),
+      "doc_id", "text")
+    assert(jobsDuring(Dedup.lshCandidates(sig, "doc_id", bands = 8)) == 0)
+  }
+
+  test("lshCandidates over unmaterialized signatures runs minhash_sig once") {
+    // the band keys and the gathered payload both read the one `sig`
+    // column; CollapseProject must not inline minhash_sig into both
+    val pairs = Dedup.lshCandidates(
+      Dedup.minhashSignatures(docs, "doc_id", "text"), "doc_id", bands = 8)
+    pairs.count()
+    val plan = pairs.queryExecution.executedPlan.toString
+    assert("minhash_sig\\(".r.findAllIn(plan).size == 1, plan)
   }
 
   test("shingle fingerprint is a pure map: zero exchanges") {
